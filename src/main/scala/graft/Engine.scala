@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{coalesce, col, lit, when}
 import graft.catalog.Catalog
 import graft.exec.Compiler
 import graft.sqlfront.{Ast, Parser}
@@ -67,14 +68,12 @@ class Engine(val spark: SparkSession) {
       // implemented here (SURVEY §2.4)
       Inserted(catalog.insertSelect(table, compiler.compileSelect(sel)))
     case Ast.Update(table, sets, where) =>
-      // UPDATE via rewrite: matching rows get the SET expressions, the
-      // rest pass through. Beyond-reference DML (SURVEY §2.4).
-      import org.apache.spark.sql.functions.{col, lit, when}
+      // Beyond-reference DML (SURVEY §2.4): one pass over the table in
+      // which matching rows get the SET expressions and the rest pass
+      // through; the trailing flag gives the matched count.
       val t = table.toLowerCase
       val df = catalog.table(t).alias(t)
-      val cond = where.map(compiler.compilePredicateOnTable(t, df, _))
-        .getOrElse(lit(true))
-      val matched = df.filter(cond).count()
+      val matched = matchedFlag(t, df, where)
       val setMap = sets.map { case (c, e) =>
         c.toLowerCase -> compiler.compileOnTable(t, df, e)
       }.toMap
@@ -84,25 +83,24 @@ class Engine(val spark: SparkSession) {
           throw new IllegalArgumentException(
             s"column '$c' does not exist in table '$t'")
       }
-      val rewritten = df.select(schema.fields.map { f =>
+      val rewritten = schema.fields.map { f =>
         setMap.get(f.name) match {
           case Some(v) =>
-            when(cond, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
+            when(matched, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
           case None => col(f.name)
         }
-      }.toIndexedSeq: _*)
-      catalog.replaceRows(t, rewritten)
-      Updated(matched)
+      }
+      Updated(catalog.rewriteRows(t,
+        df.select((rewritten :+ matched.as("__matched")).toIndexedSeq: _*),
+        dropMatched = false))
     case Ast.Delete(table, where) =>
-      import org.apache.spark.sql.functions.{lit, not, coalesce}
       val t = table.toLowerCase
       val df = catalog.table(t).alias(t)
-      val cond = where.map(compiler.compilePredicateOnTable(t, df, _))
-        .getOrElse(lit(true))
-      val matched = df.filter(cond).count()
-      // keep rows where the predicate is NOT true (false or NULL)
-      catalog.replaceRows(t, df.filter(not(coalesce(cond, lit(false)))))
-      Deleted(matched)
+      val kept = catalog.schemaOf(t).fieldNames.map(col)
+      val matched = matchedFlag(t, df, where).as("__matched")
+      Deleted(catalog.rewriteRows(t,
+        df.select((kept :+ matched).toIndexedSeq: _*),
+        dropMatched = true))
     case Ast.Explain(s) =>
       val logical = graft.explain.Explain.render(s,
         n => scala.util.Try(catalog.schemaOf(n).fieldNames.toSeq).toOption)
@@ -111,6 +109,14 @@ class Engine(val spark: SparkSession) {
           org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
       Explained(logical + "\n-- spark physical plan --\n" + physical)
   }
+
+  /** The DML matched flag: the WHERE predicate with NULL read as false
+    * (a row whose predicate is NULL is neither counted nor changed);
+    * no WHERE matches every row. */
+  private def matchedFlag(t: String, df: DataFrame,
+                          where: Option[Ast.Expr]): Column =
+    coalesce(where.map(compiler.compilePredicateOnTable(t, df, _))
+      .getOrElse(lit(true)), lit(false))
 
   /** SELECT straight to a DataFrame (errors on non-SELECT). */
   def sql(text: String): DataFrame = execute(text) match {

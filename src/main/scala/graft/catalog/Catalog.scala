@@ -18,6 +18,11 @@ import graft.types.TypeMapper
   * §3.2): opt-in nullability (NULL constraint), NULL-into-NOT-NULL is an
   * error, missing INSERT columns take type defaults, NaN is rejected
   * (f64nonan.rs), identifiers are lowercased.
+  *
+  * UPDATE / DELETE run only on managed tables, through [[rewriteRows]]:
+  * one collected projection carries the rewritten rows and a matched
+  * flag per row, so a statement over a buffered table starts no Spark
+  * job and the matched count comes from the same pass.
   */
 class Catalog(spark: SparkSession) {
 
@@ -137,27 +142,40 @@ class Catalog(spark: SparkSession) {
     rows.length.toLong
   }
 
-  /** Replace a managed table's contents with the given frame (UPDATE /
-    * DELETE rewrite path — beyond-reference DML, SURVEY §2.4). Managed
-    * tables are driver-sized by definition, so collecting the rewritten
-    * rows back into the buffer is bounded. */
-  def replaceRows(name: String, df: DataFrame): Unit = {
+  /** UPDATE / DELETE on a managed table (beyond-reference DML, SURVEY
+    * §2.4) as one pass: `df` is the table's rows, rewritten by the
+    * statement, each followed by a boolean "matched" flag. The rows are
+    * collected once; every row is kept for UPDATE (`dropMatched =
+    * false`), only the unflagged rows for DELETE. Over a buffered table
+    * the frame is a projection of a local relation, which the optimizer
+    * evaluates on the driver, so the statement starts no Spark job; a
+    * table with INSERT..SELECT branches takes one collect job. A kept
+    * NULL in a NOT NULL column fails the statement before anything is
+    * installed, so the table is unchanged. Returns the matched count. */
+  def rewriteRows(name: String, df: DataFrame, dropMatched: Boolean): Long = {
     val n = name.toLowerCase
     val m = managed.getOrElse(n,
       throw CatalogError(s"table '$n' is not a managed table (DML target)"))
-    val newRows = df.select(m.schema.fieldNames.map(
-      org.apache.spark.sql.functions.col).toIndexedSeq: _*).collect()
-    newRows.foreach { r =>
-      m.schema.fields.zipWithIndex.foreach { case (f, i) =>
-        if (!f.nullable && r.isNullAt(i))
-          throw CatalogError(
-            s"cannot store NULL into non-nullable column '${f.name}'")
+    val width = m.schema.length
+    val newRows = scala.collection.mutable.ArrayBuffer[Row]()
+    var matched = 0L
+    df.collect().foreach { r =>
+      val hit = r.getBoolean(width)
+      if (hit) matched += 1
+      if (!(hit && dropMatched)) {
+        m.schema.fields.zipWithIndex.foreach { case (f, i) =>
+          if (!f.nullable && r.isNullAt(i))
+            throw CatalogError(
+              s"cannot store NULL into non-nullable column '${f.name}'")
+        }
+        newRows += Row.fromSeq(r.toSeq.take(width))
       }
     }
     m.rows.clear()
     m.rows ++= newRows
     m.extra = None
     m.invalidate()
+    matched
   }
 
   /** INSERT INTO ... SELECT: append a DataFrame (schema aligned by

@@ -1209,11 +1209,19 @@ object Dedup {
     // (dst → src), both directions: "dst's label is a candidate for src"
     val edges = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
       .partitionBy(part).persist(mem)
+    // every persisted RDD (edges, the seed labels, each `next`) registers
+    // for the clearMemos drain BEFORE any job runs on it, so neither an
+    // unconverged exit nor a failed job mid-iteration can strand a
+    // persisted-but-unregistered RDD (the PageRank.dupPagerank pattern);
+    // the final labels back the returned frame and stay persisted until
+    // that drain, and a second unpersist from it is a no-op
+    persistedLabelRdds.add(edges)
     edges.count() // materialize once; the deep pair plan compiles here only
     // every node appears as a dst (edges are symmetric), so the edge keys
     // enumerate the nodes; one map-side-combined reduce seeds label = id
     var labels = edges.map { case (dst, _) => (dst, dst) }
       .reduceByKey(part, math.min(_: Long, _: Long)).persist(mem)
+    persistedLabelRdds.add(labels)
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
@@ -1224,6 +1232,7 @@ object Dedup {
         .union(labels)
         .reduceByKey(part, math.min(_: Long, _: Long))
         .persist(mem)
+      persistedLabelRdds.add(next)
       // iteration 1 always changes something on any non-trivial edge set —
       // skip its convergence probe (one fewer Spark job per call)
       val changed =
@@ -1244,13 +1253,6 @@ object Dedup {
       throw new IllegalStateException(
         s"clusterLabels did not converge within $maxIter iterations — " +
         "a duplicate chain longer than maxIter exists; raise maxIter")
-    // the FINAL labels RDD backs the returned frame and stays persisted
-    // for its consumers (labelsCache) — register it for the clearMemos
-    // drain (the PageRank.persistedEdgeRdds pattern) instead of relying
-    // on callers sweeping getPersistentRDDs: probes/specs that clear
-    // Dedup without that sweep would otherwise leak one persisted
-    // labels RDD per cold pass
-    persistedLabelRdds.add(labels)
     spark.createDataFrame(labels.map { case (idNode, label) =>
       org.apache.spark.sql.Row(idNode, label) },
       org.apache.spark.sql.types.StructType(Seq(
@@ -2141,23 +2143,6 @@ object Dedup {
        |  CAST(max(CASE WHEN rk = 1 THEN doc_id END) AS BIGINT) AS keep_id,
        |  CAST(max(n_tokens) AS BIGINT) AS best_tokens
        |FROM j GROUP BY 1""".stripMargin
-
-  /** Sign-LSH-bucketed variant of the same operator (the path when no
-    * coarse cells exist): candidates share a random-hyperplane bucket. */
-  def embeddingNearDupLsh(spark: SparkSession, dir: String,
-                          threshold: Double = 0.3): DataFrame = {
-    val b = Similarity.withBuckets(
-        Tables.load(spark, dir, "embeddings"), col("embedding"))
-      .select(col("vec_id"), col("bucket"),
-              Similarity.l2normalize(col("embedding")).as("nemb"))
-    b.as("l").join(b.as("r"),
-        col("l.bucket") === col("r.bucket") &&
-        col("l.vec_id") < col("r.vec_id"))
-      .withColumn("cos", Similarity.dot(col("l.nemb"), col("r.nemb")))
-      .filter(col("cos") >= threshold)
-      .select(col("l.vec_id").as("a_id"), col("r.vec_id").as("b_id"),
-              col("cos"))
-  }
 
   /** Cross-source near-duplicate overlap matrix: fold any (a_id, b_id)
     * pair set down to per-source-pair counts — the mixture-hygiene audit

@@ -114,6 +114,8 @@ object Selection {
     docWeightsCachedGen(spark, dir, dim, s"lang:$targetLang",
       col("lang") === targetLang, heldOut = false)
 
+  /** Memoized [[docWeights]] per (session, dir, dim, modelId); the same
+    * `isTarget` contract holds: only `lang` and `source` may appear. */
   private def docWeightsCachedGen(spark: SparkSession, dir: String,
                                   dim: Int, modelId: String,
                                   isTarget: Column,
@@ -176,7 +178,10 @@ object Selection {
   /** The shared DSIR scoring stage: (doc_id, n_feats, logw @4dp),
     * plus the inner persisted feature frame for lifecycle control.
     *
-    * `isTarget` marks the target-corpus rows; `heldOut` selects the
+    * `isTarget` marks the target-corpus rows. It is evaluated over the
+    * memoized (doc_id, lang, source, b, c) feature-count table, not the
+    * documents table, so it may reference only `lang` and `source`; any
+    * other document column fails at analysis time. `heldOut` selects the
     * formulation: false = the paper's pool-as-proposal variant (raw
     * model over ALL docs, every doc scored — q197/q199); true = the
     * paper's primary two-corpus setup (raw model over the NON-target

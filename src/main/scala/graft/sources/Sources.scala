@@ -124,15 +124,6 @@ object Sources {
       |SELECT t.fmt, s.n_rows, s.sum_key, s.sum_md5
       |FROM s, (VALUES ('csv'), ('jsonl'), ('orc')) t(fmt)""".stripMargin
 
-  /** Whole-text documents: one row per file (doc_id = file path). For
-    * corpus ingestion where documents arrive as individual files. */
-  def readTextCorpus(spark: SparkSession, path: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    spark.read.option("wholetext", "true").text(path)
-      .withColumn("doc_id", input_file_name())
-      .select(col("doc_id"), col("value").as("text"))
-  }
-
   /** Hive-partitioned write: `partitionBy` columns become directory keys,
     * so predicates on them prune entire directories at read time. Keep
     * partition cardinality bounded (date/hour/source — never a high-
@@ -272,10 +263,6 @@ object Sources {
     * parsing is the same single pass as strict parsing. */
   private val corruptFeedWritten =
     scala.collection.mutable.Set.empty[(SparkSession, String)]
-
-  /** Drop the corrupt-feed write memo (fixture-freshness hook — see
-    * PartitionedLayout.clearLayoutMemos). */
-  def clearFeedMemo(): Unit = synchronized { corruptFeedWritten.clear() }
 
   def corruptIngestGate(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._

@@ -658,7 +658,7 @@ object Streams {
     * advance the watermark to max(ts) − delay; the emitted set is every
     * session with `end < max(ts) − delay`, and the oracle applies the
     * same cutoff to the batch gaps-and-islands answer (same pattern as
-    * [[dedupHourlyAvailableNow]]'s oracle). */
+    * the q96 hourly-rollup oracle). */
   def sessionWindowAvailableNow(spark: SparkSession, dir: String,
                                 watermark: String = "2 hours",
                                 maxFilesPerTrigger: Option[Int] = None,
@@ -697,17 +697,6 @@ object Streams {
        |GROUP BY user_id, sid
        |HAVING max(ts) + INTERVAL 30 MINUTE
        |       < (SELECT max(ts) - INTERVAL $watermarkHours HOUR FROM events)""".stripMargin
-
-  /** Oracle for [[dedupHourlyAvailableNow]]: the batch hourly rollup,
-    * restricted to the windows append mode has emitted (end at or
-    * before the final watermark). */
-  def dedupHourlyOracleSql(watermarkHours: Int = 2): String =
-    s"""SELECT date_trunc('hour', ts) AS h, event_type,
-       |  count(*) AS n, round(sum(value), 2) AS sum_value
-       |FROM events
-       |WHERE date_trunc('hour', ts) + INTERVAL 1 HOUR
-       |      <= (SELECT max(ts) - INTERVAL $watermarkHours HOUR FROM events)
-       |GROUP BY 1, 2""".stripMargin
 
   /** Bounded gate run of the streaming dedup: the events stream unioned
     * with itself simulates an at-least-once source redelivering every

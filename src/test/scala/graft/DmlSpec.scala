@@ -5,6 +5,40 @@ package graft
   * capability parity means executing them). */
 class DmlSpec extends SparkSpec {
 
+  /** Runs `body` and returns its result with the number of Spark jobs it
+    * started. Jobs are tagged with a job group; a sentinel job in a
+    * second group, waited for on the same listener, proves every earlier
+    * job-start event has been delivered before the count is read. */
+  private def countingJobs[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"dml-${java.util.UUID.randomUUID()}"
+    val sentinel = group + "-sentinel"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p =>
+          Option(p.getProperty("spark.jobGroup.id"))).foreach(seen.add)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "DmlSpec job count")
+      val out = try body finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "DmlSpec sentinel")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!seen.contains(sentinel) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(sentinel), "sentinel job start never delivered")
+      (out, seen.toArray.count(_ == group))
+    } finally sc.removeSparkListener(listener)
+  }
+
+  private def idQty(eng: Engine, table: String): Seq[(Long, Long)] =
+    eng.sql(s"SELECT id, qty FROM $table ORDER BY id").collect()
+      .map(x => (x.getAs[Number](0).longValue, x.getAs[Number](1).longValue))
+      .toSeq
+
   private def freshEngine(): Engine = {
     val eng = new Engine(spark)
     eng.executeScript(
@@ -64,5 +98,61 @@ class DmlSpec extends SparkSpec {
     assert(eng.sql("SELECT DISTINCT qty FROM t WHERE qty = 10").count() == 1)
     assert(eng.sql("SELECT DISTINCT qty, name FROM t WHERE qty = 10").count() == 1)
     assert(eng.sql("SELECT DISTINCT id FROM t WHERE qty = 10").count() == 3)
+  }
+
+  test("UPDATE and DELETE on a buffered managed table start no Spark job") {
+    val eng = freshEngine()
+    val (u, uJobs) = countingJobs(
+      eng.execute("UPDATE t SET qty = qty + 1 WHERE id > 2"))
+    assert(u == eng.Updated(2) && uJobs == 0)
+    val (all, allJobs) = countingJobs(eng.execute("UPDATE t SET qty = 0"))
+    assert(all == eng.Updated(4) && allJobs == 0)
+    val (d, dJobs) = countingJobs(eng.execute("DELETE FROM t WHERE id = 1"))
+    assert(d == eng.Deleted(1) && dJobs == 0)
+    assert(idQty(eng, "t") == Seq((2L, 0L), (3L, 0L), (4L, 0L)))
+  }
+
+  test("UPDATE neither counts nor changes a row whose WHERE is NULL") {
+    val eng = freshEngine()
+    // name <> 'a' is NULL for id 3 (NULL name)
+    assert(eng.execute("UPDATE t SET qty = 99 WHERE name <> 'a'") ==
+      eng.Updated(2))
+    assert(idQty(eng, "t") == Seq((1L, 10L), (2L, 99L), (3L, 30L), (4L, 99L)))
+  }
+
+  test("UPDATE/DELETE on a table seeded by INSERT..SELECT: one collect job") {
+    val eng = freshEngine()
+    // a non-local source, so the INSERT..SELECT branch stays a Spark plan
+    eng.register("src", spark.range(1, 7).toDF("n"))
+    eng.executeScript(
+      """CREATE TABLE acct (id i64, qty i64, seg string null);
+        |INSERT INTO acct SELECT n, n * 100, NULL FROM src;""".stripMargin)
+    val (u, uJobs) = countingJobs(
+      eng.execute("UPDATE acct SET qty = qty * 2 + 5 WHERE id > 3"))
+    assert(u == eng.Updated(3) && uJobs == 1)
+    assert(idQty(eng, "acct") == Seq((1L, 100L), (2L, 200L), (3L, 300L),
+      (4L, 805L), (5L, 1005L), (6L, 1205L)))
+    eng.execute("INSERT INTO acct SELECT n + 10, n, 'x' FROM src WHERE n < 3")
+    val (d, dJobs) = countingJobs(
+      eng.execute("DELETE FROM acct WHERE id = 3 OR qty > 900"))
+    assert(d == eng.Deleted(3) && dJobs == 1)
+    assert(idQty(eng, "acct") == Seq((1L, 100L), (2L, 200L), (4L, 805L),
+      (11L, 1L), (12L, 2L)))
+    // the rewrite installed every row in the buffer: no job from here on
+    val (u2, u2Jobs) = countingJobs(
+      eng.execute("UPDATE acct SET seg = 'low' WHERE qty < 300"))
+    assert(u2 == eng.Updated(4) && u2Jobs == 0)
+  }
+
+  test("the UPDATE count equals the number of rows the pass rewrote") {
+    val eng = freshEngine()
+    val before = idQty(eng, "t").toMap
+    // the SET changes the very column the predicate reads: the count and
+    // the rewrite must both see the old value
+    val r = eng.execute("UPDATE t SET qty = qty * 2 WHERE qty >= 20")
+    val after = idQty(eng, "t").toMap
+    val rewritten = before.keys.count(k => before(k) != after(k))
+    assert(r == eng.Updated(rewritten.toLong) && rewritten == 3)
+    assert(after == Map(1L -> 10L, 2L -> 40L, 3L -> 60L, 4L -> 80L))
   }
 }

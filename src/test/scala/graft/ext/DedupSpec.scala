@@ -383,6 +383,20 @@ class DedupSpec extends SparkSpec {
     assert((20L to 22L).forall(labels(_) == 20L))
   }
 
+  test("clusterLabels: an unconverged run leaves nothing persisted after clearMemos") {
+    import spark.implicits._
+    val sc = spark.sparkContext
+    Dedup.clearMemos()
+    val before = sc.getPersistentRDDs.size
+    // a 6-node chain needs more than one iteration: maxIter = 1 throws
+    val chain = (1L to 5L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    intercept[IllegalStateException] {
+      Dedup.clusterLabels(chain, maxIter = 1)
+    }
+    Dedup.clearMemos()
+    assert(sc.getPersistentRDDs.size == before)
+  }
+
   test("dedupedCorpus keeps one survivor per cluster plus all unpaired docs") {
     val pairs = Dedup.minhashLsh(spark, sfDir)
       .select(col("a_id"), col("b_id")).cache()
