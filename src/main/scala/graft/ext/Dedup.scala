@@ -2144,20 +2144,6 @@ object Dedup {
        |  CAST(max(n_tokens) AS BIGINT) AS best_tokens
        |FROM j GROUP BY 1""".stripMargin
 
-  /** Cross-source near-duplicate overlap matrix: fold any (a_id, b_id)
-    * pair set down to per-source-pair counts — the mixture-hygiene audit
-    * ("how much of src A re-appears in src B") a pipeline logs before
-    * weighting sources. Source pairs are canonicalized (lexicographic
-    * lo/hi) so each unordered pair counts once; the diagonal rows are
-    * the within-source duplicate mass.
-    *
-    * Deliberately NOT a driver gate: with an exact all-source pair set
-    * this corpus is output-bound (≈24 % of ALL pairs qualify at 0.8 —
-    * 31-word vocabulary), so the gate would bench-charge data pathology,
-    * not the operator; feed it [[minhashLshCached]] pairs (global LSH —
-    * cross-source candidates included, sub-quadratic) instead. Cost on
-    * top of the pair set: two doc_id-keyed joins against the (doc_id,
-    * source) projection + one small aggregate. */
   // ---- DuckDB oracles for the md5-based minhash/simhash gates --------
 
   /** Shared SQL fragment: normalized word list per doc (mirrors
@@ -2292,6 +2278,20 @@ object Dedup {
        |      <= $maxHam""".stripMargin
   }
 
+  /** Cross-source near-duplicate overlap matrix: fold any (a_id, b_id)
+    * pair set down to per-source-pair counts — the mixture-hygiene audit
+    * ("how much of src A re-appears in src B") a pipeline logs before
+    * weighting sources. Source pairs are canonicalized (lexicographic
+    * lo/hi) so each unordered pair counts once; the diagonal rows are
+    * the within-source duplicate mass.
+    *
+    * Deliberately NOT a driver gate: with an exact all-source pair set
+    * this corpus is output-bound (≈24 % of ALL pairs qualify at 0.8 —
+    * 31-word vocabulary), so the gate would bench-charge data pathology,
+    * not the operator; feed it [[minhashLshCached]] pairs (global LSH —
+    * cross-source candidates included, sub-quadratic) instead. Cost on
+    * top of the pair set: two doc_id-keyed joins against the (doc_id,
+    * source) projection + one small aggregate. */
   def sourceOverlap(pairs: DataFrame, documents: DataFrame): DataFrame = {
     val src = documents.select(col("doc_id"), col("source"))
     pairs

@@ -14,8 +14,9 @@ import graft.Tables
   *     no corpus self-join. Correct at any corpus size; cost linear in
   *     |corpus| x |queries|.
   *   - sign-LSH (random hyperplanes) bucketing: the scale path. Corpus
-  *     bucketed once by sign pattern; queries probe only their bucket.
-  *     Shuffle keyed on bucket id; recall tuned by plane count.
+  *     bucketed once by sign pattern in several hash tables; queries
+  *     probe their bucket and its Hamming-1 neighbours in each table.
+  *     Shuffle keyed on bucket id; recall tuned by table and plane count.
   *
   * Cosine is a sequential left-to-right double accumulation (codegen'd
   * VectorOps kernel) — deterministic across runs. Oracle comparisons use
@@ -276,30 +277,6 @@ object Similarity {
        |   AND e.label != q.label) t
        |WHERE rnk <= $k""".stripMargin
 
-  // ---- sign-LSH (random hyperplane) bucketing -----------------------
-
-  /** Fixed random hyperplanes (deterministic seed): NumPlanes x dim
-    * coefficients. 8 planes → 256 buckets; tune for corpus size (at
-    * 100 TB, more planes + multi-probe). */
-  private val NumPlanes = 8
-  private val Dim = 64
-  private[ext] val planes: Array[Array[Double]] = {
-    val rnd = new scala.util.Random(7)
-    Array.fill(NumPlanes, Dim)(rnd.nextGaussian())
-  }
-
-  /** Bucket id = sign pattern of the vector against the hyperplanes.
-    * Pure expression work (no UDF): codegen'd dot products against
-    * array literals. */
-  def withBuckets(df: DataFrame, emb: Column): DataFrame = {
-    val bits = planes.zipWithIndex.map { case (p, i) =>
-      val planeArr = typedlit(p)
-      val d = dot(emb, planeArr)
-      when(d >= 0, lit(1L << i)).otherwise(lit(0L))
-    }
-    df.withColumn("bucket", bits.reduce(_ + _))
-  }
-
   // ---- multi-table LSH with 1-bit multi-probe -----------------------
   //
   // A single 8-plane table collapses recall (most queries find < k — or
@@ -319,6 +296,8 @@ object Similarity {
   // sim ≥0.85 → p≥0.82, per-table hit ≥0.9) the same structure prunes
   // aggressively — raise planes-per-table there to shrink buckets.
 
+  /** Width of the `embeddings` vectors. */
+  private val Dim = 64
   private val NumTables = 6
   private val PlanesPerTable = 4
   private[ext] val tablePlanes: Array[Array[Array[Double]]] = {

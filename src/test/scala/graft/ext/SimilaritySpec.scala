@@ -103,17 +103,6 @@ class SimilaritySpec extends SparkSpec {
     assert(recall >= 0.95, s"IVF recall $recall < 0.95")
   }
 
-  test("bucket assignment is deterministic") {
-    val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val b1 = Similarity.withBuckets(e, col("embedding"))
-      .select("vec_id", "bucket").orderBy("vec_id").limit(5)
-      .collect().map(_.toString).toSeq
-    val b2 = Similarity.withBuckets(e, col("embedding"))
-      .select("vec_id", "bucket").orderBy("vec_id").limit(5)
-      .collect().map(_.toString).toSeq
-    assert(b1 == b2)
-  }
-
   test("IVF cells: every vector lands in its argmax-dot centroid cell") {
     val e = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val cents = Similarity.centroids(e, 8)

@@ -12,12 +12,12 @@ side that runs first alternates from pair to pair. Runs are untraced, so
 the figures are the end-to-end metrics `BENCHMARK.json` bounds.
 
 For every workload and end-to-end metric it prints both sides' medians and
-quartiles, the ratio of the medians, the per-seed change/parent ratios and
-the change's win count (ties count for neither side), then whether a gain
-claim holds: the change wins at least nine tenths of the pairs and the
-medians differ by more than the parent's interquartile distance. Exits 1
-if any run failed or reported `correct: false`. Run from the repository
-root.
+quartiles, the ratio of the medians, every run's value in seed order, the
+per-seed change/parent ratios and the change's win count (ties count for
+neither side), then whether a gain claim holds: the change wins at least
+nine tenths of the pairs and the medians differ by more than the parent's
+interquartile distance. Exits 1 if any run failed or reported
+`correct: false`. Run from the repository root.
 """
 import sys
 
@@ -97,6 +97,8 @@ def report(workload, spec, pairs):
         print(f"  parent median {pm:.4g}  quartiles [{pq1:.4g}, {pq3:.4g}]")
         print(f"  change median {cm:.4g}  quartiles [{cq1:.4g}, {cq3:.4g}]")
         print(f"  change/parent median ratio {cm / pm if pm else float('nan'):.3f}")
+        print("  parent runs     " + " ".join(f"{v:.4g}" for v in ps))
+        print("  change runs     " + " ".join(f"{v:.4g}" for v in cs))
         print("  per-seed ratios " + " ".join(f"{r:.3f}" for r in ratios))
         print(f"  change wins {wins}/{len(ps)} (ties {ties}); "
               f"gain claim {'holds' if claim else 'does not hold'}")
