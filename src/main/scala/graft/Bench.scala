@@ -78,13 +78,7 @@ object Bench {
       "q219_collapse_repeats", "q222_vocab_prune")
     val samples = (1 to reps).map { pass =>
       if (pass > 1) {
-        ext.Dedup.clearMemos()
-        ext.Similarity.clearMemos()
-        ext.Quantize.clearMemos()
-        ext.Winnow.clearMemos()
-        ext.PageRank.clearMemos()
-        ext.Selection.clearMemos()
-        ext.Pipeline.clearMemos()
+        ext.Memo.clearAll()
         // NOT Bucketing.clearWriteMemo(): the bucket layout's cost model
         // is write-once-amortize-forever, and the write is timed as its
         // own bucket_write_sec line item below — clearing it per pass

@@ -205,12 +205,12 @@ object Dedup {
     if (!collapseDecision.getOrElse(
           shouldCollapse(spark, dupFraction(docs, Nil)))) {
       val sh = shingledOf(docs)
-        .transform(TrackedPersist.persistTracked)
+        .transform(Memo.persist)
       verifiedLshPairs(spark, docs, sh, threshold)
     } else collapseExpand(docs, Nil, Seq("jaccard" -> lit(1.0)),
       intraQualifies = threshold <= 1.0, repDocs => {
         val shR = shingledOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .transform(Memo.persist)
         // groups whose docs are too short to shingle produce NO pairs
         // in the direct pipeline (they never enter sh) — shR's doc ids
         // are the eligible set
@@ -231,18 +231,17 @@ object Dedup {
     * `probeSampleFraction` is never served after the knob changes, and
     * a later full-scan read never inherits a sampled (downward-biased)
     * value. */
-  private[ext] val dupFracCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double, Long, String), Double]()
+  private[ext] val dupFracCache =
+    Memo.table[(String, Double, Long, String), Double]("dedup.dupFraction")
   private[graft] def dupFractionDir(spark: SparkSession, dir: String,
                                     extraKeys: Seq[String]): Double = {
-    sweepStopped(dupFracCache)(_._1)
     val scopeKey = extraKeys.mkString(",")
     val frac = effectiveSampleFrac(spark).getOrElse(1.0)
     // the exact-fallback threshold is part of the key: a probe taken
     // under one threshold (HLL-only vs exact path) must never be
     // served after the knob changes
     val thr = exactProbeThreshold(spark)
-    dupFracCache.get((spark, dir, frac, thr, scopeKey)).getOrElse {
+    dupFracCache.get(spark, (dir, frac, thr, scopeKey)).getOrElse {
       val docs = Tables.load(spark, dir, "documents")
       // the caller's scope is a hard requirement — failing loudly here
       // beats the NoSuchElementException a silent filter would produce
@@ -261,9 +260,9 @@ object Dedup {
       val scopes = (Seq(Seq.empty[String], Seq("source")) :+ extraKeys)
         .distinct.filter(_.forall(docs.columns.contains))
       dupFractions(spark, docs, scopes).foreach { case (sc, f) =>
-        dupFracCache.put((spark, dir, frac, thr, sc.mkString(",")), f)
+        dupFracCache.put(spark, (dir, frac, thr, sc.mkString(",")), f)
       }
-      dupFracCache((spark, dir, frac, thr, scopeKey))
+      dupFracCache.get(spark, (dir, frac, thr, scopeKey)).get
     }
   }
   private def dupFraction(docs: DataFrame, extraKeys: Seq[String]): Double =
@@ -416,7 +415,7 @@ object Dedup {
       .filter(joinKeys.map(col(_).isNotNull).reduce(_ && _))
       .withColumn("gid", min(col("doc_id")).over(w))
       .select(col("gid"), col("doc_id"))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     // a representative is a doc that IS its group's minimum
     val repDocs = docs.join(
       members.filter(col("gid") === col("doc_id"))
@@ -495,7 +494,7 @@ object Dedup {
     // one signature pass feeds BOTH the AMS estimate and the band join
     // (skinny frame: doc_id + 32 longs)
     val sig = signatures(sh)
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val cand = candidatePairsOfSig(sig)
     // Broadcast-vs-shuffle for the verify joins, decided from
     // ESTIMATES, not a post-hoc AQE rescue: candidate count from the
@@ -581,20 +580,20 @@ object Dedup {
       Seq("m" -> lit(32L), "est_cont" -> lit(1.0)),
       intraQualifies = true, repDocs => {
         val shR = shingledOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .transform(Memo.persist)
         (containmentEstimateOver(shR), shR.select(col("doc_id")))
       })
   }
 
   private def containmentEstimateOf(docs: DataFrame): DataFrame =
     containmentEstimateOver(shingledOf(docs)
-      .transform(TrackedPersist.persistTracked))
+      .transform(Memo.persist))
 
   private def containmentEstimateOver(sh: DataFrame): DataFrame = {
     // shared signature pass: the m-matching joins below AND the band
     // join inside candidatePairsOfSig read the same persisted frame
     val sig = signatures(sh)
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     candidatePairsOfSig(sig)
       .join(sig.select(col("doc_id").as("a_id"), col("sig").as("siga")),
             "a_id")
@@ -617,15 +616,13 @@ object Dedup {
     * computation + persist per (session, dir), drained by
     * [[clearMemos]], so repeated gate runs in a long-lived session
     * never accumulate dead shingle-table persists. */
-  private val containEstCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val containEstCache =
+    Memo.table[String, DataFrame]("dedup.containmentEstimate")
   def containmentEstimateCached(spark: SparkSession,
-                                dir: String): DataFrame = {
-    sweepStopped(containEstCache)(_._1)
-    containEstCache.getOrElseUpdate((spark, dir, 0.0),
+                                dir: String): DataFrame =
+    containEstCache.getOrElseUpdate(spark, dir)(
       materializedScoped(spark, dir, BandPathExpansion)(
         containmentEstimate(spark, dir)))
-  }
 
   // ---- data-derived shuffle sizing for the pair families -----------
   //
@@ -670,59 +667,19 @@ object Dedup {
     * persisting is the cluster-scale pattern (materialize the shared
     * stage), and it keeps `dedupedCorpus` from re-running the whole
     * shingle→signature→band pipeline the pair query already ran. */
-  private val pairsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val pairsCache =
+    Memo.table[(String, Double), DataFrame]("dedup.minhashPairs")
 
-  /** Drop memo entries whose session has been stopped — their cached
-    * blocks are already gone, and without the sweep a JVM that creates
-    * and stops many sessions (test suites, notebooks) would retain a
-    * DataFrame + session reference per stopped session forever. Swept
-    * lazily on every memo access; the maps hold a handful of entries. */
-  private def sweepStopped[K, V](
-      m: scala.collection.concurrent.TrieMap[K, V])
-      (session: K => SparkSession): Unit =
-    m.keys.foreach { k =>
-      if (session(k).sparkContext.isStopped) m.remove(k)
-    }
-
-  /** Drop every memoized pair table and its cached blocks (benchmark
-    * harness hook: lets a measurement pass start from the same no-cache
-    * state a fresh session would). */
-  def clearMemos(): Unit = {
-    (pairsCache.values ++ exactPairsCache.values ++ containCache.values ++
-      containEstCache.values).foreach { df =>
-        try df.unpersist(blocking = false) catch { case _: Throwable => () }
-      }
-    pairsCache.clear()
-    exactPairsCache.clear()
-    containCache.clear()
-    containEstCache.clear()
-    // label-prop result RDDs are registered in persistedLabelRdds by
-    // clusterLabels — drain them here so a cold pass drops the blocks
-    // even when the caller does not sweep getPersistentRDDs
-    var rdd = persistedLabelRdds.poll()
-    while (rdd != null) {
-      try rdd.unpersist(blocking = false) catch { case _: Throwable => () }
-      rdd = persistedLabelRdds.poll()
-    }
-    labelsCache.clear()
-    // dup-probe memo too: cold-run timings must include the probe
-    dupFracCache.clear()
-    // inner persists (shingle/signature/feature frames) — unpersisting
-    // the memoized frames above does NOT release these
-    TrackedPersist.clear()
-  }
+  /** Drop every operator memo and its cached blocks (benchmark harness
+    * hook: lets a measurement pass start from the same no-cache state a
+    * fresh session would). */
+  def clearMemos(): Unit = Memo.clearAll()
 
   def minhashLshCached(spark: SparkSession, dir: String,
-                       threshold: Double = 0.5): DataFrame = {
-    // keyed by the session too (reference identity): a DataFrame is bound
-    // to its session, so a memo hit from a different/stopped session
-    // would fail or reuse stale plans — each session builds its own entry
-    sweepStopped(pairsCache)(_._1)
-    pairsCache.getOrElseUpdate((spark, dir, threshold),
+                       threshold: Double = 0.5): DataFrame =
+    pairsCache.getOrElseUpdate(spark, (dir, threshold))(
       materializedScoped(spark, dir, BandPathExpansion)(
         minhashLsh(spark, dir, threshold)))
-  }
 
   // ---- SimHash ------------------------------------------------------
 
@@ -779,7 +736,7 @@ object Dedup {
         // one fingerprint pass, persisted, shared by the candidate join
         // and the eligibility set (same discipline as minhash's shR)
         val shS = simhashesOf(repDocs)
-          .transform(TrackedPersist.persistTracked)
+          .transform(Memo.persist)
         (simhashPairsOver(shS, maxHam, np),
          shS.filter(col("simhash").isNotNull).select(col("doc_id")))
       })
@@ -865,7 +822,7 @@ object Dedup {
               graft.functions.HashShingles.shingles(
                 split(TextAnalysis.normalized(col("text")), " "), 1).as("ws"))
       .withColumn("n", size(col("ws")))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val toks = docs.select(col("doc_id"), col("source"), col("n"),
                            explode(col("ws")).as("token"))
     val dfreq = toks.groupBy(col("token"))
@@ -943,7 +900,7 @@ object Dedup {
     // persisted: the budget sketch below plus BOTH sides of the
     // candidate self-join read it — three consumers of one
     // tokenize+window pass
-    val prefixes = prefixes0.transform(TrackedPersist.persistTracked)
+    val prefixes = prefixes0.transform(Memo.persist)
     val budget = configuredPairBudget(docs0.sparkSession)
     // Cheap SOUND pre-check before paying for the sketch. The sketch
     // estimate (and the join's real input) is PRE-distinct same-key
@@ -1117,15 +1074,13 @@ object Dedup {
       .select(col("a_id"), col("b_id"), col("cont"))
   }
 
-  private val containCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val containCache =
+    Memo.table[(String, Double), DataFrame]("dedup.containmentPairs")
   def containmentPairsCached(spark: SparkSession, dir: String,
-                             threshold: Double = 0.9): DataFrame = {
-    sweepStopped(containCache)(_._1)
-    containCache.getOrElseUpdate((spark, dir, threshold),
+                             threshold: Double = 0.9): DataFrame =
+    containCache.getOrElseUpdate(spark, (dir, threshold))(
       materializedScoped(spark, dir, TokenPathExpansion)(
         containmentPairs(spark, dir, threshold)))
-  }
 
   /** DuckDB oracle for [[containmentPairs]]: brute-force same-source
     * containment over the normalized word sets. */
@@ -1201,38 +1156,33 @@ object Dedup {
     // collects to the driver.
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val p = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val part = new org.apache.spark.HashPartitioner(
       math.max(4, sc.defaultParallelism / 4))
-    // (dst → src), both directions: "dst's label is a candidate for src"
-    val edges = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
-      .partitionBy(part).persist(mem)
-    // every persisted RDD (edges, the seed labels, each `next`) registers
-    // for the clearMemos drain BEFORE any job runs on it, so neither an
-    // unconverged exit nor a failed job mid-iteration can strand a
-    // persisted-but-unregistered RDD (the PageRank.dupPagerank pattern);
-    // the final labels back the returned frame and stay persisted until
-    // that drain, and a second unpersist from it is a no-op
-    persistedLabelRdds.add(edges)
+    // (dst → src), both directions: "dst's label is a candidate for src".
+    // Every persisted RDD (edges, the seed labels, each `next`) registers
+    // with Memo BEFORE any job runs on it, so neither an unconverged exit
+    // nor a failed job mid-iteration can strand a persisted-but-
+    // unregistered RDD (the PageRank.dupPagerank pattern); the final
+    // labels back the returned frame and stay persisted until
+    // Memo.clearAll, and a second unpersist from it is a no-op
+    val edges = Memo.persist(
+      p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }.partitionBy(part))
     edges.count() // materialize once; the deep pair plan compiles here only
     // every node appears as a dst (edges are symmetric), so the edge keys
     // enumerate the nodes; one map-side-combined reduce seeds label = id
-    var labels = edges.map { case (dst, _) => (dst, dst) }
-      .reduceByKey(part, math.min(_: Long, _: Long)).persist(mem)
-    persistedLabelRdds.add(labels)
+    var labels = Memo.persist(edges.map { case (dst, _) => (dst, dst) }
+      .reduceByKey(part, math.min(_: Long, _: Long)))
     var iter = 0
     var converged = false
     while (iter < maxIter && !converged) {
       // own label rides along via the union (no self-edges needed):
       // next(id) = min(label(id), min over neighbors' labels)
-      val next = edges.join(labels)
+      val next = Memo.persist(edges.join(labels)
         .map { case (_, (src, label)) => (src, label) }
         .union(labels)
-        .reduceByKey(part, math.min(_: Long, _: Long))
-        .persist(mem)
-      persistedLabelRdds.add(next)
+        .reduceByKey(part, math.min(_: Long, _: Long)))
       // iteration 1 always changes something on any non-trivial edge set —
       // skip its convergence probe (one fewer Spark job per call)
       val changed =
@@ -1269,21 +1219,13 @@ object Dedup {
     * one loop in every bench pass; now the first consumer runs it and
     * the rest read the persisted labels). Cleared with the other
     * family memos so cold runs still pay the loop exactly once. */
-  /** Label-prop result RDDs persisted by [[clusterLabels]], drained by
-    * [[clearMemos]] (the PageRank.persistedEdgeRdds pattern). */
-  private val persistedLabelRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
-
-  private val labelsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val labelsCache =
+    Memo.table[(String, Double), DataFrame]("dedup.clusterLabels")
   def clusterLabelsCached(spark: SparkSession, dir: String,
-                          threshold: Double = 0.8): DataFrame = {
-    sweepStopped(labelsCache)(_._1)
-    labelsCache.getOrElseUpdate((spark, dir, threshold),
+                          threshold: Double = 0.8): DataFrame =
+    labelsCache.getOrElseUpdate(spark, (dir, threshold))(
       clusterLabels(jaccardPairsCached(spark, dir, threshold)
         .select(col("a_id"), col("b_id"))))
-  }
 
   /** Cluster a pair set and keep the smallest doc_id of each cluster
     * plus every unpaired doc: the surviving doc_ids with their cluster
@@ -1308,33 +1250,30 @@ object Dedup {
   /** Per-(session, dir, threshold) memo of the EXACT prefix-filter pair
     * set (same pattern as [[minhashLshCached]]): the pair gate and the
     * deduped-corpus gate share one computation + persist. */
-  private val exactPairsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+  private val exactPairsCache =
+    Memo.table[(String, Double), DataFrame]("dedup.jaccardPairs")
   def jaccardPairsCached(spark: SparkSession, dir: String,
-                         threshold: Double = 0.5): DataFrame = {
-    sweepStopped(exactPairsCache)(_._1)
-    exactPairsCache.getOrElseUpdate((spark, dir, threshold), {
+                         threshold: Double = 0.5): DataFrame =
+    exactPairsCache.getOrElseUpdate(spark, (dir, threshold)) {
       // a cached set at a LOWER threshold is a strict superset (the
       // prefix filter only ever drops pairs BELOW its threshold), so a
       // higher-threshold request is one filter over the persisted
       // superset instead of a second candidate-generation scan — the
       // q92/q102 0.8-sets derive from the q28/q63 0.5-set for free.
       // (The reverse never holds: a lower threshold must recompute.)
-      val lower = exactPairsCache.keys
-        .filter { case (s, d, t) => s == spark && d == dir && t < threshold }
-        .toSeq.sortBy(_._3).lastOption
+      val lower = exactPairsCache.keys(spark)
+        .filter { case (d, t) => d == dir && t < threshold }
+        .sortBy(_._2).lastOption.flatMap(exactPairsCache.get(spark, _))
       lower match {
-        case Some(key) =>
+        case Some(superset) =>
           // one filter over the persisted superset: no exchange, so no
           // partition-sizing scope needed
-          exactPairsCache(key).filter(col("jac") >= threshold)
-            .transform(TrackedPersist.persistTracked)
+          superset.filter(col("jac") >= threshold).transform(Memo.persist)
         case None =>
           materializedScoped(spark, dir, TokenPathExpansion)(
             jaccardPairs(spark, dir, threshold))
       }
-    })
-  }
+    }
 
   /** Deduped corpus over the EXACT jaccard pair set (recall exactly 1,
     * unlike the minhash variant) — fully deterministic, so the whole
@@ -1477,7 +1416,7 @@ object Dedup {
               md5(TextAnalysis.normalized(col("text"))).as("fp"))
       .groupBy(col("fp"))
       .agg(count(lit(1)).as("n_docs"), min(col("doc_id")).as("min_id"))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     // representative shingles + signature — identical for every group
     // member, so one row carries the whole group's LSH geometry
     val repIdx = shingledOf(docs.join(
@@ -1510,7 +1449,7 @@ object Dedup {
     * shingles ⇒ identical band keys and jaccard. */
   private[graft] def probeNearDupIndex(index: DataFrame, batch: DataFrame,
                                        threshold: Double): DataFrame = {
-    val idx = index.transform(TrackedPersist.persistTracked)
+    val idx = index.transform(Memo.persist)
     // ONE normalize+md5 pass over the batch, shared by the rep
     // grouping and the final expansion join (it used to be recomputed
     // in the tail projection — a second full scan of the delta per
@@ -1520,7 +1459,7 @@ object Dedup {
     val bAll = batch
       .select(col("doc_id"),
               md5(TextAnalysis.normalized(col("text"))).as("bfp"))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val bKeyed = bAll.filter(col("bfp").isNotNull)
     val bReps = bKeyed.groupBy(col("bfp"))
       .agg(min(col("doc_id")).as("bmin"))
@@ -1531,7 +1470,7 @@ object Dedup {
       .select(col("bfp"), col("shingles").as("sb"),
         graft.functions.MinHashSig.minhashSig(
           col("shingles"), perms.map(_._1), perms.map(_._2)).as("bsig"))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     // band keys carry ONLY the fingerprint — the shingle arrays ride
     // the verify joins, keyed by fp, exactly as the direct pipeline
     // keeps them out of its band explode
@@ -1604,8 +1543,8 @@ object Dedup {
                                                 batch: DataFrame,
                                                 threshold: Double)
       : DataFrame = {
-    val shC = shingledOf(corpus).transform(TrackedPersist.persistTracked)
-    val shB = shingledOf(batch).transform(TrackedPersist.persistTracked)
+    val shC = shingledOf(corpus).transform(Memo.persist)
+    val shB = shingledOf(batch).transform(Memo.persist)
     def bandsOf(sh: DataFrame) = signatures(sh)
       .select(col("doc_id"), explode(bandStructs(col("sig"))).as("bk"))
     val cand = bandsOf(shB).as("l")
@@ -1686,7 +1625,7 @@ object Dedup {
     val (corpus, batch1, batch2) = corpusTwoBatches(spark, dir)
     val idx0 = nearDupIndexOf(corpus)
     val probe1 = probeNearDupIndex(idx0, batch1, threshold)
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val admitted = batch1.join(
       probe1.filter(col("novel") === 1L).select("doc_id"),
       Seq("doc_id"), "left_semi")
@@ -2334,7 +2273,7 @@ object Dedup {
                 split(TextAnalysis.normalized(col("text")), " "), n))
                 .as("gram"))
       .distinct()
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val sizes = grams.groupBy(col("source")).agg(count(lit(1)).as("sz"))
     grams.as("a")
       .join(grams.as("b"),

@@ -33,22 +33,9 @@ object PageRank {
   private val Scale = 1000000000L           // 1e9: rank fixed-point scale
   private val Base = 150000000L             // 0.15 · Scale
 
-  /** Every RDD persisted by an iteration loop (edges + the final rank
-    * table), so repeated calls in one JVM (bench passes, correctness
-    * run) can't accumulate dead cached blocks: the harness drains this
-    * between passes, same contract as Dedup.clearMemos. */
-  private val persistedEdgeRdds =
-    new java.util.concurrent.ConcurrentLinkedQueue[
-      org.apache.spark.rdd.RDD[_]]()
-
-  /** Unpersist every RDD persisted by prior dupPagerank calls. */
-  def clearMemos(): Unit = {
-    var rdd = persistedEdgeRdds.poll()
-    while (rdd != null) {
-      try rdd.unpersist(blocking = false) catch { case _: Throwable => () }
-      rdd = persistedEdgeRdds.poll()
-    }
-  }
+  /** Unpersist every RDD persisted by prior dupPagerank calls (and all
+    * other operator state: the drain is [[Memo.clearAll]]). */
+  def clearMemos(): Unit = Memo.clearAll()
 
   /** Integer PageRank over an undirected (a_id, b_id) pair set. Output:
     * (doc_id, rank) for every doc appearing in a pair.
@@ -69,7 +56,6 @@ object PageRank {
     require(iters >= 1, "need at least one iteration")
     val spark = pairs.sparkSession
     val sc = spark.sparkContext
-    val mem = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val p = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     val part = new org.apache.spark.HashPartitioner(
@@ -80,24 +66,22 @@ object PageRank {
     val bothDirs = p.flatMap { case (a, b) => Iterator((a, b), (b, a)) }
     val deg = bothDirs.mapValues(_ => 1L)
       .reduceByKey(part, _ + _)
-    val edges = bothDirs.partitionBy(part).join(deg)
-      .mapValues { case (dst, d) => (dst, d) }.persist(mem)
-    persistedEdgeRdds.add(edges)
+    // every persisted RDD (edges + each ranks generation) registers
+    // with Memo BEFORE any job runs on it, so repeated calls can't
+    // accumulate dead cached blocks and an exception mid-iteration can
+    // never strand a persisted-but-unregistered RDD (the in-loop
+    // unpersist of the predecessor still runs; a second unpersist from
+    // Memo.clearAll is a no-op)
+    val edges = Memo.persist(bothDirs.partitionBy(part).join(deg)
+      .mapValues { case (dst, d) => (dst, d) })
     edges.count() // materialize once; the pair plan compiles here only
-    var ranks = deg // rank₀ = Scale for every node (nodes = edge srcs)
-      .mapValues(_ => Scale).persist(mem)
-    // every ranks generation registers BEFORE the loop body runs, so an
-    // exception mid-iteration can never strand a persisted-but-
-    // unregistered RDD (the in-loop unpersist of the predecessor still
-    // runs; a second unpersist from the drain is a no-op)
-    persistedEdgeRdds.add(ranks)
+    // rank₀ = Scale for every node (nodes = edge srcs)
+    var ranks = Memo.persist(deg.mapValues(_ => Scale))
     for (_ <- 1 to iters) {
-      val next = edges.join(ranks)
+      val next = Memo.persist(edges.join(ranks)
         .map { case (_, ((dst, d), rank)) => (dst, rank / d) }
         .reduceByKey(part, _ + _)
-        .mapValues(s => Base + 85 * s / 100)
-        .persist(mem)
-      persistedEdgeRdds.add(next)
+        .mapValues(s => Base + 85 * s / 100))
       ranks.unpersist(blocking = false)
       ranks = next
     }

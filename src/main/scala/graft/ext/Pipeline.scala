@@ -79,37 +79,22 @@ object Pipeline {
     * front, but each gate re-ran the iterative propagation loop over
     * the kept-restricted pair set. The first consumer now persists the
     * (tiny — ≤ |docs| ids) survivor frame and the second reads it.
-    * Cleared by [[clearMemos]], which the bench/probe harnesses drain
-    * between passes alongside the other family memos. */
-  private val survivorsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Double), DataFrame]()
+    * Cleared by [[Memo.clearAll]], which the bench/probe harnesses
+    * run between passes. */
+  private val survivorsCache =
+    Memo.table[(String, Double), DataFrame]("pipeline.survivors")
 
-  // The memoized survivor frame goes through persistTracked, so ANY
-  // family's cold sweep (Dedup/Similarity/Selection clearMemos →
-  // TrackedPersist.clear) drops its blocks — register the map clear
-  // there too (the Selection.docwCache invariant, TrackedPersist.scala),
-  // or the memo would keep serving an unpersisted frame that silently
-  // recomputes the corpus-sized quality→pairs→label-prop build on
-  // every later action.
-  TrackedPersist.onClear(() => survivorsCache.clear())
+  def clearMemos(): Unit = Memo.clearAll()
 
-  def clearMemos(): Unit = {
-    survivorsCache.clear()
-    TrackedPersist.clear()
-  }
-
+  // lazy persist, no eager count: the first consumer's own action
+  // fills the cache as a side effect (an eager count here charged
+  // q63 one extra job — +0.3 s on a canary-member gate), and the
+  // second consumer reads the cached frame either way
   private[ext] def survivingDocs(spark: SparkSession, dir: String,
-                                 threshold: Double = 0.8): DataFrame = {
-    survivorsCache.keys.filter(_._1.sparkContext.isStopped)
-      .foreach(survivorsCache.remove)
-    // lazy persist, no eager count: the first consumer's own action
-    // fills the cache as a side effect (an eager count here charged
-    // q63 one extra job — +0.3 s on a canary-member gate), and the
-    // second consumer reads the cached frame either way
-    survivorsCache.getOrElseUpdate((spark, dir, threshold),
+                                 threshold: Double = 0.8): DataFrame =
+    survivorsCache.getOrElseUpdate(spark, (dir, threshold))(
       survivingDocsUncached(spark, dir, threshold)
-        .transform(TrackedPersist.persistTracked))
-  }
+        .transform(Memo.persist))
 
   private def survivingDocsUncached(spark: SparkSession, dir: String,
                                     threshold: Double): DataFrame = {

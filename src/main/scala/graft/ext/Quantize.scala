@@ -137,10 +137,11 @@ object Quantize {
   /** Per-(session, dir) memo of trained codebooks (IVF-centroid
     * pattern: training is the bounded driver-side step, encode is pure
     * map work). */
-  private val bookCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, Int), Array[Array[Array[Double]]]]()
+  private val bookCache =
+    Memo.table[(String, Int, Int), Array[Array[Array[Double]]]](
+      "quantize.codebooks")
 
-  def clearMemos(): Unit = bookCache.clear()
+  def clearMemos(): Unit = Memo.clearAll()
 
   /** Cache key of the most recent [[pqCodes]] call, so the oracle
     * generator (dumped by Verify AFTER the queries ran, over the same
@@ -152,7 +153,7 @@ object Quantize {
     * deterministic (sorted bounded sample, first-K init, lowest-index
     * tie-breaks), so the literals are a reproducible function of the
     * table, not run-local state. */
-  @volatile private var lastBookKey: (SparkSession, String, Int, Int) = null
+  @volatile private var lastBookKey: (SparkSession, String) = null
 
   /** PQ encode: per vector, the M argmin-distance codes plus the total
     * squared reconstruction error. Encoding is a single map-side
@@ -178,12 +179,9 @@ object Quantize {
   private[graft] def trainedBooksCached(
       spark: SparkSession, embs: DataFrame, dir: String,
       pqM: Int = PqM, pqK: Int = PqK): Array[Array[Array[Double]]] = {
-    bookCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) bookCache.remove(k)
-    }
-    val books = bookCache.getOrElseUpdate((spark, dir, pqM, pqK),
+    val books = bookCache.getOrElseUpdate(spark, (dir, pqM, pqK))(
       pqTrain(embs, 64, pqM = pqM, pqK = pqK))
-    if (pqM == PqM && pqK == PqK) lastBookKey = (spark, dir, pqM, pqK)
+    if (pqM == PqM && pqK == PqK) lastBookKey = (spark, dir)
     books
   }
 
@@ -192,7 +190,7 @@ object Quantize {
   private[ext] def pqShape: (Int, Int) = (PqM, PqK)
   private[ext] def booksFor(spark: SparkSession,
                             dir: String): Option[Array[Array[Array[Double]]]] =
-    bookCache.get((spark, dir, PqM, PqK))
+    bookCache.get(spark, (dir, PqM, PqK))
 
   /** DuckDB oracle for [[pqCodes]]: the trained codebooks are embedded
     * as literal lists (Java's shortest-round-trip double formatting
@@ -206,7 +204,8 @@ object Quantize {
     * is deterministic (see [[pqTrain]]), so the literals are a pure
     * function of the table. */
   def pqCodesOracleSql: String = {
-    val books = Option(lastBookKey).flatMap(bookCache.get).orNull
+    val books = Option(lastBookKey).flatMap { case (s, d) => booksFor(s, d) }
+      .orNull
     if (books == null)
       // loud, syntactically-valid failure: compared output can never
       // match, so a dump taken without running q85 fails visibly

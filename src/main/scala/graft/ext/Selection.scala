@@ -84,30 +84,19 @@ object Selection {
     * are a per-corpus model artifact scored once and then consumed by
     * every selection policy (argmax q197, Gumbel resample q199, any
     * future stratified cut), not recomputed per query. Entries are
-    * persisted via [[TrackedPersist]] (drained with every family
+    * persisted via [[Memo.persist]] (drained with every family
     * cold sweep) and ALSO sit under the broadcast top-k branch and the
     * probe side of each selection join — the memo makes that shared
     * subtree compute once per corpus. */
   /** Key: (session, dir, dim, model id) where the model id encodes the
     * target definition — "lang:<l>" for the in-pool formulation,
     * "heldout-src:<s>" for the two-corpus one. */
-  private[ext] val docwCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, String), DataFrame]()
-
-  // The memoized docw frame itself goes through persistTracked, so ANY
-  // family's cold sweep (Dedup/Similarity clearMemos → TrackedPersist
-  // .clear) drops its blocks — register the map clear there too, or the
-  // memo would keep serving an unpersisted frame that recomputes the
-  // corpus-sized feature build on every later action.
-  TrackedPersist.onClear(() => docwCache.clear())
+  private[ext] val docwCache =
+    Memo.table[(String, Int, String), DataFrame]("selection.docWeights")
 
   /** Drop memoized weight tables AND their tracked blocks (benchmark
-    * cold-start hook; the TrackedPersist drain also clears this map
-    * via the onClear hook — idempotent). */
-  def clearMemos(): Unit = {
-    docwCache.clear()
-    TrackedPersist.clear()
-  }
+    * cold-start hook; the drain is [[Memo.clearAll]]). */
+  def clearMemos(): Unit = Memo.clearAll()
 
   private def docWeightsCached(spark: SparkSession, dir: String, dim: Int,
                                targetLang: String): DataFrame =
@@ -119,19 +108,15 @@ object Selection {
   private def docWeightsCachedGen(spark: SparkSession, dir: String,
                                   dim: Int, modelId: String,
                                   isTarget: Column,
-                                  heldOut: Boolean): DataFrame = {
-    docwCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) docwCache.remove(key)
-    }
-    docwCache.getOrElseUpdate((spark, dir, dim, modelId),
+                                  heldOut: Boolean): DataFrame =
+    docwCache.getOrElseUpdate(spark, (dir, dim, modelId))(
       // lazy persist (the r16 q63 lesson: an eager count charges the
       // first consumer an extra job); the first gate's own action fills
       // the cache, and the shared featCounts memo below — not a
       // transient exploded frame — is what the scoring reads, so there
       // is nothing to release eagerly any more
       docWeights(spark, dir, dim, isTarget, heldOut)
-        .transform(TrackedPersist.persistTracked))
-  }
+        .transform(Memo.persist))
 
   /** Per-(session, dir, dim) memo of the MODEL-INDEPENDENT feature-count
     * table (doc_id, lang, source, b, c) — r17, guide §2.4 "remove
@@ -143,17 +128,13 @@ object Selection {
     * ride the groupBy keys (functionally dependent on doc_id) and each
     * model evaluates its own `tgt` over this one persisted table —
     * per-model work drops from corpus-scale to featCounts-scale.
-    * Cleared with the family memos via the TrackedPersist hook. */
-  private val featCountsCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int), DataFrame]()
-  TrackedPersist.onClear(() => featCountsCache.clear())
+    * Cleared with the family memos by [[Memo.clearAll]]. */
+  private val featCountsCache =
+    Memo.table[(String, Int), DataFrame]("selection.featCounts")
 
   private def featCountsCached(spark: SparkSession, dir: String,
-                               dim: Int): DataFrame = {
-    featCountsCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) featCountsCache.remove(key)
-    }
-    featCountsCache.getOrElseUpdate((spark, dir, dim), {
+                               dim: Int): DataFrame =
+    featCountsCache.getOrElseUpdate(spark, (dir, dim)) {
       val toks = Tables.load(spark, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"),
                 filter(split(TextAnalysis.normalized(col("text")), " "),
@@ -171,9 +152,8 @@ object Selection {
           pmod(Sketches.hHex(col("bg"), 15), lit(dim.toLong)))
         .groupBy(col("doc_id"), col("lang"), col("source"), col("b"))
         .agg(count(lit(1)).as("c"))
-        .transform(TrackedPersist.persistTracked)
-    })
-  }
+        .transform(Memo.persist)
+    }
 
   /** The shared DSIR scoring stage: (doc_id, n_feats, logw @4dp),
     * plus the inner persisted feature frame for lifecycle control.

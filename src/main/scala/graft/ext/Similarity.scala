@@ -486,17 +486,14 @@ object Similarity {
     * index-build-once pattern: an IVF index is a model artifact built
     * when the corpus is ingested, not retrained per query. Centroids are
     * K×dim driver-side doubles (bounded), so the memo holds no executor
-    * state; entries for stopped sessions are swept on access. */
-  private val centroidCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int), Array[Array[Double]]]()
+    * state. */
+  private val centroidCache =
+    Memo.table[(String, Int), Array[Array[Double]]]("similarity.centroids")
 
-  /** Drop memoized centroids and tracked inner persists (benchmark
-    * harness hook — lets a measurement pass retrain from the same cold
-    * state as a fresh session). */
-  def clearMemos(): Unit = {
-    centroidCache.clear()
-    TrackedPersist.clear()
-  }
+  /** Drop memoized centroids and every other operator memo and block
+    * (benchmark harness hook — lets a measurement pass retrain from the
+    * same cold state as a fresh session; the drain is [[Memo.clearAll]]). */
+  def clearMemos(): Unit = Memo.clearAll()
 
   /** Probe hook (SCALE.md IVF-PQ cost anatomy): run ONLY the training
     * stage (coarse centroids + PQ codebooks), populating the memos the
@@ -511,12 +508,12 @@ object Similarity {
   }
 
   private def trainedCentroidsCached(spark: SparkSession, corpus: DataFrame,
-                                     dir: String, k: Int): Array[Array[Double]] = {
-    centroidCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) centroidCache.remove(key)
-    }
-    centroidCache.getOrElseUpdate((spark, dir, k), trainCentroids(corpus, k))
-  }
+                                     dir: String, k: Int): Array[Array[Double]] =
+    centroidCache.getOrElseUpdate(spark, (dir, k))(trainCentroids(corpus, k))
+
+  private def centroidsAt(key: (SparkSession, String, Int))
+      : Option[Array[Array[Double]]] =
+    centroidCache.get(key._1, (key._2, key._3))
 
   /** Cache key of the most recent [[ivfTopK]] call — the oracle dump
     * (written by Verify after the queries ran) reads the trained
@@ -582,34 +579,27 @@ object Similarity {
     * encode twice; a production system pays it per query batch).
     * 2-byte codes per vector: the persisted frame is the RAM-resident
     * code index FAISS keeps — tiny relative to the raw vectors.
-    * Frames go through [[TrackedPersist]]; the onClear hook keeps this
-    * map from serving an unpersisted frame after any family's cold
-    * sweep. */
-  private val ivfPqIndexCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, Int, Int), DataFrame]()
-  TrackedPersist.onClear(() => ivfPqIndexCache.clear())
+    * Frames go through [[Memo.persist]], so the cold drain that
+    * unpersists them also clears this table. */
+  private val ivfPqIndexCache =
+    Memo.table[(String, Int, Int, Int), DataFrame]("similarity.ivfPqIndex")
 
   private def ivfPqIndexCached(spark: SparkSession, dir: String,
                                corpus: DataFrame,
                                cents: Array[Array[Double]],
                                books: Array[Array[Array[Double]]],
-                               numCells: Int, nAssign: Int): DataFrame = {
-    ivfPqIndexCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) ivfPqIndexCache.remove(key)
-    }
-    ivfPqIndexCache.getOrElseUpdate(
-        (spark, dir, numCells, nAssign,
-         books.length * 100000 + books.head.length), {
+                               numCells: Int, nAssign: Int): DataFrame =
+    ivfPqIndexCache.getOrElseUpdate(spark,
+        (dir, numCells, nAssign, books.length * 100000 + books.head.length)) {
       val codeParts = Quantize.pqCodeCols(books, Dim)
       val df = withIvfCellsMulti(corpus, col("embedding"), cents, nAssign)
         .select(col("vec_id").as("nid") +: col("cell") +:
           codeParts.zipWithIndex.map { case ((c, _), m) =>
             c.as(s"code_$m") }: _*)
-        .transform(TrackedPersist.persistTracked)
+        .transform(Memo.persist)
       df.count() // materialize eagerly: consumers reuse, never rebuild
       df
-    })
-  }
+    }
 
   /** IVF-PQ ANN top-k — the FAISS `IVFx,PQy` architecture, the standard
     * big-corpus ANN layout: the IVF coarse quantizer prunes the search
@@ -763,7 +753,7 @@ object Similarity {
     * `adc_d` column is hash-comparable. */
   def ivfPqOracleSql(nQueries: Int = 5, k: Int = 10, nProbe: Int = 4,
                      nAssign: Int = 3): String = {
-    val cents = Option(lastIvfPqKey).flatMap(centroidCache.get).orNull
+    val cents = Option(lastIvfPqKey).flatMap(centroidsAt).orNull
     val books = Option(lastIvfPqKey)
       .flatMap(key => Quantize.booksFor(key._1, key._2)).orNull
     if (cents == null || books == null)
@@ -922,7 +912,7 @@ object Similarity {
     * ~1e-8, top-k sim gaps are ~1e-4, so ranks cannot flip). */
   def ivfTopKOracleSql(nQueries: Int = 5, k: Int = 10, nProbe: Int = 4,
                        nAssign: Int = 3): String = {
-    val cents = Option(lastIvfKey).flatMap(centroidCache.get).orNull
+    val cents = Option(lastIvfKey).flatMap(centroidsAt).orNull
     if (cents == null)
       "SELECT 'q37 oracle requires ivfTopK to run first' AS err"
     else {
@@ -1187,7 +1177,7 @@ object Similarity {
     val assigned = withIvfCellsCsim(corpus, col("embedding"), cents)
       .select(col("vec_id"), l2normalize(col("embedding")).as("ne"),
               col("cell"), col("csim"))
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val l = assigned.select(col("cell"), col("vec_id").as("lid"),
                             col("ne").as("lne"), col("csim").as("lcs"))
     val r = assigned.select(col("cell"), col("vec_id").as("rid"),
@@ -1212,7 +1202,7 @@ object Similarity {
     * gate ran, [[lastIvfKey]] contract), exact sequential-fold dots, the
     * same argmax / dominance / threshold decisions. */
   def semDedupOracleSql(threshold: Double = 0.35): String = {
-    val cents = Option(lastSemKey).flatMap(centroidCache.get).orNull
+    val cents = Option(lastSemKey).flatMap(centroidsAt).orNull
     if (cents == null)
       "SELECT 'q198 oracle requires semDedup to run first' AS err"
     else {

@@ -319,21 +319,17 @@ object TextAnalysis {
     * identical (the batched selection's guards make the equality
     * structural, not empirical; see [[bpeTrainLoop]]) — so two callers
     * with different knobs share one artifact. The value is driver-side
-    * and tiny (k rows), but it still rides the [[TrackedPersist]]
-    * onClear hook so a cold sweep measures a full retrain. */
-  private[ext] val bpeMergeCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int),
-             Seq[(Long, String, String, Long)]]()
-  TrackedPersist.onClear(() => bpeMergeCache.clear())
+    * and tiny (k rows), but it is still a [[Memo]] table so a cold
+    * sweep measures a full retrain. */
+  private[ext] val bpeMergeCache =
+    Memo.table[(String, Int), Seq[(Long, String, String, Long)]](
+      "text.bpeMerges")
 
   private def learnedMerges(spark: SparkSession, dir: String, nMerges: Int,
                             foldChainCap: Int = 4, batchSize: Int = 64)
       : Seq[(Long, String, String, Long)] = {
     require(nMerges >= 1, "nMerges must be positive")
-    bpeMergeCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) bpeMergeCache.remove(k)
-    }
-    bpeMergeCache.getOrElseUpdate((spark, dir, nMerges), {
+    bpeMergeCache.getOrElseUpdate(spark, (dir, nMerges)) {
       val wordCounts = Tables.load(spark, dir, "documents")
         .select(explode(split(normalized(col("text")), " ")).as("w"))
         .filter(col("w") =!= "")
@@ -341,7 +337,7 @@ object TextAnalysis {
         .persist()
       try bpeTrainLoop(wordCounts, nMerges, foldChainCap, batchSize)
       finally { wordCounts.unpersist(); () }
-    })
+    }
   }
 
   /** Train on an EXPLICIT (w, n) vocabulary frame — the measurement
@@ -1141,29 +1137,24 @@ object TextAnalysis {
     * consumed by every policy (the raw q118 score, the q202 terciles,
     * any future hard filter), not recomputed per consumer. The frame
     * is corpus-row-count-sized but THREE columns wide; it rides
-    * [[TrackedPersist]], so any family's cold sweep drains it and the
-    * onClear hook keeps this map from serving an unpersisted frame. */
-  private[ext] val lmScoreCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, String, Int), DataFrame]()
-  TrackedPersist.onClear(() => lmScoreCache.clear())
+    * [[Memo.persist]], and the cold drain that unpersists it also
+    * clears this table, so no entry outlives its blocks. */
+  private[ext] val lmScoreCache =
+    Memo.table[(String, String, Int), DataFrame]("text.lmScores")
 
   private def lmScoredCached(spark: SparkSession, dir: String,
                              trainLang: String,
-                             topV: Option[Int]): DataFrame = {
-    lmScoreCache.keys.foreach { k =>
-      if (k._1.sparkContext.isStopped) lmScoreCache.remove(k)
-    }
+                             topV: Option[Int]): DataFrame =
     lmScoreCache.getOrElseUpdate(
-      (spark, dir, trainLang, topV.getOrElse(-1)), {
+        spark, (dir, trainLang, topV.getOrElse(-1))) {
         val (bi, bc, hc, v) = bigramLmParts(spark, dir, trainLang, topV)
         val p = lmScoreTail(bi, bc, hc, v)
-          .transform(TrackedPersist.persistTracked)
+          .transform(Memo.persist)
         // materialize eagerly so the corpus-sized bigram explode can be
         // garbage-collected; only the skinny score table stays cached
         p.count()
         p
-      })
-  }
+      }
 
   /** Sentinel the bounded-vocab LM maps out-of-vocabulary tokens to —
     * cannot collide with a real token ([[normalized]] strips everything
@@ -1302,7 +1293,7 @@ object TextAnalysis {
     // n_bigrams, nll) result once instead of running the LM scoring
     // joins three times; drained by any family's cold sweep
     val d = scored.join(langs, "doc_id")
-      .transform(TrackedPersist.persistTracked)
+      .transform(Memo.persist)
     val byLang = org.apache.spark.sql.expressions.Window
       .partitionBy(col("lang")).orderBy(col("nll"))
       .rowsBetween(org.apache.spark.sql.expressions.Window

@@ -82,23 +82,16 @@ object Winnow {
     * shared-stage pattern as `Dedup.jaccardPairsCached`. (The stats gate
     * q83 recomputes from the scan instead: it also needs raw gram
     * counts, which the distinct selection no longer carries.) */
-  private val selCache = scala.collection.concurrent
-    .TrieMap[(SparkSession, String, Int, Int), DataFrame]()
+  private val selCache =
+    Memo.table[(String, Int, Int), DataFrame]("winnow.selection")
 
-  /** Drop memoized selections and their cached blocks (bench hook). */
-  def clearMemos(): Unit = {
-    selCache.values.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
-    }
-    selCache.clear()
-  }
+  /** Drop memoized selections and their cached blocks (bench hook; the
+    * drain is [[Memo.clearAll]]). */
+  def clearMemos(): Unit = Memo.clearAll()
 
   private def selectedCached(spark: SparkSession, dir: String,
-                             k: Int, w: Int): DataFrame = {
-    selCache.keys.foreach { key =>
-      if (key._1.sparkContext.isStopped) selCache.remove(key)
-    }
-    selCache.getOrElseUpdate((spark, dir, k, w), {
+                             k: Int, w: Int): DataFrame =
+    selCache.getOrElseUpdate(spark, (dir, k, w)) {
       // materialize inside a data-derived shuffle-partition scope:
       // ~2 winnowed 16-byte fingerprints per window position → ~8× the
       // parquet footprint in flight; floor = session conf, so a no-op
@@ -108,8 +101,7 @@ object Winnow {
       graft.ops.Partitioning.materialized(spark, np)(
         selectedFingerprintsOf(
           Tables.load(spark, dir, "documents"), k, w))
-    })
-  }
+    }
 
   /** Cross-doc MOSS matching: pairs of docs sharing >= minShared
     * winnowed fingerprints, with the shared count. Fingerprints more

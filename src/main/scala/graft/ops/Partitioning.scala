@@ -130,17 +130,18 @@ object Partitioning {
     scopeLocks.computeIfAbsent(spark, _ => new Object)
 
   /** Materialize `build` (persist MEMORY_AND_DISK + count) inside a
-    * [[withShufflePartitions]] scope of `n`. This is the ONE shared
-    * discipline for every memoized pair/fingerprint table: the persist
-    * must be planned AND run inside the scope (cached plans are not
-    * re-partitioned by AQE), and the raised count dies with the scope
-    * instead of leaking into the next operator's plan. */
+    * [[withShufflePartitions]] scope of `n`, registered with
+    * [[graft.ext.Memo]] so its cold drain releases the blocks. This is
+    * the ONE shared discipline for every memoized pair/fingerprint
+    * table: the persist must be planned AND run inside the scope
+    * (cached plans are not re-partitioned by AQE), and the raised count
+    * dies with the scope instead of leaking into the next operator's
+    * plan. */
   def materialized(spark: SparkSession, n: Int)
                   (build: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
     withShufflePartitions(spark, n) {
-      val df = build
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val df = graft.ext.Memo.persist(build)
       df.count() // plan + run inside the scope; consumers reuse the cache
       df
     }

@@ -60,7 +60,7 @@ class BpeMergesSpec extends SparkSpec {
     // that makes that exclusion safe (clear the memo between runs so
     // every combination actually retrains)
     def train(cap: Int, batch: Int): Seq[String] = {
-      TextAnalysis.bpeMergeCache.clear()
+      Memo.clearAll()
       TextAnalysis.bpeMerges(spark, sfDir, NMerges,
           foldChainCap = cap, batchSize = batch)
         .collect().map(_.toString).sorted.toSeq
@@ -69,7 +69,7 @@ class BpeMergesSpec extends SparkSpec {
     assert(train(1, 1) == ref,   "rebase every round")
     assert(train(4, 64) == ref,  "batched production default")
     assert(train(2, 8) == ref,   "mid-size batch across rebases")
-    TextAnalysis.bpeMergeCache.clear()
+    Memo.clearAll()
   }
 
   test("parquet-spill rebase (the production-budget lineage cut) " +

@@ -647,17 +647,16 @@ class DedupSpec extends SparkSpec {
     // scope (jaccard/containment) — r10 paid two full scans per cold
     // corpus.
     Dedup.clearMemos()
-    assert(Dedup.dupFracCache.isEmpty)
+    assert(Dedup.dupFracCache.keys(spark).isEmpty)
     Dedup.dupFractionDir(spark, sfDir, Nil)
-    val scopes = Dedup.dupFracCache.keys
-      .collect { case (s, d, _, _, scope) if s == spark && d == sfDir =>
-        scope }
+    val scopes = Dedup.dupFracCache.keys(spark)
+      .collect { case (d, _, _, scope) if d == sfDir => scope }
       .toSet
     assert(scopes == Set("", "source"),
       s"one probe must fill both scopes, got $scopes")
     // and the source-scope read is a pure cache hit (same map entry)
-    val before = Dedup.dupFracCache(
-      (spark, sfDir, 1.0, Dedup.ExactDistinctThreshold, "source"))
+    val before = Dedup.dupFracCache.get(spark,
+      (sfDir, 1.0, Dedup.ExactDistinctThreshold, "source")).get
     assert(Dedup.dupFractionDir(spark, sfDir, Seq("source")) == before)
   }
 
@@ -679,8 +678,8 @@ class DedupSpec extends SparkSpec {
       // it re-probes under its own key, leaving both entries live
       spark.conf.unset(Dedup.ProbeSampleKey)
       Dedup.dupFractionDir(spark, sfDir, Nil)
-      val fracs = Dedup.dupFracCache.keys.collect {
-        case (s, d, f, _, "") if s == spark && d == sfDir => f
+      val fracs = Dedup.dupFracCache.keys(spark).collect {
+        case (d, f, _, "") if d == sfDir => f
       }.toSet
       assert(fracs == Set(0.5, 1.0),
         s"probe memo must be keyed by sample fraction, got $fracs")

@@ -161,19 +161,21 @@ class SelectionSpec extends SparkSpec {
   }
 
   test("another family's cold sweep cannot strand the docw memo") {
-    // TrackedPersist.clear() is GLOBAL: a Dedup/Similarity cold sweep
+    // Memo.clearAll() is GLOBAL: a Dedup/Similarity cold sweep
     // drops the docw frame's blocks. The memo must be invalidated with
     // them — otherwise it keeps serving an unpersisted frame and every
     // later selection action silently recomputes the corpus-sized
     // feature build (the round-10 ADVICE finding).
     Selection.dsirSelect(spark, sfDir, k = 5).count()
-    assert(Selection.docwCache.nonEmpty, "memo populated by the call")
+    assert(Selection.docwCache.keys(spark).nonEmpty,
+      "memo populated by the call")
     Dedup.clearMemos() // ANOTHER family's sweep
-    assert(Selection.docwCache.isEmpty,
-      "TrackedPersist.clear() must invalidate the docw memo it drained")
+    assert(Selection.docwCache.keys(spark).isEmpty,
+      "Memo.clearAll() must invalidate the docw memo it drained")
     // and a fresh call rebuilds a genuinely persisted entry
     Selection.dsirSelect(spark, sfDir, k = 5).count()
-    val rebuilt = Selection.docwCache.values.head
+    val rebuilt = Selection.docwCache.keys(spark)
+      .flatMap(Selection.docwCache.get(spark, _)).head
     assert(rebuilt.storageLevel !=
              org.apache.spark.storage.StorageLevel.NONE,
       "rebuilt docw frame must be persisted, not a stranded plan")

@@ -251,7 +251,7 @@ class TextAnalysisSpec extends SparkSpec {
   }
 
   test("LM score memo: one scoring pass per corpus; sweep-safe, keyed by bound") {
-    graft.ext.TrackedPersist.clear() // also clears lmScoreCache via hook
+    graft.ext.Memo.clearAll() // also clears lmScoreCache
     val a = TextAnalysis.bigramLmScore(spark, sfDir)
     assert(TextAnalysis.bigramLmScore(spark, sfDir) eq a,
       "second consumer must ride the memoized scored frame")

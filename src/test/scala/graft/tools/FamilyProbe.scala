@@ -31,13 +31,7 @@ object FamilyProbe {
     val noopGates = Set("q81_hash_split", "q216_substr_remove",
       "q219_collapse_repeats", "q222_vocab_prune")
     val samples = (1 to reps).map { _ =>
-      graft.ext.Dedup.clearMemos()
-      graft.ext.Similarity.clearMemos()
-      graft.ext.Quantize.clearMemos()
-      graft.ext.Winnow.clearMemos()
-      graft.ext.PageRank.clearMemos()
-      graft.ext.Selection.clearMemos()
-      graft.ext.Pipeline.clearMemos()
+      graft.ext.Memo.clearAll()
       spark.sharedState.cacheManager.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

@@ -19,7 +19,7 @@ object ProbeParts {
         spark.conf.set(graft.ops.Partitioning.TargetBytesKey,
           (1L << 40).toString)
       else spark.conf.unset(graft.ops.Partitioning.TargetBytesKey)
-      graft.ext.Dedup.clearMemos()
+      graft.ext.Memo.clearAll()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val pairs = graft.ext.Dedup.jaccardPairsCached(spark, dir, threshold)

@@ -22,8 +22,7 @@ object ProbePq {
       s
     }
     def coldStart(): Unit = {
-      graft.ext.Similarity.clearMemos()
-      graft.ext.Quantize.clearMemos()
+      graft.ext.Memo.clearAll()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))

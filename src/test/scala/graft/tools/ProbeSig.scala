@@ -21,7 +21,7 @@ object ProbeSig {
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
-      graft.ext.Dedup.clearMemos()
+      graft.ext.Memo.clearAll()
       val sh = graft.ext.Dedup.shingledOf(docs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       t(s"p$pass shingle build")(sh.count())

@@ -30,15 +30,9 @@ object QueryProbe {
     args.foreach { name =>
       val fn = queries(name)
       val times = (1 to reps).map { _ =>
-        // drain EVERY family memo (mirrors Bench's cold-start sweep) —
-        // a missing drain times a warm scoring table as if cold
-        graft.ext.Dedup.clearMemos()
-        graft.ext.Similarity.clearMemos()
-        graft.ext.Quantize.clearMemos()
-        graft.ext.Winnow.clearMemos()
-        graft.ext.PageRank.clearMemos()
-        graft.ext.Selection.clearMemos()
-        graft.ext.Pipeline.clearMemos()
+        // drain every operator memo and block (mirrors Bench's
+        // cold-start sweep), so no rep times a warm table as if cold
+        graft.ext.Memo.clearAll()
         spark.sharedState.cacheManager.clearCache()
         graft.streaming.Streams.dropBoundedSinks(spark)
         val t0 = System.nanoTime()

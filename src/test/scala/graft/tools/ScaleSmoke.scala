@@ -511,13 +511,7 @@ object ScaleSmoke {
     // side computes cold — clear every memo/persist before each timed
     // run so both sides measure a full recompute.
     def coldStart(): Unit = {
-      graft.ext.Dedup.clearMemos()
-      graft.ext.Similarity.clearMemos()
-      graft.ext.Quantize.clearMemos()
-      graft.ext.Winnow.clearMemos()
-      graft.ext.PageRank.clearMemos()
-      graft.ext.Selection.clearMemos()
-      graft.ext.Pipeline.clearMemos()
+      graft.ext.Memo.clearAll()
       spark.catalog.clearCache()
       spark.sparkContext.getPersistentRDDs.values
         .foreach(_.unpersist(blocking = false))
