@@ -5,7 +5,6 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components by ALTERNATING STARS (Kiveris, Lattanzi,
   * Mirrokni, Rastogi, Vassilvitskii — "Connected Components in
@@ -70,18 +69,21 @@ object ConnectedComponents {
     val p0 = pairs.select(col("a_id").cast("long"), col("b_id").cast("long"))
       .rdd.map(r => (r.getLong(0), r.getLong(1)))
     // every input node must survive to the label set even if its edges
-    // contract away mid-run — track the node universe once
-    val nodes = p0.flatMap { case (a, b) => Iterator(a, b) }
-      .distinct(part.numPartitions).persist(StorageLevel.MEMORY_AND_DISK)
-    var edges: E = p0.filter { case (a, b) => a != b }
+    // contract away mid-run — track the node universe once. Every
+    // persisted RDD (nodes, edges, each round's `next`) registers with
+    // Memo before any job runs on it, so a run that exceeds maxRounds
+    // or fails mid-round strands nothing past Memo.clearAll
+    val nodes = Memo.persist(p0.flatMap { case (a, b) => Iterator(a, b) }
+      .distinct(part.numPartitions))
+    var edges: E = Memo.persist(p0.filter { case (a, b) => a != b }
       .map { case (a, b) => (math.max(a, b), math.min(a, b)) }
-      .distinct(part.numPartitions).persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct(part.numPartitions))
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
       val afterLarge = star(symmetrize(edges, part), part, large = true)
-      val next = star(symmetrize(afterLarge, part), part, large = false)
-        .persist(StorageLevel.MEMORY_AND_DISK)
+      val next = Memo.persist(
+        star(symmetrize(afterLarge, part), part, large = false))
       // converged when the canonical edge set is a fixpoint: same count
       // and no edge outside the previous set (subtract on the smaller
       // of the two directions suffices since counts match)

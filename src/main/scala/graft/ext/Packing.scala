@@ -104,30 +104,6 @@ object Packing {
           .as("pack_last"))
   }
 
-  /** Reference semantics: the plain single-window prefix sum. Used by
-    * the spec to assert the hierarchical plan computes the identical
-    * result; NOT the production path (single task per source). */
-  private[ext] def packedDocsNaive(documents: DataFrame,
-                                   seqLen: Int = 256): DataFrame = {
-    val toks = documents
-      .select(col("doc_id"), col("source"),
-              split(TextAnalysis.normalized(col("text")), " ").as("ts"))
-      .filter(size(col("ts")) > 0 && col("ts").getItem(0) =!= "")
-      .select(col("doc_id"), col("source"),
-              size(col("ts")).cast("long").as("n_toks"))
-    toks.withColumn("start_off",
-        coalesce(
-          sum(col("n_toks")).over(
-            Window.partitionBy(col("source")).orderBy(col("doc_id"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-          lit(0L)))
-      .select(
-        col("doc_id"), col("source"), col("n_toks"), col("start_off"),
-        (col("start_off") / seqLen).cast("long").as("pack_first"),
-        ((col("start_off") + col("n_toks") - 1) / seqLen).cast("long")
-          .as("pack_last"))
-  }
-
   /** DuckDB oracle for [[packedDocs]] — same tokenization, the plain
     * window formulation of the same prefix sum. */
   def packedDocsOracleSql(seqLen: Int = 256): String =

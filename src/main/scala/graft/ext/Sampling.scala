@@ -119,20 +119,6 @@ object Sampling {
       .select(col("source"), col("doc_id"), col("rnk"))
   }
 
-  /** Reference semantics for [[reservoirSample]]: the naive global
-    * window. Spec-only (single task per source at scale). */
-  private[ext] def reservoirSampleNaive(spark: SparkSession, dir: String,
-                                        k: Int = 20): DataFrame = {
-    val w = Window.partitionBy(col("source"))
-      .orderBy(col("skey"), col("doc_id"))
-    Tables.load(spark, dir, "documents")
-      .select(col("source"), col("doc_id"),
-              md5(col("doc_id").cast("string")).as("skey"))
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= k)
-      .select(col("source"), col("doc_id"), col("rnk"))
-  }
-
   def reservoirSampleOracleSql(k: Int = 20): String =
     s"""SELECT source, doc_id, rnk FROM (
        |  SELECT source, doc_id,

@@ -1,8 +1,11 @@
 package graft.functions
 
+import org.apache.spark.SparkEnv
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.execution.ColumnarRule
+import org.apache.spark.sql.internal.StaticSQLConf
 
 /** SparkSessionExtensions entry point: registers the engine's custom
   * codegen'd expressions as SQL functions, so `spark.sql` users get the
@@ -28,8 +31,21 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
   * ahead of the O(|a|·|b|) dynamic program. The rule is idempotent, so
   * sessions that ALSO register it via `experimental.extraOptimizations`
   * (the live-session fallback `ext.Fuzzy` uses) are unaffected.
+  *
+  * And one physical-plan rule, through `injectColumnar`'s
+  * pre-transition hook (plain and adaptive execution alike, before
+  * whole-stage codegen): [[graft.plans.HoistLiterals]] — primitive
+  * constants in filters and projections reach generated code through
+  * its references array, so statements that differ only in a key or
+  * bound reuse one compiled class. So that those classes stay cached,
+  * the JVM's generated-class cache holds 400 entries instead of Spark's
+  * 100, unless the application sets `spark.sql.codegen.cache.maxEntries`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
+
+  /** Generated-class cache size: four times one llamadb session's
+    * working set, so no LRU segment overflows. */
+  private val CodegenCacheEntries = 400
 
   private def info(name: String, usage: String) =
     new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage,
@@ -42,7 +58,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
   }
 
   override def apply(ext: SparkSessionExtensions): Unit = {
+    // HoistLiterals only pays if the compiled classes stay cached. Spark's
+    // class cache (one per JVM, sized by the first session) defaults to 100
+    // entries in 4 LRU segments, and in local mode every shape takes two
+    // (driver and executor class loaders): a 107-statement llamadb session
+    // compiles ~110 distinct classes, so a segment that ends up over-full
+    // evicts classes the next statement needs, and each one recompiles. Spark applies
+    // extensions before it builds the session's SQL conf, so the size
+    // reaches it; a value the application sets itself is kept.
+    Option(SparkEnv.get).foreach(_.conf.setIfMissing(
+      StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key, CodegenCacheEntries.toString))
     ext.injectOptimizerRule(_ => graft.plans.EditDistanceBandRule)
+    ext.injectColumnar(_ => new ColumnarRule {
+      override def preColumnarTransitions = graft.plans.HoistLiterals
+    })
     ext.injectFunction((FunctionIdentifier("hash_shingles"),
       info("hash_shingles",
         "hash_shingles(words, n) - sorted distinct xxhash64 n-gram shingles"),

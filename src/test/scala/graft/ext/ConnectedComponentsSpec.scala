@@ -63,4 +63,18 @@ class ConnectedComponentsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(alt == lp)
   }
+
+  test("an unconverged run strands no persisted RDD past Memo.clearAll") {
+    val sc = spark.sparkContext
+    Memo.clearAll()
+    val before = sc.getPersistentRDDs.keySet
+    // a 41-node chain does not contract to a star in one round
+    val chain = (1L to 40L).map(i => (i, i + 1)).toDF("a_id", "b_id")
+    intercept[IllegalStateException] {
+      ConnectedComponents.alternatingStarLabels(chain, maxRounds = 1)
+    }
+    Memo.clearAll()
+    val left = sc.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted RDDs left: ${left.mkString(",")}")
+  }
 }

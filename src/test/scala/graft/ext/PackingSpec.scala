@@ -1,6 +1,8 @@
 package graft.ext
 
 import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Sequence-packing invariants on the real documents table, plus the
@@ -8,11 +10,33 @@ import org.apache.spark.sql.functions._
   * sum must equal the plain single-window prefix sum row for row. */
 class PackingSpec extends SparkSpec {
 
+  /** Reference semantics for [[Packing.packedDocs]]: the plain
+    * single-window prefix sum (single task per source at scale). */
+  private def packedDocsNaive(documents: DataFrame,
+                              seqLen: Int = 256): DataFrame = {
+    val toks = documents
+      .select(col("doc_id"), col("source"),
+              split(TextAnalysis.normalized(col("text")), " ").as("ts"))
+      .filter(size(col("ts")) > 0 && col("ts").getItem(0) =!= "")
+      .select(col("doc_id"), col("source"),
+              size(col("ts")).cast("long").as("n_toks"))
+    toks.withColumn("start_off",
+        coalesce(
+          sum(col("n_toks")).over(
+            Window.partitionBy(col("source")).orderBy(col("doc_id"))
+              .rowsBetween(Window.unboundedPreceding, -1)),
+          lit(0L)))
+      .select(
+        col("doc_id"), col("source"), col("n_toks"), col("start_off"),
+        (col("start_off") / seqLen).cast("long").as("pack_first"),
+        ((col("start_off") + col("n_toks") - 1) / seqLen).cast("long")
+          .as("pack_last"))
+  }
+
   private lazy val packed = Packing.packedDocs(spark, sfDir).cache()
 
   test("hierarchical prefix sum equals the naive single-window result") {
-    val naive = Packing.packedDocsNaive(
-      Tables.load(spark, sfDir, "documents"))
+    val naive = packedDocsNaive(Tables.load(spark, sfDir, "documents"))
     assert(packed.count() > 0)
     assert(packed.exceptAll(naive).isEmpty && naive.exceptAll(packed).isEmpty)
   }

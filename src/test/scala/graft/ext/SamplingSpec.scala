@@ -1,11 +1,26 @@
 package graft.ext
 
-import graft.SparkSpec
+import graft.{SparkSpec, Tables}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Deterministic mixture sampling: reproducibility and rate shape. */
 class SamplingSpec extends SparkSpec {
   import spark.implicits._
+
+  /** Reference semantics for [[Sampling.reservoirSample]]: the naive
+    * global window (single task per source at scale). */
+  private def reservoirSampleNaive(k: Int): DataFrame = {
+    val w = Window.partitionBy(col("source"))
+      .orderBy(col("skey"), col("doc_id"))
+    Tables.load(spark, sfDir, "documents")
+      .select(col("source"), col("doc_id"),
+              md5(col("doc_id").cast("string")).as("skey"))
+      .withColumn("rnk", row_number().over(w).cast("long"))
+      .filter(col("rnk") <= k)
+      .select(col("source"), col("doc_id"), col("rnk"))
+  }
 
   test("mixture sample is deterministic across runs") {
     val a = Sampling.mixtureSample(spark, sfDir)
@@ -55,7 +70,7 @@ class SamplingSpec extends SparkSpec {
 
   test("reservoirSample: heap-partial result equals the naive window") {
     val got = Sampling.reservoirSample(spark, sfDir, k = 7)
-    val naive = Sampling.reservoirSampleNaive(spark, sfDir, k = 7)
+    val naive = reservoirSampleNaive(k = 7)
     assert(got.count() > 0)
     assert(got.exceptAll(naive).isEmpty && naive.exceptAll(got).isEmpty)
   }
