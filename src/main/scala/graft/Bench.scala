@@ -79,7 +79,8 @@ object Bench {
     val samples = (1 to reps).map { pass =>
       if (pass > 1) {
         ext.Memo.clearAll()
-        // NOT Bucketing.clearWriteMemo(): the bucket layout's cost model
+        // Fixture writes (the bucket layout, `Tables.writeOnce`) stay:
+        // the bucket layout's cost model
         // is write-once-amortize-forever, and the write is timed as its
         // own bucket_write_sec line item below — clearing it per pass
         // (round 8) charged every q149 sample the one-time layout build

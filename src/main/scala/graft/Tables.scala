@@ -69,11 +69,6 @@ object Tables {
     if (boundedDims(name)) org.apache.spark.sql.functions.broadcast(df) else df
   }
 
-  /** Register every table as a temp view (for spark.sql-based queries).
-    * View names match the DuckDB oracle's table names. */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
-
   /** Pinned testdata contract: the DDL each table must present AFTER
     * loading (post ts-normalization for events). The driver regenerated
     * the testdata mid-project once (events.ts NANOS→MICROS) and the only
@@ -115,8 +110,8 @@ object Tables {
     * The sanitized dir string is readable but NOT injective (`/a/b` and
     * `/a_b` both sanitize to `_a_b`), so a SHA-1 digest of the RAW dir
     * string is appended as the true discriminator — two distinct dirs
-    * can never share a fixture base, because the write-once memos would
-    * then silently serve one dir's data to the other dir's gate. */
+    * can never share a fixture base, because [[writeOnce]] would then
+    * silently serve one dir's data to the other dir's gate. */
   def scratchPath(prefix: String, dir: String): String = {
     val digest = java.security.MessageDigest.getInstance("SHA-1")
       .digest(dir.getBytes("UTF-8"))
@@ -124,5 +119,21 @@ object Tables {
     new java.io.File(sys.props("java.io.tmpdir"),
       prefix + "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_") +
         "_" + digest).getPath
+  }
+
+  private val written = scala.collection.mutable.Set.empty[String]
+
+  /** Run `write` the first time a fixture `path` is asked for in this
+    * JVM and return `path`: gates and bench samples then time the read
+    * the fixture exists for, not its one-time write. Keyed by the
+    * scratch path alone (from [[scratchPath]], so one path per source
+    * dir) — it holds no session, and a fixture written under one
+    * session serves every later one. A write that throws is not
+    * remembered, so the next call retries it. Kept apart from
+    * [[graft.ext.Memo]] on purpose: fixture files must outlive
+    * `Memo.clearAll()`, which every cold bench pass runs. */
+  def writeOnce(path: String)(write: => Unit): String = synchronized {
+    if (!written(path)) { write; written += path }
+    path
   }
 }

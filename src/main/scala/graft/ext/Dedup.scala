@@ -163,9 +163,10 @@ object Dedup {
     "spark.graft.dedup.collapseDupFraction"
 
   def minhashLsh(spark: SparkSession, dir: String,
-                 threshold: Double = 0.5): DataFrame =
+                 threshold: Double = 0.5,
+                 collapse: Option[Boolean] = None): DataFrame =
     minhashLshOf(spark, Tables.load(spark, dir, "documents"), threshold,
-      Some(shouldCollapse(spark, dupFractionDir(spark, dir, Nil))))
+      Some(shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil))))
 
   /** MinHash-LSH near-dup pairs over any (doc_id, text) frame, with an
     * EXACTNESS-PRESERVING defense against the one thing banded LSH
@@ -200,10 +201,9 @@ object Dedup {
     * direct pipeline runs byte-identically to before. */
   private[graft] def minhashLshOf(spark: SparkSession, docs: DataFrame,
                                   threshold: Double,
-                                  collapseDecision: Option[Boolean] = None)
+                                  collapse: Option[Boolean] = None)
       : DataFrame =
-    if (!collapseDecision.getOrElse(
-          shouldCollapse(spark, dupFraction(docs, Nil)))) {
+    if (!shouldCollapse(spark, collapse, dupFraction(docs, Nil))) {
       val sh = shingledOf(docs)
         .transform(Memo.persist)
       verifiedLshPairs(spark, docs, sh, threshold)
@@ -353,23 +353,26 @@ object Dedup {
     spark.conf.getOption(CollapseDupFractionKey)
       .map(_.toDouble).getOrElse(0.05)
 
-  /** The collapse decision, with the probe short-circuited when the
-    * conf pins the outcome: a threshold <= 0 forces collapse and > 1
-    * forces direct WITHOUT running (or consulting) the corpus probe —
-    * the probe job is pure waste then. No clamp on the measured
+  /** The collapse decision. `collapse` is the caller's pinned
+    * decision (the `*Collapsed` gates pass `Some(true)`); `None`
+    * measures it against [[CollapseDupFractionKey]]. The probe is
+    * short-circuited when the outcome is pinned: by the argument, or by
+    * a threshold <= 0 (forces collapse) or > 1 (forces direct) — the
+    * probe job is pure waste then. No clamp on the measured
     * fraction any more (round 13): below [[ExactDistinctThreshold]]
     * the probe is exact (never negative), and above it a residual
     * HLL overshoot of a few percent on a dup-free corpus reads as a
     * small negative fraction, which compares against the positive
     * threshold exactly as zero would — the raw value stays honest
     * in logs instead of being silently rewritten. */
-  private def shouldCollapse(spark: SparkSession,
-                             frac: => Double): Boolean = {
-    val minFrac = collapseMinFrac(spark)
-    if (minFrac <= 0.0) true
-    else if (minFrac > 1.0) false
-    else frac >= minFrac
-  }
+  private def shouldCollapse(spark: SparkSession, collapse: Option[Boolean],
+                             frac: => Double): Boolean =
+    collapse.getOrElse {
+      val minFrac = collapseMinFrac(spark)
+      if (minFrac <= 0.0) true
+      else if (minFrac > 1.0) false
+      else frac >= minFrac
+    }
 
   /** The shared exact-duplicate collapse for every pair family (the
     * SCALE.md "mega-bucket defense"): group docs with identical
@@ -455,33 +458,22 @@ object Dedup {
     * the direct pipeline — it replays the q26 DuckDB oracle verbatim. */
   def minhashLshCollapsed(spark: SparkSession, dir: String,
                           threshold: Double = 0.5): DataFrame =
-    withForcedCollapse(spark)(minhashLsh(spark, dir, threshold))
+    minhashLsh(spark, dir, threshold, collapse = Some(true))
 
   /** Forced-collapse twins for the other three pair families — same
     * purpose as [[minhashLshCollapsed]]: the gates replay each direct
     * operator's DuckDB oracle verbatim through the collapsed plan. */
   def simhashPairsCollapsed(spark: SparkSession, dir: String,
                             maxHam: Int = 3): DataFrame =
-    withForcedCollapse(spark)(simhashPairs(spark, dir, maxHam))
+    simhashPairs(spark, dir, maxHam, collapse = Some(true))
 
   def jaccardPairsCollapsed(spark: SparkSession, dir: String,
                             threshold: Double = 0.5): DataFrame =
-    withForcedCollapse(spark)(jaccardPairs(spark, dir, threshold))
+    jaccardPairs(spark, dir, threshold, collapse = Some(true))
 
   def containmentPairsCollapsed(spark: SparkSession, dir: String,
                                 threshold: Double = 0.9): DataFrame =
-    withForcedCollapse(spark)(containmentPairs(spark, dir, threshold))
-
-  /** Run `body` with the exact-duplicate collapse forced on. The
-    * collapse decision is read eagerly on the driver while the plan is
-    * built, so the conf can be restored as soon as `body` returns. */
-  private def withForcedCollapse[T](spark: SparkSession)(body: => T): T = {
-    val prev = spark.conf.getOption(CollapseDupFractionKey)
-    spark.conf.set(CollapseDupFractionKey, "0.0")
-    try body
-    finally prev.fold(spark.conf.unset(CollapseDupFractionKey))(v =>
-      spark.conf.set(CollapseDupFractionKey, v))
-  }
+    containmentPairs(spark, dir, threshold, collapse = Some(true))
 
   /** The candidate + exact-verify tail of the LSH pipeline over a
     * shingle table, with the AMS-estimate-driven broadcast-vs-shuffle
@@ -574,7 +566,7 @@ object Dedup {
     // defense as the verify families: identical docs ⇒ identical
     // signatures ⇒ m = 32 and Ĉ = 32·2n/(64·n) = exactly 1.0 for
     // intra-group pairs; rep estimates transfer to members unchanged
-    if (!shouldCollapse(spark, dupFractionDir(spark, dir, Nil)))
+    if (!shouldCollapse(spark, None, dupFractionDir(spark, dir, Nil)))
       containmentEstimateOf(docs)
     else collapseExpand(docs, Nil,
       Seq("m" -> lit(32L), "est_cont" -> lit(1.0)),
@@ -719,8 +711,8 @@ object Dedup {
     * negligible through billions of docs — at the bounded cost of
     * C(h+3,3) keys per doc (20 at maxHam=3) instead of h+1. Candidate
     * volume then scales with TRUE pair volume, not n². */
-  def simhashPairs(spark: SparkSession, dir: String,
-                   maxHam: Int = 3): DataFrame = {
+  def simhashPairs(spark: SparkSession, dir: String, maxHam: Int = 3,
+                   collapse: Option[Boolean] = None): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val np = graft.ops.Partitioning.forTable(
       spark, dir, "documents", SimhashExpansion)
@@ -729,7 +721,7 @@ object Dedup {
     // exposure as LSH banding, defended the identical way (collapse to
     // representatives, expand back; hamming(x, y) = hamming(repA, repB)
     // because equal normalized text gives equal fingerprints)
-    if (!shouldCollapse(spark, dupFractionDir(spark, dir, Nil)))
+    if (!shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil)))
       simhashPairsOf(docs, maxHam, np)
     else collapseExpand(docs, Nil, Seq("hamming" -> lit(0)),
       intraQualifies = maxHam >= 0, repDocs => {
@@ -838,14 +830,16 @@ object Dedup {
   }
 
   def jaccardPairs(spark: SparkSession, dir: String,
-                   threshold: Double = 0.5): DataFrame = {
+                   threshold: Double = 0.5,
+                   collapse: Option[Boolean] = None): DataFrame = {
     val docs0 = Tables.load(spark, dir, "documents")
     // exact-dup groups defeat prefix filtering too: k identical docs
     // all emit the same rarity prefix, giving k²/2 candidates that each
     // carry two full word-set arrays — collapse to representatives
     // (grouped WITHIN source: the operator only pairs same-source docs,
     // and the group key must never cross a boundary the join respects)
-    if (!shouldCollapse(spark, dupFractionDir(spark, dir, Seq("source"))))
+    if (!shouldCollapse(spark, collapse,
+          dupFractionDir(spark, dir, Seq("source"))))
       jaccardPairsOf(docs0, threshold)
     else collapseExpand(docs0, Seq("source"), Seq("jac" -> lit(1.0)),
       intraQualifies = threshold <= 1.0, repDocs =>
@@ -989,11 +983,13 @@ object Dedup {
     * intersect verifies; int/int → double division is bit-deterministic
     * (same argument as [[jaccardPairs]]). */
   def containmentPairs(spark: SparkSession, dir: String,
-                       threshold: Double = 0.9): DataFrame = {
+                       threshold: Double = 0.9,
+                       collapse: Option[Boolean] = None): DataFrame = {
     val docs0 = Tables.load(spark, dir, "documents")
     // same collapse as jaccardPairs (cont(x, y) = cont(repA, repB) for
     // element-wise-equal word sets; identical docs have cont = n/n = 1)
-    if (!shouldCollapse(spark, dupFractionDir(spark, dir, Seq("source"))))
+    if (!shouldCollapse(spark, collapse,
+          dupFractionDir(spark, dir, Seq("source"))))
       containmentPairsOf(docs0, threshold)
     else collapseExpand(docs0, Seq("source"), Seq("cont" -> lit(1.0)),
       intraQualifies = threshold <= 1.0, repDocs =>
@@ -1519,12 +1515,13 @@ object Dedup {
     * row-identical; q232 replays this oracle through the forced
     * collapsed plan. */
   def incrementalNearDedup(spark: SparkSession, dir: String,
-                           threshold: Double = 0.5): DataFrame = {
+                           threshold: Double = 0.5,
+                           collapse: Option[Boolean] = None): DataFrame = {
     val docs = Tables.load(spark, dir, "documents")
     val isNew = length(col("source")) > 4
     val corpus = docs.filter(!isNew).select(col("doc_id"), col("text"))
     val batch = docs.filter(isNew).select(col("doc_id"), col("text"))
-    if (shouldCollapse(spark, dupFractionDir(spark, dir, Nil)))
+    if (shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil)))
       probeNearDupIndex(nearDupIndexOf(corpus), batch, threshold)
     else incrementalNearDedupDirect(corpus, batch, threshold)
   }
@@ -1534,7 +1531,7 @@ object Dedup {
     * direct oracle row-for-row. */
   def incrementalNearDedupCollapsed(spark: SparkSession, dir: String,
                                     threshold: Double = 0.5): DataFrame =
-    withForcedCollapse(spark)(incrementalNearDedup(spark, dir, threshold))
+    incrementalNearDedup(spark, dir, threshold, collapse = Some(true))
 
   /** The direct (uncollapsed) batch×corpus probe — correct and cheapest
     * on dup-light corpora, where the fp-group shuffles would buy

@@ -31,7 +31,18 @@ import scala.collection.concurrent.TrieMap
   * Builds run outside any lock (TrieMap.getOrElseUpdate), because memo
   * builds nest — survivingDocs → clusterLabelsCached → jaccardPairsCached
   * — and a recursive ConcurrentHashMap.computeIfAbsent throws. Two
-  * threads racing on one cold key may both build; one result wins. */
+  * threads racing on one cold key may both build; one result wins.
+  *
+  * Three kinds of cross-call state stay out, each with its own lifetime:
+  *  - `Partitioning.bytesMemo` is keyed by path and holds no session;
+  *    the testdata it measures is immutable, so no cold start needs to
+  *    forget it.
+  *  - `Streams.eventsFamilyCache` rides a bounded run's memory sink, so
+  *    its lifetime is tied to `Streams.dropBoundedSinks`, which drops
+  *    both together.
+  *  - Fixture writes (`graft.Tables.writeOnce`, `Bucketing.ensureWritten`)
+  *    must survive [[clearAll]]: each cold pass times the reads a
+  *    fixture serves, not its one-time write. */
 private[graft] object Memo {
 
   final class Table[K, V] private[Memo] (val name: String) {

@@ -215,23 +215,6 @@ object Multimodal {
 
   // ---- production nested image layout + metadata-only reads ---------
 
-  /** One write per (session, dir) — the q149 bucket-layout memo
-    * discipline: the layout is built once, every metadata read
-    * amortizes it. A Set, not a single slot: alternating dirs (the
-    * smoke's 1×/10× loop) must not evict each other's entry and
-    * re-encode the whole layout per call. If the SOURCE testdata is
-    * regenerated mid-session, call [[clearLayoutMemo]] so the fixture
-    * rebuilds from the fresh table. */
-  private val imageLayoutWritten =
-    scala.collection.mutable.Set.empty[(SparkSession, String)]
-
-  /** Drop the image-layout write memo (fixture-freshness hook). */
-  def clearLayoutMemo(): Unit =
-    synchronized { imageLayoutWritten.clear() }
-
-  private def imageLayoutPath(dir: String): String =
-    graft.Tables.scratchPath("graft_imgtable", dir)
-
   /** Write the PRODUCTION multimodal table layout: one nested column
     * `image: struct<path, format, width, height, data>` per row — typed
     * metadata and the opaque payload travel together (how large-scale
@@ -239,23 +222,21 @@ object Multimodal {
     * ImageSchema struct), so metadata queries can prune the payload
     * LEAF of the struct at the parquet reader instead of reading blobs.
     * Payload bytes are the real encoded images of [[mediaTable]];
-    * encoding runs on executors. */
-  def writeImageLayout(spark: SparkSession, dir: String): String =
-    synchronized {
-      val path = imageLayoutPath(dir)
-      if (!imageLayoutWritten.contains((spark, dir))) {
-        mediaTable(spark, dir)
-          .select(col("media_id").as("doc_id"),
-            struct(
-              concat(lit("img/"), col("format"), lit("/"),
-                     col("media_id"), lit("."), col("format")).as("path"),
-              col("format"), col("width"), col("height"),
-              col("payload").as("data")).as("image"))
-          .write.mode("overwrite").parquet(path)
-        imageLayoutWritten += ((spark, dir))
-      }
-      path
+    * encoding runs on executors. Written once per dir
+    * ([[graft.Tables.writeOnce]]): every metadata read amortizes it. */
+  def writeImageLayout(spark: SparkSession, dir: String): String = {
+    val path = graft.Tables.scratchPath("graft_imgtable", dir)
+    graft.Tables.writeOnce(path) {
+      mediaTable(spark, dir)
+        .select(col("media_id").as("doc_id"),
+          struct(
+            concat(lit("img/"), col("format"), lit("/"),
+                   col("media_id"), lit("."), col("format")).as("path"),
+            col("format"), col("width"), col("height"),
+            col("payload").as("data")).as("image"))
+        .write.mode("overwrite").parquet(path)
     }
+  }
 
   /** Metadata-only summary over the nested layout: per format, counts
     * and exact integer dimension sums — WITHOUT touching a payload

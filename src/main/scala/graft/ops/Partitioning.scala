@@ -28,7 +28,7 @@ import org.apache.spark.sql.SparkSession
   * every operator keeps today's session sizing and this helper is a
   * no-op; it only raises the count once the data demands it, and one
   * operator's raise never leaks into another's plan (scoped via
-  * [[withShufflePartitions]] or an explicit repartition).
+  * by [[materialized]] or an explicit repartition).
   *
   * The 16 MB default target is deliberately below AQE's 64 MB
   * advisory: pair-family shuffle rows are WIDE (sorted hash-set
@@ -92,46 +92,10 @@ object Partitioning {
                expansion: Double): Int =
     forBytes(spark, tableBytes(spark, dir, table), expansion)
 
-  /** Run `body` with `spark.sql.shuffle.partitions` set to `n`,
-    * restoring the previous value afterwards. Spark reads the conf at
-    * PHYSICAL PLANNING time (i.e. when an action runs), so this scope
-    * only governs work that is actually EXECUTED inside `body` — the
-    * memoized pair-table builders materialize their persist inside the
-    * scope for exactly that reason. Scoping (rather than setting the
-    * session conf and leaving it) is what keeps one operator's derived
-    * count from silently becoming every later operator's default —
-    * the cross-operator pessimization the 100× smoke measured.
-    *
-    * Scopes are serialized PER SESSION (reentrant, so nesting is
-    * fine): the session conf is session-global state, and two
-    * interleaved scopes on the same session would otherwise each
-    * "restore" the other's raised count, leaving it leaked for the
-    * session's lifetime — but two DIFFERENT sessions mutate disjoint
-    * conf, so a JVM-wide lock would only serialize their (potentially
-    * count()-long) builds for nothing. Work planned by OTHER threads
-    * of the SAME session while a scope is open still sees the raised
-    * count — inherent to session-conf scoping; callers that need full
-    * isolation should use an explicit `repartition(n)` instead. */
-  def withShufflePartitions[T](spark: SparkSession, n: Int)(body: => T): T =
-    scopeLockOf(spark).synchronized {
-      val key = "spark.sql.shuffle.partitions"
-      val prev = spark.conf.getOption(key)
-      spark.conf.set(key, n.toString)
-      try body
-      finally prev.fold(spark.conf.unset(key))(v => spark.conf.set(key, v))
-    }
-
-  // one lock object per session, weakly held so stopped sessions are
-  // collectable; computeIfAbsent gives atomic create-or-get
-  private val scopeLocks =
-    java.util.Collections.synchronizedMap(
-      new java.util.WeakHashMap[SparkSession, Object]())
-  private def scopeLockOf(spark: SparkSession): Object =
-    scopeLocks.computeIfAbsent(spark, _ => new Object)
-
-  /** Materialize `build` (persist MEMORY_AND_DISK + count) inside a
-    * [[withShufflePartitions]] scope of `n`, registered with
-    * [[graft.ext.Memo]] so its cold drain releases the blocks. This is
+  /** Materialize `build` (persist MEMORY_AND_DISK + count) with
+    * `spark.sql.shuffle.partitions` scoped to `n` by
+    * [[SessionConf.scoped]], registered with [[graft.ext.Memo]] so its
+    * cold drain releases the blocks. This is
     * the ONE shared discipline for every memoized pair/fingerprint
     * table: the persist must be planned AND run inside the scope
     * (cached plans are not re-partitioned by AQE), and the raised count
@@ -140,7 +104,7 @@ object Partitioning {
   def materialized(spark: SparkSession, n: Int)
                   (build: => org.apache.spark.sql.DataFrame)
       : org.apache.spark.sql.DataFrame =
-    withShufflePartitions(spark, n) {
+    SessionConf.scoped(spark, "spark.sql.shuffle.partitions" -> n.toString) {
       val df = graft.ext.Memo.persist(build)
       df.count() // plan + run inside the scope; consumers reuse the cache
       df

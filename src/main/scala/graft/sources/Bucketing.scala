@@ -44,9 +44,6 @@ object Bucketing {
     * key includes the session so a fresh session rewrites.) */
   private var written: Option[(SparkSession, String, Int)] = None
 
-  /** Drop the write memo (bench-harness hook for cold re-measurement). */
-  def clearWriteMemo(): Unit = synchronized { written = None }
-
   /** Perform the memoized layout write ONLY (no join) — the bench hook
     * that lets the one-time bucket-write cost be timed as its own line
     * item instead of riding inside every q149 sample (round-8 verdict:

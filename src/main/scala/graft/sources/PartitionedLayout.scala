@@ -19,37 +19,18 @@ import org.apache.spark.sql.functions._
   * the day filter appears as a PartitionFilter, not a data filter). */
 object PartitionedLayout {
 
-  /** One layout write per (session, dir) — the bucket-layout memo
-    * discipline: the fixture is built once, every pruned read
-    * amortizes it, so repeated gate/bench samples time the SCAN the
-    * layout enables rather than re-paying the rewrite. Distinct dirs
-    * get distinct bases, so the smoke's 1×/10× alternation is safe. */
-  private val partitionedWritten =
-    scala.collection.mutable.Set.empty[(SparkSession, String)]
-
-  /** Drop both fixture-write memos (fixture-freshness hook: call after
-    * regenerating the SOURCE testdata mid-session so the derived
-    * layouts rebuild from the fresh tables; driver runs fork a new JVM
-    * per round, so they never need this). */
-  def clearLayoutMemos(): Unit = synchronized {
-    partitionedWritten.clear()
-    vintagesWritten.clear()
-  }
-
-  /** Write events partitioned by day under a scratch base (memoized
-    * per (session, dir)); returns the base path. */
+  /** Write events partitioned by day under a scratch base, once per
+    * dir ([[graft.Tables.writeOnce]]: every pruned read amortizes the
+    * layout, so repeated gate/bench samples time the SCAN it enables
+    * rather than re-paying the rewrite); returns the base path. */
   private[sources] def writePartitioned(spark: SparkSession,
                                         dir: String): String = {
     val base = graft.Tables.scratchPath("graft_part_layout", dir)
-    synchronized {
-      if (!partitionedWritten.contains((spark, dir))) {
-        graft.Tables.load(spark, dir, "events")
-          .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
-          .write.mode(SaveMode.Overwrite).partitionBy("d").parquet(base)
-        partitionedWritten += ((spark, dir))
-      }
+    graft.Tables.writeOnce(base) {
+      graft.Tables.load(spark, dir, "events")
+        .withColumn("d", date_format(col("ts"), "yyyy-MM-dd"))
+        .write.mode(SaveMode.Overwrite).partitionBy("d").parquet(base)
     }
-    base
   }
 
   /** The pruned scan (exposed for the plan spec): a 7-day band filter
@@ -93,25 +74,18 @@ object PartitionedLayout {
     * stays a plain pruned columnar scan. Production pins the merged
     * schema in a catalog instead of re-inferring per query — the gate's
     * explicit `mergeSchema` read is the bootstrap path. */
-  private val vintagesWritten =
-    scala.collection.mutable.Set.empty[(SparkSession, String)]
-
   def mergeSchemaGate(spark: SparkSession, dir: String): DataFrame = {
     val base = graft.Tables.scratchPath("graft_evolve", dir)
-    // fixture memo (see writePartitioned): both writer vintages are
-    // built once per (session, dir); the gate times the mergeSchema
-    // READ, which is the operator under test
-    synchronized {
-      if (!vintagesWritten.contains((spark, dir))) {
-        val docs = graft.Tables.load(spark, dir, "documents")
-        docs.filter(col("doc_id") % 2 === 0)
-          .select(col("doc_id"), col("source"), col("n_chars"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$base/v1")
-        docs.filter(col("doc_id") % 2 =!= 0)
-          .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$base/v2")
-        vintagesWritten += ((spark, dir))
-      }
+    // both writer vintages are written once per dir; the gate times the
+    // mergeSchema READ, which is the operator under test
+    graft.Tables.writeOnce(base) {
+      val docs = graft.Tables.load(spark, dir, "documents")
+      docs.filter(col("doc_id") % 2 === 0)
+        .select(col("doc_id"), col("source"), col("n_chars"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/v1")
+      docs.filter(col("doc_id") % 2 =!= 0)
+        .select(col("doc_id"), col("source"), col("n_chars"), col("lang"))
+        .write.mode(SaveMode.Overwrite).parquet(s"$base/v2")
     }
     spark.read.option("mergeSchema", "true")
       .parquet(s"$base/v1", s"$base/v2")

@@ -261,28 +261,20 @@ object Sources {
     *
     * Scale: rendering and reading are map-side line ops; PERMISSIVE
     * parsing is the same single pass as strict parsing. */
-  private val corruptFeedWritten =
-    scala.collection.mutable.Set.empty[(SparkSession, String)]
-
   def corruptIngestGate(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.functions._
     import org.apache.spark.sql.types._
+    // the corrupted feed is written once per dir; the gate times the
+    // PERMISSIVE ingest, which is the operator under test
     val base = graft.Tables.scratchPath("graft_corrupt_gate", dir)
-    // fixture memo (PartitionedLayout.writePartitioned discipline): the
-    // corrupted feed is written once per (session, dir); the gate
-    // times the PERMISSIVE ingest, which is the operator under test
-    synchronized {
-      if (!corruptFeedWritten.contains((spark, dir))) {
-        val docs = graft.Tables.load(spark, dir, "documents")
-        docs.select(
-            when(col("doc_id") % 17 === 3,
-              expr("substring(to_json(struct(doc_id, source, n_chars)), 1, " +
-                   "length(to_json(struct(doc_id, source, n_chars))) - 5)"))
-              .otherwise(expr("to_json(struct(doc_id, source, n_chars))"))
-              .as("value"))
-          .write.mode(SaveMode.Overwrite).text(base)
-        corruptFeedWritten += ((spark, dir))
-      }
+    graft.Tables.writeOnce(base) {
+      graft.Tables.load(spark, dir, "documents").select(
+          when(col("doc_id") % 17 === 3,
+            expr("substring(to_json(struct(doc_id, source, n_chars)), 1, " +
+                 "length(to_json(struct(doc_id, source, n_chars))) - 5)"))
+            .otherwise(expr("to_json(struct(doc_id, source, n_chars))"))
+            .as("value"))
+        .write.mode(SaveMode.Overwrite).text(base)
     }
     val schema = StructType(Seq(
       StructField("doc_id", LongType), StructField("source", StringType),

@@ -339,8 +339,4 @@ object Parser {
     new Parser(Lexer.tokenize(sql)).statement()
   def parseScript(sql: String): Vector[Ast.Statement] =
     new Parser(Lexer.tokenize(sql)).script()
-  def parseSelect(sql: String): Ast.Select = {
-    val p = new Parser(Lexer.tokenize(sql))
-    p.select()
-  }
 }

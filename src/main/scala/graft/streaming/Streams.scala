@@ -234,21 +234,10 @@ object Streams {
     //     methodology — showed 1 partition tripling the dedup gate, so
     //     the default is 4: enough stores to spread commit work, few
     //     enough that per-store lifecycle overhead stays small).
-    // Both are session confs — set around the run, restored after (the
-    // query pins its state partition count at first start from its own
-    // checkpoint, so batch queries in the session are unaffected).
-    val conf = spark.conf
-    val prevNoData =
-      conf.getOption("spark.sql.streaming.noDataMicroBatches.enabled")
-    val prevParts = conf.getOption("spark.sql.shuffle.partitions")
-    val prevProvider =
-      conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    val changelogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-    val prevChangelog = conf.getOption(changelogKey)
-    conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-             noDataBatch.toString)
-    conf.set("spark.sql.shuffle.partitions", parts.toString)
+    // Both are session confs, scoped around the run (the query pins its
+    // state partition count at first start from its own checkpoint, so
+    // batch queries in the session are unaffected).
+    //
     // State store backend. RocksDB is the PRODUCTION choice for
     // 100 TB keyed state (dedup keys, open sessions, HLL registers):
     // state lives off-heap/on-disk in an embedded LSM instead of the
@@ -275,34 +264,24 @@ object Streams {
       case false => "org.apache.spark.sql.execution.streaming." +
         "state.HDFSBackedStateStoreProvider"
     }
-    conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     // Changelog checkpointing: per-batch state durability ships the
     // batch's DELTA instead of a full RocksDB snapshot — the production
     // setting for incremental state at scale, and it also trims the
-    // bounded runs' per-batch commit cost. (Restored after the run
-    // like every other conf this method touches.)
-    conf.set(changelogKey, "true")
-    val q =
-      try {
-        val started = df.writeStream.format("memory").queryName(name)
-          .option("checkpointLocation", s"$ckptBase/graft_ckpt_$name")
-          .outputMode(mode).trigger(Trigger.AvailableNow()).start()
-        started.awaitTermination()
-        lastBatchesAcc.set(
-          Option(started.lastProgress).fold(-1L)(_.batchId + 1L))
-        started
-      } finally {
-        prevNoData.fold(
-          conf.unset("spark.sql.streaming.noDataMicroBatches.enabled"))(v =>
-          conf.set("spark.sql.streaming.noDataMicroBatches.enabled", v))
-        prevParts.fold(conf.unset("spark.sql.shuffle.partitions"))(v =>
-          conf.set("spark.sql.shuffle.partitions", v))
-        prevProvider.fold(
-          conf.unset("spark.sql.streaming.stateStore.providerClass"))(v =>
-          conf.set("spark.sql.streaming.stateStore.providerClass", v))
-        prevChangelog.fold(conf.unset(changelogKey))(v =>
-          conf.set(changelogKey, v))
-      }
+    // bounded runs' per-batch commit cost.
+    graft.ops.SessionConf.scoped(spark,
+        "spark.sql.streaming.noDataMicroBatches.enabled" ->
+          noDataBatch.toString,
+        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.streaming.stateStore.providerClass" -> provider,
+        ("spark.sql.streaming.stateStore.rocksdb." +
+          "changelogCheckpointing.enabled") -> "true") {
+      val started = df.writeStream.format("memory").queryName(name)
+        .option("checkpointLocation", s"$ckptBase/graft_ckpt_$name")
+        .outputMode(mode).trigger(Trigger.AvailableNow()).start()
+      started.awaitTermination()
+      lastBatchesAcc.set(
+        Option(started.lastProgress).fold(-1L)(_.batchId + 1L))
+    }
     // state-footprint probe (dev measurement), then best-effort cleanup
     // of the throwaway checkpoint
     try {

@@ -286,6 +286,29 @@ class DedupSpec extends SparkSpec {
       v => spark.conf.set(Dedup.CollapseDupFractionKey, v))
   }
 
+  test("a forced-collapse twin never writes the collapse key") {
+    // the twin's decision is an argument: another thread of the session
+    // polling the threshold key while q193's operator builds and runs
+    // must never see it set, and the twin still equals the direct plan
+    val key = Dedup.CollapseDupFractionKey
+    assert(spark.conf.getOption(key).isEmpty)
+    val seen = new java.util.concurrent.atomic.AtomicReference[String]()
+    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (!done.get)
+        spark.conf.getOption(key).foreach(seen.compareAndSet(null, _)))
+    poller.start()
+    val collapsed =
+      try Dedup.minhashLshCollapsed(spark, sfDir)
+        .collect().map(_.toString).sorted.toSeq
+      finally { done.set(true); poller.join() }
+    assert(seen.get == null, s"another thread saw $key = ${seen.get}")
+    val direct = Dedup.minhashLsh(spark, sfDir, collapse = Some(false))
+      .collect().map(_.toString).sorted.toSeq
+    assert(direct.nonEmpty)
+    assert(collapsed == direct)
+  }
+
   test("simhash pairs are within the Hamming bound, found via chunks") {
     val pairs = Dedup.simhashPairs(spark, sfDir, maxHam = 3).cache()
     assert(pairs.count() > 0)

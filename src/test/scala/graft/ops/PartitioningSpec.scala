@@ -57,40 +57,96 @@ class PartitioningSpec extends SparkSpec {
     assert(Partitioning.tableBytes(spark, dir, "late") == after)
   }
 
+  private val partsKey = "spark.sql.shuffle.partitions"
+  private def scope[T](n: Int)(body: => T): T =
+    SessionConf.scoped(spark, partsKey -> n.toString)(body)
+
   test("interleaved scopes on two threads never clobber the restored conf") {
-    val key = "spark.sql.shuffle.partitions"
+    val key = partsKey
     val before = spark.conf.get(key)
-    val t = new Thread(() =>
-      Partitioning.withShufflePartitions(spark, 11) { Thread.sleep(50) })
+    val t = new Thread(() => scope(11) { Thread.sleep(50) })
     t.start()
-    Partitioning.withShufflePartitions(spark, 13) { Thread.sleep(50) }
+    scope(13) { Thread.sleep(50) }
     t.join()
     assert(spark.conf.get(key) == before,
       "scopes must serialize; an interleaved restore would leak a count")
     // reentrant nesting restores through both layers
-    Partitioning.withShufflePartitions(spark, 5) {
-      Partitioning.withShufflePartitions(spark, 6) {
+    scope(5) {
+      scope(6) {
         assert(spark.conf.get(key) == "6")
       }
       assert(spark.conf.get(key) == "5")
     }
     assert(spark.conf.get(key) == before)
+
+    // A bounded stream takes the same scope. Thread A holds a build's
+    // scope of 7 while thread B starts a bounded gate; A is released
+    // only once B's query has started (a stream that sets its conf
+    // beside A's scope) or B waits on the scope's lock. A stream that
+    // saved A's 7 would "restore" it after A restored the original.
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import StreamingQueryListener._
+    val held = new CountDownLatch(1)
+    val release = new CountDownLatch(1)
+    val a = new Thread(() => scope(7) { held.countDown(); release.await() })
+    a.start()
+    assert(held.await(60, TimeUnit.SECONDS))
+    val started = new CountDownLatch(1)
+    val listener = new StreamingQueryListener {
+      // started events reach listeners on the stream's own thread
+      // before its first batch: hold the stream there until A is done
+      override def onQueryStarted(e: QueryStartedEvent): Unit = {
+        started.countDown(); a.join()
+      }
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+    }
+    spark.streams.addListener(listener)
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val b = new Thread(() =>
+      try graft.streaming.Streams.hourlyAggAvailableNow(spark, sfDir)
+      catch { case t: Throwable => errors.add(t) })
+    try {
+      b.start()
+      def waitsOnScope = b.getState == Thread.State.BLOCKED &&
+        b.getStackTrace.exists(_.getClassName.startsWith(
+          "graft.ops.SessionConf"))
+      val deadline = System.nanoTime() + TimeUnit.SECONDS.toNanos(120)
+      while (started.getCount > 0 && !waitsOnScope && b.isAlive &&
+             System.nanoTime() < deadline) Thread.sleep(5)
+      release.countDown()
+      a.join()
+      b.join()
+    } finally spark.streams.removeListener(listener)
+    assert(errors.isEmpty, s"bounded gate threw: ${errors.peek()}")
+    assert(spark.conf.get(key) == before,
+      "a bounded stream beside a build's scope must not leak its count")
   }
 
-  test("withShufflePartitions scopes the conf and restores it, even on throw") {
-    val key = "spark.sql.shuffle.partitions"
+  test("SessionConf.scoped scopes the conf and restores it, even on throw") {
+    val key = partsKey
     val before = spark.conf.get(key)
-    val inside = Partitioning.withShufflePartitions(spark, 7) {
+    val inside = scope(7) {
       spark.conf.get(key)
     }
     assert(inside == "7")
     assert(spark.conf.get(key) == before)
     intercept[RuntimeException] {
-      Partitioning.withShufflePartitions(spark, 9) {
+      scope(9) {
         throw new RuntimeException("boom")
       }
     }
     assert(spark.conf.get(key) == before, "conf must restore on failure")
+    // several keys at once; a key unset before is unset again after
+    val unsetKey = "spark.graft.test.scopedUnset"
+    assert(spark.conf.getOption(unsetKey).isEmpty)
+    SessionConf.scoped(spark, key -> "3", unsetKey -> "x") {
+      assert(spark.conf.get(key) == "3")
+      assert(spark.conf.get(unsetKey) == "x")
+    }
+    assert(spark.conf.get(key) == before)
+    assert(spark.conf.getOption(unsetKey).isEmpty)
   }
 
   test("two concurrent materialized builds each plan at their OWN count") {
@@ -129,7 +185,7 @@ class PartitioningSpec extends SparkSpec {
 
   test("an action inside the scope plans its exchanges at the scoped count") {
     import spark.implicits._
-    val n = Partitioning.withShufflePartitions(spark, 6) {
+    val n = scope(6) {
       // AQE would coalesce the post-shuffle read, so assert on the rdd
       // partition count of a plain non-adaptive groupBy execution
       val prev = spark.conf.get("spark.sql.adaptive.enabled")
