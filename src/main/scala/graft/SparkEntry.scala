@@ -620,15 +620,15 @@ object SparkEntry {
     // LSH with exact-dup group collapse forced on: must be row-identical
     // to q26 (the mega-bucket defense is exact, not approximate)
     "q193_dedup_minhash_collapsed" -> ((s: SparkSession, d: String) =>
-      ext.Dedup.minhashLshCollapsed(s, d)),
+      ext.Dedup.minhashLsh(s, d, collapse = Some(true))),
     // the same forced-collapse exactness proof for the other three pair
     // families (each replays its direct twin's oracle verbatim)
     "q194_dedup_simhash_collapsed" -> ((s: SparkSession, d: String) =>
-      ext.Dedup.simhashPairsCollapsed(s, d)),
+      ext.Dedup.simhashPairs(s, d, collapse = Some(true))),
     "q195_jaccard_collapsed" -> ((s: SparkSession, d: String) =>
-      ext.Dedup.jaccardPairsCollapsed(s, d, 0.8)),
+      ext.Dedup.jaccardPairs(s, d, 0.8, collapse = Some(true))),
     "q196_containment_collapsed" -> ((s: SparkSession, d: String) =>
-      ext.Dedup.containmentPairsCollapsed(s, d)),
+      ext.Dedup.containmentPairs(s, d, collapse = Some(true))),
     // DSIR importance-resampling data selection (hashed-bigram LM ratio)
     "q197_dsir_select" -> ((s: SparkSession, d: String) =>
       ext.Selection.dsirSelect(s, d)),
@@ -767,7 +767,7 @@ object SparkEntry {
     // probe plan (one row per distinct fingerprint on BOTH sides) must
     // replay the direct oracle row-for-row (the q193 pattern)
     "q232_incr_near_dedup_collapsed" -> ((s: SparkSession, d: String) =>
-      ext.Dedup.incrementalNearDedupCollapsed(s, d)),
+      ext.Dedup.incrementalNearDedup(s, d, collapse = Some(true))),
     // two-batch standing-index maintenance: batch 1 probed + novel
     // docs ADMITTED, batch 2 probed against the UPDATED index
     "q233_neardup_index_2batch" -> ((s: SparkSession, d: String) =>

@@ -21,6 +21,21 @@ import graft.functions.SimHash64
   * skew. The only quadratic work is *within* candidate buckets, which is
   * the LSH contract. Jaccard verification joins the (small) candidate
   * pair set back to per-doc token sets — never a full cross join.
+  *
+  * The pair families share one filter → verify core:
+  *  - one collapse router, [[collapseExpand]]: it takes the family's
+  *    group scope once (the dup probe's scope and the group key), the
+  *    caller's `collapse` decision, and the family itself, and runs the
+  *    family either over the documents as they are or over one
+  *    representative per exact-duplicate group, expanding pairs back;
+  *  - one MinHash front, [[signatures]] and [[bandKey]], and one
+  *    shingle-Jaccard verify, [[jaccardAtLeast]], shared by the LSH
+  *    self-join, the standing-index probe, the direct batch×corpus
+  *    probe and the streaming dedup;
+  *  - one pair-budget guard, [[pairBudgetGuard]], for the exact
+  *    token-keyed families (jaccard, containment).
+  * Their candidate stages ([[candidatePairsOfSig]], [[probeCandidates]],
+  * [[directProbeCandidates]]) are the frames the scale smoke counts.
   */
 object Dedup {
 
@@ -51,9 +66,13 @@ object Dedup {
                        rnd.nextInt(Int.MaxValue).toLong)
   }
 
-  /** doc_id + sorted distinct word-3-gram shingle hashes (array<long>),
-    * via the codegen'd [[graft.functions.HashShingles]] (the interpreted
-    * higher-order `transform` lambda this replaces was ~20x slower).
+  /** doc_id + sorted distinct word-3-gram shingle hashes (array<long>)
+    * over any (doc_id, text) frame, via the codegen'd
+    * [[graft.functions.HashShingles]] (the interpreted higher-order
+    * `transform` lambda this replaces was ~20x slower). Every stage is
+    * stateless row-local expression work, so the minhash front end
+    * composes into Structured Streaming unchanged (see
+    * [[graft.streaming.Streams.minhashDedupStream]]).
     *
     * The hash basis is md5-top-60-bits, not xxhash64: identical dedup
     * quality (any collision-free 60-bit hash works), but md5 is
@@ -61,13 +80,6 @@ object Dedup {
     * the whole minhash pipeline — signatures, banding, verified pairs —
     * oracle-checkable instead of rows-only. Same trick as the winnowing
     * gates (q83/q86), applied to an integer domain. */
-  private[ext] def shingled(spark: SparkSession, dir: String): DataFrame =
-    shingledOf(Tables.load(spark, dir, "documents"))
-
-  /** Same per-row transform over any (doc_id, text) frame — including a
-    * STREAMING one (every stage is stateless row-local expression work,
-    * so the minhash front end composes into Structured Streaming
-    * unchanged; see [[graft.streaming.Streams.minhashDedupStream]]). */
   private[graft] def shingledOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
@@ -81,38 +93,37 @@ object Dedup {
     * explosion, no shuffle (the explode → 32-way min-aggregate it
     * replaces shuffled |docs| x |shingles| rows). */
   private[graft] def signatures(sh: DataFrame): DataFrame =
-    sh.select(col("doc_id"),
-      graft.functions.MinHashSig.minhashSig(
-        col("shingles"), perms.map(_._1), perms.map(_._2)).as("sig"))
+    sh.select(col("doc_id"), signature(col("shingles")).as("sig"))
 
-  /** The 8 per-band keys of a signature column as an array of structs
-    * (band index + the band's 4 raw signature values) — the exact band
-    * key [[candidatePairs]] joins on, exposed for the streaming twin. */
-  private[graft] def bandStructs(sig: Column): Column =
-    array((0 until NumPerms / BandRows).map { bIdx =>
+  /** The one call of the signature kernel, for frames that carry more
+    * than (doc_id, sig). */
+  private def signature(shingles: Column): Column =
+    graft.functions.MinHashSig.minhashSig(
+      shingles, perms.map(_._1), perms.map(_._2))
+
+  /** The band-key column: a signature exploded to one row per band,
+    * struct `bk` = band index + the band's 4 raw signature values. 8
+    * bands of 4 rows; docs sharing a band's full 4-value slice become
+    * candidates. Keyed on the raw values rather than a band hash:
+    * semantically what a band "hash" approximates, but exact — no
+    * band-hash collisions — and reproducible in the SQL oracle (a
+    * Murmur band hash would be engine-internal again). The key is 4
+    * longs instead of 1 int; band count is fixed, so the shuffle stays
+    * keyed and bounded the same way. */
+  private[graft] def bandKey(sig: Column): Column =
+    explode(array((0 until NumPerms / BandRows).map { bIdx =>
       val cols = (0 until BandRows).map(r =>
         element_at(sig, bIdx * BandRows + r + 1).as(s"s$r"))
       struct(lit(bIdx).as("band") +: cols: _*)
-    }: _*)
+    }: _*)).as("bk")
 
-  /** Candidate pairs via banding: 8 bands of 4 signature rows; docs
-    * sharing a band's full 4-value slice become candidates. Shuffle key
-    * = (band, the 4 raw signature values): semantically what a band
-    * "hash" approximates, but exact — no band-hash collisions — and
-    * reproducible in the SQL oracle (a Murmur band hash would be
-    * engine-internal again). The key is 4 longs instead of 1 int; band
-    * count is fixed, so the shuffle stays keyed and bounded the same
-    * way. */
-  private[ext] def candidatePairs(sh: DataFrame): DataFrame =
-    candidatePairsOfSig(signatures(sh))
-
-  /** [[candidatePairs]] over a pre-computed (ideally persisted)
-    * signature frame — the sharing point that keeps the expensive
-    * 32-perm signature map from running once for the AMS estimate and
-    * AGAIN for the band join (measured 2× on the q26 cold path). */
-  private[ext] def candidatePairsOfSig(sig: DataFrame): DataFrame = {
-    val bands = sig.select(col("doc_id"),
-        explode(bandStructs(col("sig"))).as("bk"))
+  /** The LSH candidate stage: (a_id < b_id) doc pairs sharing a band
+    * key, over a pre-computed (ideally persisted) signature frame — the
+    * sharing point that keeps the expensive 32-perm signature map from
+    * running once for the AMS estimate and AGAIN for the band join
+    * (measured 2× on the q26 cold path). */
+  private[graft] def candidatePairsOfSig(sig: DataFrame): DataFrame = {
+    val bands = sig.select(col("doc_id"), bandKey(col("sig")))
     bands.as("l").join(bands.as("r"),
         col("l.bk") === col("r.bk") &&
         col("l.doc_id") < col("r.doc_id"))
@@ -120,14 +131,18 @@ object Dedup {
       .distinct()
   }
 
-  /** MinHash-LSH near-dup pairs, verified with exact shingle-set Jaccard
-    * >= threshold. Output: (a_id, b_id, jaccard).
-    *
-    * The shingle table feeds four plan branches (both sides of the band
-    * self-join via signatures, and both sides of the verify join) —
-    * persist it once instead of recomputing the normalize+shingle+hash
-    * scan per branch. At cluster scale this is the standard
-    * materialize-the-shared-stage pattern (checkpoint/cache). */
+  /** The one exact shingle-Jaccard verify: `jaccard` = |a ∩ b| / |a ∪ b|
+    * over two sorted distinct shingle-array columns (O(n+m) merge
+    * intersect), pairs below `threshold` dropped. */
+  private def jaccardAtLeast(a: String, b: String, threshold: Double)
+                            (pairs: DataFrame): DataFrame =
+    pairs
+      .withColumn("inter", graft.functions.SortedIntersectCount
+        .sortedIntersectCount(col(a), col(b)))
+      .withColumn("jaccard", col("inter").cast("double") /
+        (size(col(a)) + size(col(b)) - col("inter")))
+      .filter(col("jaccard") >= threshold)
+
   /** Conf knob: max estimated bytes of the candidate-pair side below
     * which the verify joins BROADCAST it instead of shuffling the
     * corpus shingle table. Defaults to Spark's own
@@ -139,36 +154,27 @@ object Dedup {
     * size, so candidates (a<b) ≈ (F₂ − N)/2, estimated in one map-side
     * sketch pass with NO join executed. This is the q123 estimator
     * wired into a real planning decision rather than sitting advisory. */
-  private[ext] def estimatedCandidates(sh: DataFrame): Long =
-    estimatedCandidatesOfSig(signatures(sh))
-
-  /** [[estimatedCandidates]] over a pre-computed signature frame (see
-    * [[candidatePairsOfSig]] for why the split exists). */
   private[ext] def estimatedCandidatesOfSig(sig: DataFrame): Long = {
     val keys = sig
-      .select(explode(bandStructs(col("sig"))).as("bk"))
+      .select(bandKey(col("sig")))
       .select(concat_ws(":", col("bk.band"), col("bk.s0"), col("bk.s1"),
                         col("bk.s2"), col("bk.s3")).as("key"))
     val n = sig.count() * (NumPerms / BandRows)
     math.max(0L, (Sketches.amsF2(keys) - n) / 2)
   }
 
-  /** Conf knob: minimum exact-duplicate fraction (1 − distinct
-    * fingerprints / docs) above which [[minhashLsh]] collapses
-    * exact-duplicate groups to one representative before LSH. Below it
-    * the direct pipeline runs unchanged (the testdata's dup rate is
-    * ~0.2%, so gates default to the direct path). Set to "0.0" to force
-    * collapse, "1.1" to force direct. */
-  private[graft] val CollapseDupFractionKey =
-    "spark.graft.dedup.collapseDupFraction"
-
+  /** MinHash-LSH near-dup pairs, verified with exact shingle-set Jaccard
+    * >= threshold. Output: (a_id, b_id, jaccard). */
   def minhashLsh(spark: SparkSession, dir: String,
                  threshold: Double = 0.5,
                  collapse: Option[Boolean] = None): DataFrame =
-    minhashLshOf(spark, Tables.load(spark, dir, "documents"), threshold,
-      Some(shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil))))
+    minhashLshOf(Tables.load(spark, dir, "documents"), threshold, collapse,
+      Some(dir))
 
-  /** MinHash-LSH near-dup pairs over any (doc_id, text) frame, with an
+  /** [[minhashLsh]] over any (doc_id, text) frame; `dir`, when the frame
+    * is a loaded corpus, keys the dup-probe memo.
+    *
+    * The exact-duplicate collapse ([[collapseExpand]]) is the
     * EXACTNESS-PRESERVING defense against the one thing banded LSH
     * cannot survive at 100 TB: mega-buckets from exact-duplicate
     * groups. A boilerplate page duplicated k times puts all k copies in
@@ -177,69 +183,48 @@ object Dedup {
     * web-scale corpora run 30–50% exact duplicates, so this is the
     * dominant cost at scale, and no partitioning trick fixes it (AQE
     * skew-split moves the pairs around; the pair VOLUME is the
-    * problem).
+    * problem). The output is row-for-row identical to the direct
+    * pipeline (the q193 gate replays the same DuckDB oracle as q26 with
+    * collapse forced on).
     *
-    * The fix is algebraic, not approximate: identical normalized text ⇒
-    * identical shingle sets ⇒ identical signatures and band keys, so
-    * the full pair set factors exactly into (a) all intra-group pairs,
-    * jaccard ≡ 1.0, emitted directly without any join on shingle data,
-    * and (b) representative-pair results expanded to member pairs —
-    * jaccard(x, y) for x∈A, y∈B equals jaccard(repA, repB) because the
-    * inputs are element-wise equal arrays. LSH + verify then run over
-    * DISTINCT documents only: join work is linear in distinct docs, and
-    * the quadratic part degenerates to pure output emission of 24-byte
-    * rows. The output is row-for-row identical to the direct pipeline
-    * (the q193 gate replays the same DuckDB oracle as q26 with collapse
-    * forced on).
-    *
-    * Grouping is by md5(normalized text) — the same 128-bit fingerprint
-    * the [[fingerprint]] dedup operator already trusts — so the group
-    * shuffle moves 24-byte (fp, doc_id) rows, never shingle arrays.
-    * The collapse is gated on a measured duplicate fraction (one cheap
-    * map-side-combined agg) because on a dup-free corpus it would add
-    * a semi-join for nothing: below [[CollapseDupFractionKey]] the
-    * direct pipeline runs byte-identically to before. */
-  private[graft] def minhashLshOf(spark: SparkSession, docs: DataFrame,
-                                  threshold: Double,
-                                  collapse: Option[Boolean] = None)
-      : DataFrame =
-    if (!shouldCollapse(spark, collapse, dupFraction(docs, Nil))) {
-      val sh = shingledOf(docs)
-        .transform(Memo.persist)
-      verifiedLshPairs(spark, docs, sh, threshold)
-    } else collapseExpand(docs, Nil, Seq("jaccard" -> lit(1.0)),
-      intraQualifies = threshold <= 1.0, repDocs => {
-        val shR = shingledOf(repDocs)
-          .transform(Memo.persist)
-        // groups whose docs are too short to shingle produce NO pairs
-        // in the direct pipeline (they never enter sh) — shR's doc ids
-        // are the eligible set
-        (verifiedLshPairs(spark, repDocs, shR, threshold),
-         shR.select(col("doc_id")))
-      })
+    * The shingle table feeds four plan branches (both sides of the band
+    * self-join via signatures, and both sides of the verify join) —
+    * persisted once instead of recomputing the normalize+shingle+hash
+    * scan per branch. */
+  private[graft] def minhashLshOf(docs: DataFrame, threshold: Double,
+                                  collapse: Option[Boolean] = None,
+                                  dir: Option[String] = None): DataFrame =
+    collapseExpand(docs, dir, Nil, collapse, Seq("jaccard" -> lit(1.0)),
+      intraQualifies = threshold <= 1.0)(
+      overShingles(verifiedLshPairs(_, _, threshold)))
+
+  /** A MinHash family over the router: shingle the documents once
+    * (persisted — every branch of the family's plan reads it), pair
+    * them, and report the shingled doc ids as the eligible set: a doc
+    * too short to shingle never enters the shingle table, so it pairs
+    * in neither plan. */
+  private def overShingles(pairs: (DataFrame, DataFrame) => DataFrame)
+                          (docs: DataFrame): (DataFrame, DataFrame) = {
+    val sh = shingledOf(docs).transform(Memo.persist)
+    (pairs(docs, sh), sh.select(col("doc_id")))
+  }
 
   /** Measured exact-duplicate fraction of a corpus, within the group
     * key `extraKeys :+ md5(normalized text)` — one map-side-combined
-    * agg (HLL distinct), driver-side. The collapse planner's probe.
-    * Memoized per (session, dir, key scope) for the dir-based entry
-    * points — five operators share the same corpus, and the fraction
-    * is a property of the DATA, not of any conf (forcing the collapse
-    * decision via [[CollapseDupFractionKey]] moves the THRESHOLD, so
-    * the memo never has to be invalidated by a forced gate). */
-  /** Keyed by (session, dir, effective sample fraction, scope) — the
-    * fraction is part of the key so a probe taken under one
-    * `probeSampleFraction` is never served after the knob changes, and
-    * a later full-scan read never inherits a sampled (downward-biased)
-    * value. */
+    * agg (HLL distinct), driver-side. The collapse router's probe.
+    * Memoized for the dir-based entry points — five operators share the
+    * same corpus, and the fraction is a property of the DATA — keyed by
+    * (session, dir, effective sample fraction, exact-fallback
+    * threshold, scope): a probe taken under one `probeSampleFraction`
+    * or one exact-fallback threshold is never served after the knob
+    * changes, and a later full-scan read never inherits a sampled
+    * (downward-biased) value. */
   private[ext] val dupFracCache =
     Memo.table[(String, Double, Long, String), Double]("dedup.dupFraction")
   private[graft] def dupFractionDir(spark: SparkSession, dir: String,
                                     extraKeys: Seq[String]): Double = {
     val scopeKey = extraKeys.mkString(",")
     val frac = effectiveSampleFrac(spark).getOrElse(1.0)
-    // the exact-fallback threshold is part of the key: a probe taken
-    // under one threshold (HLL-only vs exact path) must never be
-    // served after the knob changes
     val thr = exactProbeThreshold(spark)
     dupFracCache.get(spark, (dir, frac, thr, scopeKey)).getOrElse {
       val docs = Tables.load(spark, dir, "documents")
@@ -265,8 +250,6 @@ object Dedup {
       dupFracCache.get(spark, (dir, frac, thr, scopeKey)).get
     }
   }
-  private def dupFraction(docs: DataFrame, extraKeys: Seq[String]): Double =
-    dupFractions(docs.sparkSession, docs, Seq(extraKeys)).head._2
 
   /** Conf knob: fraction of the corpus the duplicate probe scans
     * (default 1.0 = the full corpus). A p-sample splits every size-k
@@ -281,8 +264,6 @@ object Dedup {
     * and partition layouts, unlike `df.sample`. */
   private[graft] val ProbeSampleKey = "spark.graft.dedup.probeSampleFraction"
 
-  /** Measured duplicate fractions for several group-key scopes in ONE
-    * aggregate pass (a count + one HLL register set per scope). */
   private[ext] def effectiveSampleFrac(spark: SparkSession): Option[Double] =
     spark.conf.getOption(ProbeSampleKey)
       .map(_.toDouble).filter(f => f > 0.0 && f < 1.0)
@@ -311,6 +292,8 @@ object Dedup {
     spark.conf.getOption(ExactProbeThresholdKey)
       .map(_.toLong).getOrElse(ExactDistinctThreshold)
 
+  /** Measured duplicate fractions for several group-key scopes in ONE
+    * aggregate pass (a count + one HLL register set per scope). */
   private[ext] def dupFractions(spark: SparkSession, docs: DataFrame,
                            scopes: Seq[Seq[String]])
       : Seq[(Seq[String], Double)] = {
@@ -349,42 +332,46 @@ object Dedup {
     }
   }
 
-  private def collapseMinFrac(spark: SparkSession): Double =
-    spark.conf.getOption(CollapseDupFractionKey)
-      .map(_.toDouble).getOrElse(0.05)
+  /** Exact-duplicate fraction (1 − distinct fingerprints / docs) at or
+    * above which a pair family runs collapsed. Below it the direct
+    * pipeline runs unchanged (the testdata's dup rate is ~0.2%, so
+    * gates default to the direct path; the `*_collapsed` gates pass
+    * `collapse = Some(true)`). */
+  private val CollapseMinDupFraction = 0.05
 
-  /** The collapse decision. `collapse` is the caller's pinned
-    * decision (the `*Collapsed` gates pass `Some(true)`); `None`
-    * measures it against [[CollapseDupFractionKey]]. The probe is
-    * short-circuited when the outcome is pinned: by the argument, or by
-    * a threshold <= 0 (forces collapse) or > 1 (forces direct) — the
-    * probe job is pure waste then. No clamp on the measured
-    * fraction any more (round 13): below [[ExactDistinctThreshold]]
-    * the probe is exact (never negative), and above it a residual
-    * HLL overshoot of a few percent on a dup-free corpus reads as a
-    * small negative fraction, which compares against the positive
-    * threshold exactly as zero would — the raw value stays honest
-    * in logs instead of being silently rewritten. */
-  private def shouldCollapse(spark: SparkSession, collapse: Option[Boolean],
+  /** The collapse decision: the caller's pinned `collapse`, else the
+    * measured fraction against [[CollapseMinDupFraction]] — the probe
+    * runs only when nothing is pinned. No clamp on the measured
+    * fraction: below [[ExactDistinctThreshold]] the probe is exact
+    * (never negative), and above it a residual HLL overshoot of a few
+    * percent on a dup-free corpus reads as a small negative fraction,
+    * which compares against the positive threshold exactly as zero
+    * would — the raw value stays honest in logs instead of being
+    * silently rewritten. */
+  private def shouldCollapse(collapse: Option[Boolean],
                              frac: => Double): Boolean =
-    collapse.getOrElse {
-      val minFrac = collapseMinFrac(spark)
-      if (minFrac <= 0.0) true
-      else if (minFrac > 1.0) false
-      else frac >= minFrac
-    }
+    collapse.getOrElse(frac >= CollapseMinDupFraction)
 
-  /** The shared exact-duplicate collapse for every pair family (the
-    * SCALE.md "mega-bucket defense"): group docs with identical
-    * normalized text (within `extraKeys` — e.g. `source` for the
-    * same-source families, so grouping never crosses a boundary the
-    * family's own join respects), run the family over ONE
-    * representative per group, emit all intra-group pairs at the
-    * family's identical-doc score, and expand representative pairs to
-    * member pairs. Exact for every family whose score is a pure
-    * function of the normalized text (shingle sets, word sets, and
-    * simhash all are): member inputs are element-wise equal to their
-    * representative's, so scores transfer unchanged.
+  /** The one collapse router of the pair families (the SCALE.md
+    * "mega-bucket defense"). `scope` is stated once: the dup probe
+    * measures the duplicate fraction within it (memoized per `dir` when
+    * the frame is a loaded corpus), and docs group by it. When the
+    * decision ([[shouldCollapse]]) is direct, the result is
+    * `family(docs)._1`, the family's own plan unchanged.
+    *
+    * Collapsed: group docs with identical normalized text (within
+    * `scope` — e.g. `source` for the same-source families, so grouping
+    * never crosses a boundary the family's own join respects), run the
+    * family over ONE representative per group, emit all intra-group
+    * pairs at the family's identical-doc score (`identical`), and
+    * expand representative pairs to member pairs. Exact for every family
+    * whose score is a pure function of the normalized text (shingle
+    * sets, word sets, and simhash all are): identical normalized text ⇒
+    * element-wise equal inputs ⇒ equal scores, so join work is linear
+    * in distinct docs and the quadratic part degenerates to emitting
+    * 24-byte rows. Grouping is by md5(normalized text) — the fingerprint
+    * [[fingerprint]] already trusts — so the group shuffle moves
+    * (fp, doc_id) rows, never shingle arrays.
     *
     * `family(repDocs)` returns (pairs over the representatives, the
     * doc_ids eligible to pair at all) — eligibility mirrors each
@@ -393,94 +380,68 @@ object Dedup {
     * is skipped here too. Null group keys (null text/source) drop out
     * of the member equi-join exactly as they never match in the
     * families' own join conditions. */
-  private def collapseExpand(docs: DataFrame, extraKeys: Seq[String],
-                             scoreCols: Seq[(String, Column)],
-                             intraQualifies: Boolean,
-                             family: DataFrame => (DataFrame, DataFrame))
+  private def collapseExpand(docs: DataFrame, dir: Option[String],
+                             scope: Seq[String], collapse: Option[Boolean],
+                             identical: Seq[(String, Column)],
+                             intraQualifies: Boolean)
+                            (family: DataFrame => (DataFrame, DataFrame))
       : DataFrame = {
-    // ONE pass over the corpus text for grouping: the per-group min is
-    // a window over the group key (single shuffle of skinny (fp, id)
-    // rows), not an aggregate joined back (two shuffles of the same
-    // scan). members is the shared stage of everything downstream
-    // (reps, eligibility, intra self-join, cross expansion) — persist
-    // it; it is 24-byte rows, the cheapest table in the pipeline.
-    val keyed = docs.select(col("doc_id") +: extraKeys.map(col) :+
-      md5(TextAnalysis.normalized(col("text"))).as("fp"): _*)
-    val joinKeys = extraKeys :+ "fp"
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(joinKeys.map(col): _*)
-    val members = keyed
-      // a null group key (null text, or null source for the
-      // same-source families) never matches in the families' own join
-      // conditions, so such docs produce no pairs in the direct
-      // pipelines — exclude them here (the window would otherwise
-      // group nulls together, unlike the joins)
-      .filter(joinKeys.map(col(_).isNotNull).reduce(_ && _))
-      .withColumn("gid", min(col("doc_id")).over(w))
-      .select(col("gid"), col("doc_id"))
-      .transform(Memo.persist)
-    // a representative is a doc that IS its group's minimum
-    val repDocs = docs.join(
-      members.filter(col("gid") === col("doc_id"))
-        .select(col("gid").as("doc_id")),
-      Seq("doc_id"), "left_semi")
-    val (repPairs, eligibleIds) = family(repDocs)
-    val mem = members.join(eligibleIds.select(col("doc_id").as("gid")),
-      Seq("gid"), "left_semi")
-    val intra = mem.as("l").join(mem.as("r"),
-        col("l.gid") === col("r.gid") &&
-        col("l.doc_id") < col("r.doc_id"))
-      .select(col("l.doc_id").as("a_id") +: col("r.doc_id").as("b_id") +:
-              scoreCols.map { case (name, v) => v.as(name) }: _*)
-      .filter(lit(intraQualifies)) // folds to a constant
-    val cross = repPairs.as("p")
-      .join(mem.as("ma"), col("p.a_id") === col("ma.gid"))
-      .join(mem.as("mb"), col("p.b_id") === col("mb.gid"))
-      .select(least(col("ma.doc_id"), col("mb.doc_id")).as("a_id") +:
-              greatest(col("ma.doc_id"), col("mb.doc_id")).as("b_id") +:
-              scoreCols.map { case (name, _) => col(s"p.$name").as(name) }: _*)
-    intra.unionByName(cross)
+    val spark = docs.sparkSession
+    def frac = dir.fold(dupFractions(spark, docs, Seq(scope)).head._2)(
+      dupFractionDir(spark, _, scope))
+    if (!shouldCollapse(collapse, frac)) family(docs)._1
+    else {
+      // ONE pass over the corpus text for grouping: the per-group min is
+      // a window over the group key (single shuffle of skinny (fp, id)
+      // rows), not an aggregate joined back (two shuffles of the same
+      // scan). members is the shared stage of everything downstream
+      // (reps, eligibility, intra self-join, cross expansion) — persist
+      // it; it is 24-byte rows, the cheapest table in the pipeline.
+      val keyed = docs.select(col("doc_id") +: scope.map(col) :+
+        md5(TextAnalysis.normalized(col("text"))).as("fp"): _*)
+      val joinKeys = scope :+ "fp"
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy(joinKeys.map(col): _*)
+      val members = keyed
+        // a null group key (null text, or null source for the
+        // same-source families) never matches in the families' own join
+        // conditions, so such docs produce no pairs in the direct
+        // pipelines — exclude them here (the window would otherwise
+        // group nulls together, unlike the joins)
+        .filter(joinKeys.map(col(_).isNotNull).reduce(_ && _))
+        .withColumn("gid", min(col("doc_id")).over(w))
+        .select(col("gid"), col("doc_id"))
+        .transform(Memo.persist)
+      // a representative is a doc that IS its group's minimum
+      val repDocs = docs.join(
+        members.filter(col("gid") === col("doc_id"))
+          .select(col("gid").as("doc_id")),
+        Seq("doc_id"), "left_semi")
+      val (repPairs, eligibleIds) = family(repDocs)
+      val mem = members.join(eligibleIds.select(col("doc_id").as("gid")),
+        Seq("gid"), "left_semi")
+      val intra = mem.as("l").join(mem.as("r"),
+          col("l.gid") === col("r.gid") &&
+          col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("a_id") +: col("r.doc_id").as("b_id") +:
+                identical.map { case (name, v) => v.as(name) }: _*)
+        .filter(lit(intraQualifies)) // folds to a constant
+      val cross = repPairs.as("p")
+        .join(mem.as("ma"), col("p.a_id") === col("ma.gid"))
+        .join(mem.as("mb"), col("p.b_id") === col("mb.gid"))
+        .select(least(col("ma.doc_id"), col("mb.doc_id")).as("a_id") +:
+                greatest(col("ma.doc_id"), col("mb.doc_id")).as("b_id") +:
+                identical.map { case (n, _) => col(s"p.$n").as(n) }: _*)
+      intra.unionByName(cross)
+    }
   }
-
-  /** Diagnostic for the scale certification (SCALE.md dup-heavy
-    * table): the band-join candidate-pair count over an arbitrary
-    * (doc_id, text) frame — the volume the verify join must carry.
-    * The collapse's claim is that ITS verify join sees only the
-    * representative-side count (tracks distinct docs) while the direct
-    * plan's sees the raw-side count (tracks Σ group²). */
-  private[graft] def lshCandidateCountOf(docs: DataFrame): Long =
-    candidatePairs(shingledOf(docs)).count()
-
-  /** [[minhashLsh]] with the exact-duplicate collapse FORCED on (the
-    * testdata's dup rate sits below the adaptive threshold, so the
-    * gates would otherwise never exercise the collapsed plan). The
-    * point of the gate: the collapsed plan must be ROW-IDENTICAL to
-    * the direct pipeline — it replays the q26 DuckDB oracle verbatim. */
-  def minhashLshCollapsed(spark: SparkSession, dir: String,
-                          threshold: Double = 0.5): DataFrame =
-    minhashLsh(spark, dir, threshold, collapse = Some(true))
-
-  /** Forced-collapse twins for the other three pair families — same
-    * purpose as [[minhashLshCollapsed]]: the gates replay each direct
-    * operator's DuckDB oracle verbatim through the collapsed plan. */
-  def simhashPairsCollapsed(spark: SparkSession, dir: String,
-                            maxHam: Int = 3): DataFrame =
-    simhashPairs(spark, dir, maxHam, collapse = Some(true))
-
-  def jaccardPairsCollapsed(spark: SparkSession, dir: String,
-                            threshold: Double = 0.5): DataFrame =
-    jaccardPairs(spark, dir, threshold, collapse = Some(true))
-
-  def containmentPairsCollapsed(spark: SparkSession, dir: String,
-                                threshold: Double = 0.9): DataFrame =
-    containmentPairs(spark, dir, threshold, collapse = Some(true))
 
   /** The candidate + exact-verify tail of the LSH pipeline over a
     * shingle table, with the AMS-estimate-driven broadcast-vs-shuffle
     * choice for the verify joins. */
-  private def verifiedLshPairs(spark: SparkSession, docs: DataFrame,
-                               sh: DataFrame,
+  private def verifiedLshPairs(docs: DataFrame, sh: DataFrame,
                                threshold: Double): DataFrame = {
+    val spark = docs.sparkSession
     val shA = sh.select(col("doc_id").as("a_id"), col("shingles").as("sa"))
     val shB = sh.select(col("doc_id").as("b_id"), col("shingles").as("sb"))
     // one signature pass feeds BOTH the AMS estimate and the band join
@@ -528,19 +489,12 @@ object Dedup {
       percentile_approx(charsCol, lit(0.9), lit(1000))).head()
     val p90Chars = if (p90Row.isNullAt(0)) 0.0 else p90Row.getDouble(0)
     val pairRowBytes = 32.0 + 8.0 * (p90Chars / 6.0)
-    // shingle arrays are sorted distinct → O(n+m) merge intersect
-    def verified(pairs: DataFrame): DataFrame = pairs
-      .withColumn("inter", graft.functions.SortedIntersectCount
-        .sortedIntersectCount(col("sa"), col("sb")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sa")) + size(col("sb")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
+    val pairs =
+      if (estPairs * pairRowBytes <= maxBytes)
+        shB.join(broadcast(shA.join(broadcast(cand), "a_id")), "b_id")
+      else cand.join(shA, "a_id").join(shB, "b_id")
+    pairs.transform(jaccardAtLeast("sa", "sb", threshold))
       .select(col("a_id"), col("b_id"), col("jaccard"))
-    if (estPairs * pairRowBytes <= maxBytes)
-      verified(shB.join(broadcast(shA.join(broadcast(cand), "a_id")),
-                        "b_id"))
-    else
-      verified(cand.join(shA, "a_id").join(shB, "b_id"))
   }
 
   /** Sketch-estimated CONTAINMENT over the LSH candidate set — the
@@ -559,27 +513,17 @@ object Dedup {
     * operator is the recall-1 path for low-jaccard containment; this
     * gate certifies the sketch arithmetic a 100 TB pipeline would run
     * before any exact verify. Output: every candidate pair with its
-    * matched-component count and estimate. */
-  def containmentEstimate(spark: SparkSession, dir: String): DataFrame = {
-    val docs = Tables.load(spark, dir, "documents")
-    // the last candidatePairs consumer gets the same mega-bucket
-    // defense as the verify families: identical docs ⇒ identical
-    // signatures ⇒ m = 32 and Ĉ = 32·2n/(64·n) = exactly 1.0 for
-    // intra-group pairs; rep estimates transfer to members unchanged
-    if (!shouldCollapse(spark, None, dupFractionDir(spark, dir, Nil)))
-      containmentEstimateOf(docs)
-    else collapseExpand(docs, Nil,
-      Seq("m" -> lit(32L), "est_cont" -> lit(1.0)),
-      intraQualifies = true, repDocs => {
-        val shR = shingledOf(repDocs)
-          .transform(Memo.persist)
-        (containmentEstimateOver(shR), shR.select(col("doc_id")))
-      })
-  }
-
-  private def containmentEstimateOf(docs: DataFrame): DataFrame =
-    containmentEstimateOver(shingledOf(docs)
-      .transform(Memo.persist))
+    * matched-component count and estimate.
+    *
+    * Collapsed like the verify families: identical docs ⇒ identical
+    * signatures ⇒ m = 32 and Ĉ = 32·2n/(64·n) = exactly 1.0 for
+    * intra-group pairs; rep estimates transfer to members unchanged. */
+  def containmentEstimate(spark: SparkSession, dir: String,
+                          collapse: Option[Boolean] = None): DataFrame =
+    collapseExpand(Tables.load(spark, dir, "documents"), Some(dir), Nil,
+      collapse, Seq("m" -> lit(32L), "est_cont" -> lit(1.0)),
+      intraQualifies = true)(
+      overShingles((_, sh) => containmentEstimateOver(sh)))
 
   private def containmentEstimateOver(sh: DataFrame): DataFrame = {
     // shared signature pass: the m-matching joins below AND the band
@@ -615,6 +559,7 @@ object Dedup {
     containEstCache.getOrElseUpdate(spark, dir)(
       materializedScoped(spark, dir, BandPathExpansion)(
         containmentEstimate(spark, dir)))
+
 
   // ---- data-derived shuffle sizing for the pair families -----------
   //
@@ -680,9 +625,6 @@ object Dedup {
     * md5 (not xxhash64) so the voting input, and therefore the whole
     * fingerprint, is reproducible from SQL `md5()` and the gate is
     * oracle-checkable. */
-  def simhashes(spark: SparkSession, dir: String): DataFrame =
-    simhashesOf(Tables.load(spark, dir, "documents"))
-
   private[graft] def simhashesOf(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"),
@@ -721,22 +663,15 @@ object Dedup {
     // exposure as LSH banding, defended the identical way (collapse to
     // representatives, expand back; hamming(x, y) = hamming(repA, repB)
     // because equal normalized text gives equal fingerprints)
-    if (!shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil)))
-      simhashPairsOf(docs, maxHam, np)
-    else collapseExpand(docs, Nil, Seq("hamming" -> lit(0)),
-      intraQualifies = maxHam >= 0, repDocs => {
-        // one fingerprint pass, persisted, shared by the candidate join
-        // and the eligibility set (same discipline as minhash's shR)
-        val shS = simhashesOf(repDocs)
-          .transform(Memo.persist)
-        (simhashPairsOver(shS, maxHam, np),
-         shS.filter(col("simhash").isNotNull).select(col("doc_id")))
-      })
+    collapseExpand(docs, Some(dir), Nil, collapse, Seq("hamming" -> lit(0)),
+      intraQualifies = maxHam >= 0) { d =>
+      // one fingerprint pass, persisted, shared by the candidate join
+      // and the eligibility set (same discipline as overShingles)
+      val sh = simhashesOf(d).transform(Memo.persist)
+      (simhashPairsOver(sh, maxHam, np),
+       sh.filter(col("simhash").isNotNull).select(col("doc_id")))
+    }
   }
-
-  private def simhashPairsOf(docs: DataFrame, maxHam: Int,
-                             numParts: Int): DataFrame =
-    simhashPairsOver(simhashesOf(docs), maxHam, numParts)
 
   private def simhashPairsOver(sh0: DataFrame, maxHam: Int,
                                numParts: Int): DataFrame = {
@@ -772,30 +707,6 @@ object Dedup {
 
   // ---- exact n-gram / word-set Jaccard ------------------------------
 
-  /** Word-set Jaccard similarity for same-`source` pairs, with EXACT
-    * prefix-filter candidate generation (AllPairs/PPJoin family) instead
-    * of a same-source self-join.
-    *
-    * Theorem (prefix filtering): order each doc's distinct word hashes
-    * by a global total order (ascending hash value here). jac(A,B) ≥ t
-    * implies |A∩B| ≥ t·max(|A|,|B|) ≥ ⌈t·|A|⌉, so A and B must share a
-    * token inside A's first |A| − ⌈t·|A|⌉ + 1 tokens (else all shared
-    * tokens sit in A's last ⌈t·|A|⌉ − 1 ⇒ jac < t) — and symmetrically
-    * for B. So every qualifying pair meets on a token both sides emit
-    * from their prefix: the candidate join is keyed on that token, never
-    * all-pairs, never keyed on the skewed `source` column. Recall is
-    * exactly 1 (unlike LSH banding) — the output still hash-matches the
-    * brute-force DuckDB oracle.
-    *
-    * Scale: candidate volume is Σ_token df_prefix(token)², so the global
-    * order is ASCENDING DOCUMENT FREQUENCY (the AllPairs refinement):
-    * each doc's prefix holds its rarest tokens, stopwords never enter a
-    * prefix, and candidates collapse to near-true-pair volume. (A
-    * hash-random order is also correct but lets a stopword into ~p/n of
-    * all prefixes — measured 8x slower on the documents table.) The df
-    * table is one extra token-keyed shuffle. Same-source and length
-    * filters run on the candidates before the exact merge intersect.
-    * Division is int/int → double: bit-deterministic. */
   /** Shared front of the prefix-filter family (q28 jaccard, q103
     * containment): per-doc sorted word-hash sets (persisted — feeds
     * both candidate sides and the verify joins), the exploded token
@@ -829,26 +740,50 @@ object Dedup {
     (docs, toks, prefixes)
   }
 
+  /** Word-set Jaccard similarity for same-`source` pairs, with EXACT
+    * prefix-filter candidate generation (AllPairs/PPJoin family) instead
+    * of a same-source self-join.
+    *
+    * Theorem (prefix filtering): order each doc's distinct word hashes
+    * by a global total order (ascending hash value here). jac(A,B) ≥ t
+    * implies |A∩B| ≥ t·max(|A|,|B|) ≥ ⌈t·|A|⌉, so A and B must share a
+    * token inside A's first |A| − ⌈t·|A|⌉ + 1 tokens (else all shared
+    * tokens sit in A's last ⌈t·|A|⌉ − 1 ⇒ jac < t) — and symmetrically
+    * for B. So every qualifying pair meets on a token both sides emit
+    * from their prefix: the candidate join is keyed on that token, never
+    * all-pairs, never keyed on the skewed `source` column. Recall is
+    * exactly 1 (unlike LSH banding) — the output still hash-matches the
+    * brute-force DuckDB oracle.
+    *
+    * Scale: candidate volume is Σ_token df_prefix(token)², so the global
+    * order is ASCENDING DOCUMENT FREQUENCY (the AllPairs refinement):
+    * each doc's prefix holds its rarest tokens, stopwords never enter a
+    * prefix, and candidates collapse to near-true-pair volume. (A
+    * hash-random order is also correct but lets a stopword into ~p/n of
+    * all prefixes — measured 8x slower on the documents table.) The df
+    * table is one extra token-keyed shuffle. Same-source and length
+    * filters run on the candidates before the exact merge intersect.
+    * Division is int/int → double: bit-deterministic. */
   def jaccardPairs(spark: SparkSession, dir: String,
                    threshold: Double = 0.5,
-                   collapse: Option[Boolean] = None): DataFrame = {
-    val docs0 = Tables.load(spark, dir, "documents")
+                   collapse: Option[Boolean] = None): DataFrame =
     // exact-dup groups defeat prefix filtering too: k identical docs
     // all emit the same rarity prefix, giving k²/2 candidates that each
     // carry two full word-set arrays — collapse to representatives
     // (grouped WITHIN source: the operator only pairs same-source docs,
     // and the group key must never cross a boundary the join respects)
-    if (!shouldCollapse(spark, collapse,
-          dupFractionDir(spark, dir, Seq("source"))))
-      jaccardPairsOf(docs0, threshold)
-    else collapseExpand(docs0, Seq("source"), Seq("jac" -> lit(1.0)),
-      intraQualifies = threshold <= 1.0, repDocs =>
-        // any non-null text yields n >= 1 word hash, shares its own
-        // prefix token, and passes the size filter at equality — so
-        // eligibility is exactly text non-null, like the direct path
-        (jaccardPairsOf(repDocs, threshold),
-         repDocs.filter(col("text").isNotNull).select(col("doc_id"))))
-  }
+    collapseExpand(Tables.load(spark, dir, "documents"), Some(dir),
+      Seq("source"), collapse, Seq("jac" -> lit(1.0)),
+      intraQualifies = threshold <= 1.0)(
+      overWordSets(jaccardPairsOf(_, threshold)))
+
+  /** A word-set family over the router: any non-null text yields n >= 1
+    * word hash, shares its own prefix token, and passes the size filter
+    * at equality — so the eligible set is exactly the docs with text,
+    * like the direct path. */
+  private def overWordSets(pairs: DataFrame => DataFrame)
+                          (docs: DataFrame): (DataFrame, DataFrame) =
+    (pairs(docs), docs.filter(col("text").isNotNull).select(col("doc_id")))
 
   /** Conf knob: hard budget on the ESTIMATED candidate-pair volume of
     * the exact-pair family ([[jaccardPairs]] and everything riding
@@ -860,19 +795,27 @@ object Dedup {
     * — correct, but not what an operator wants discovered three hours
     * into a 100 TB job. The guard prices the candidate join BEFORE it
     * runs (one map-side AMS F₂ sketch over the composite prefix keys —
-    * the q123 estimator, same mechanics as [[estimatedCandidates]])
+    * the q123 estimator, same mechanics as [[estimatedCandidatesOfSig]])
     * and fails fast with the three remediations in the message. Set
     * to a negative value to disable; raise it deliberately when an
     * m²-sized build is genuinely intended. */
   private[graft] val PairBudgetKey = "spark.graft.dedup.pairBudget"
   private[ext] val DefaultPairBudget = 2L * 1000 * 1000 * 1000
 
-  /** The configured pair budget, with a malformed value rethrown
-    * NAMING the conf key and the offending text — a bare
-    * NumberFormatException from deep inside a dedup plan tells the
-    * operator nothing about which knob to fix. */
-  private[ext] def configuredPairBudget(spark: SparkSession): Long =
-    spark.conf.getOption(PairBudgetKey).map { raw =>
+  /** The one pair-budget guard of the exact token-keyed families. It
+    * parses the budget (a malformed value is rethrown NAMING the conf
+    * key and the offending text — a bare NumberFormatException from
+    * deep inside a dedup plan tells the operator nothing about which
+    * knob to fix), skips the sketch while the family's SOUND `preBound`
+    * fits the budget, and otherwise fails fast when the sketched
+    * `estimate` of the candidate join's pre-distinct input exceeds it.
+    * Both are by name: the bound is not computed when the guard is
+    * disabled, the sketch not when the bound fits. `remedy` is the
+    * family's own way out besides the threshold and the knob. */
+  private def pairBudgetGuard(spark: SparkSession, family: String,
+                              threshold: Double, preBound: => Double,
+                              estimate: => Long, remedy: String): Unit = {
+    val budget = spark.conf.getOption(PairBudgetKey).map { raw =>
       try raw.trim.toLong
       catch {
         case e: NumberFormatException =>
@@ -881,6 +824,28 @@ object Dedup {
             "(negative disables the guard)", e)
       }
     }.getOrElse(DefaultPairBudget)
+    if (budget >= 0 && preBound > budget.toDouble) {
+      val est = estimate
+      if (est > budget)
+        throw new IllegalStateException(
+          s"$family candidate budget exceeded: ~$est estimated " +
+          s"candidate pairs > budget $budget (conf $PairBudgetKey). " +
+          "The candidate join's cost is output-bound and would run " +
+          "unbounded on this corpus. Either raise the threshold " +
+          s"(currently $threshold — shorter rarity prefixes, fewer " +
+          s"candidates), $remedy, or raise $PairBudgetKey deliberately " +
+          "if an m²-sized build is intended.")
+    }
+  }
+
+  /** Candidate pairs joined to both docs' word sets (`wa`/`na`,
+    * `wb`/`nb`): the verify input of the exact word-set families. */
+  private def withWordSets(cand: DataFrame, docs: DataFrame): DataFrame =
+    cand
+      .join(docs.select(col("doc_id").as("a_id"),
+                        col("ws").as("wa"), col("n").as("na")), "a_id")
+      .join(docs.select(col("doc_id").as("b_id"),
+                        col("ws").as("wb"), col("n").as("nb")), "b_id")
 
   private[ext] def jaccardPairsOf(docs0: DataFrame,
                                   threshold: Double): DataFrame = {
@@ -895,7 +860,6 @@ object Dedup {
     // candidate self-join read it — three consumers of one
     // tokenize+window pass
     val prefixes = prefixes0.transform(Memo.persist)
-    val budget = configuredPairBudget(docs0.sparkSession)
     // Cheap SOUND pre-check before paying for the sketch. The sketch
     // estimate (and the join's real input) is PRE-distinct same-key
     // pairs; an unordered doc pair can collide under at most
@@ -912,46 +876,34 @@ object Dedup {
     // bound alone would be UNSOUND here: shared-prefix multiplicity
     // can inflate the join input past the budget while distinct pairs
     // stay under it.)
-    val preBound = if (budget < 0) 0.0 else {
-      val r = docs.agg(count(lit(1)),
-        max(col("n") - ceil(col("n") * threshold) + 1)).head()
-      val nDocs = r.getLong(0)
-      val lMax = if (r.isNullAt(1)) 0.0
-                 else r.getAs[Number](1).doubleValue()
-      nDocs.toDouble * (nDocs - 1).toDouble / 2.0 * math.max(lMax, 0.0)
-    }
-    if (budget >= 0 && preBound > budget.toDouble) {
+    pairBudgetGuard(docs0.sparkSession, "jaccardPairs", threshold,
+      preBound = {
+        val r = docs.agg(count(lit(1)),
+          max(col("n") - ceil(col("n") * threshold) + 1)).head()
+        val nDocs = r.getLong(0)
+        val lMax = if (r.isNullAt(1)) 0.0
+                   else r.getAs[Number](1).doubleValue()
+        nDocs.toDouble * (nDocs - 1).toDouble / 2.0 * math.max(lMax, 0.0)
+      },
       // ordered same-key pairs = (F₂ − N)/2 over the (source, token)
       // prefix keys — an upper-bound-flavored estimate of the
       // candidate join's pre-distinct output (the sketch prices the
       // join without running it)
-      val keys = prefixes.select(
-        concat_ws(":", col("source"), col("token")).as("key"))
-      val est = math.max(0L, (Sketches.amsF2(keys) - prefixes.count()) / 2)
-      if (est > budget)
-        throw new IllegalStateException(
-          s"jaccardPairs candidate budget exceeded: ~$est estimated " +
-          s"candidate pairs > budget $budget (conf $PairBudgetKey). " +
-          "The exact-pair join's cost is output-bound and would run " +
-          s"unbounded on this corpus. Either raise the threshold " +
-          s"(currently $threshold — shorter rarity prefixes, fewer " +
-          "candidates), " +
-          "route through the banded LSH family (minhashLsh/q26, whose " +
-          "candidate volume is threshold-tuned, with exact-duplicate " +
-          s"collapse for dup-heavy corpora), or raise $PairBudgetKey " +
-          "deliberately if an m²-sized build is intended.")
-    }
+      estimate = {
+        val keys = prefixes.select(
+          concat_ws(":", col("source"), col("token")).as("key"))
+        math.max(0L, (Sketches.amsF2(keys) - prefixes.count()) / 2)
+      },
+      remedy = "route through the banded LSH family (minhashLsh/q26, " +
+        "whose candidate volume is threshold-tuned, with exact-duplicate " +
+        "collapse for dup-heavy corpora)")
     val cand = prefixes.as("l").join(prefixes.as("r"),
         col("l.source") === col("r.source") &&
         col("l.token") === col("r.token") &&
         col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a_id"), col("r.doc_id").as("b_id"))
       .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("a_id"),
-                        col("ws").as("wa"), col("n").as("na")), "a_id")
-      .join(docs.select(col("doc_id").as("b_id"),
-                        col("ws").as("wb"), col("n").as("nb")), "b_id")
+    withWordSets(cand, docs)
       // size prefilter: jac <= min/max, and fl(x/c) is monotone in x, so a
       // pair failing min/max >= t cannot pass inter/union >= t — exact-safe
       .filter(least(col("na"), col("nb")).cast("double") /
@@ -984,18 +936,13 @@ object Dedup {
     * (same argument as [[jaccardPairs]]). */
   def containmentPairs(spark: SparkSession, dir: String,
                        threshold: Double = 0.9,
-                       collapse: Option[Boolean] = None): DataFrame = {
-    val docs0 = Tables.load(spark, dir, "documents")
+                       collapse: Option[Boolean] = None): DataFrame =
     // same collapse as jaccardPairs (cont(x, y) = cont(repA, repB) for
     // element-wise-equal word sets; identical docs have cont = n/n = 1)
-    if (!shouldCollapse(spark, collapse,
-          dupFractionDir(spark, dir, Seq("source"))))
-      containmentPairsOf(docs0, threshold)
-    else collapseExpand(docs0, Seq("source"), Seq("cont" -> lit(1.0)),
-      intraQualifies = threshold <= 1.0, repDocs =>
-        (containmentPairsOf(repDocs, threshold),
-         repDocs.filter(col("text").isNotNull).select(col("doc_id"))))
-  }
+    collapseExpand(Tables.load(spark, dir, "documents"), Some(dir),
+      Seq("source"), collapse, Seq("cont" -> lit(1.0)),
+      intraQualifies = threshold <= 1.0)(
+      overWordSets(containmentPairsOf(_, threshold)))
 
   private[ext] def containmentPairsOf(docs0: DataFrame,
                                       threshold: Double): DataFrame = {
@@ -1015,40 +962,31 @@ object Dedup {
     // of the ACTUAL asymmetric join (prefix keys × all-token keys,
     // the all-tokens side semi-join-restricted to keys some prefix
     // carries, which is exactly the join's participating input).
-    val budget = configuredPairBudget(docs0.sparkSession)
-    val preBound = if (budget < 0) 0.0 else {
-      val prefLen = when(col("n") >= 1,
-        col("n") - ceil(col("n") * threshold) + 1).otherwise(lit(0))
-      val r = docs.groupBy(col("source"))
-        .agg(sum(prefLen).as("p"), count(lit(1)).as("m"))
-        .agg(sum(col("p") * col("m"))).head()
-      if (r.isNullAt(0)) 0.0 else r.getAs[Number](0).doubleValue()
-    }
-    if (budget >= 0 && preBound > budget.toDouble) {
-      val key = concat_ws(":", col("source"), col("token"))
-      val prefKeys = prefixes.select(key.as("key"))
-      val tokKeys = toks
-        .join(prefixes.select(col("source"), col("token")).distinct(),
-              Seq("source", "token"), "left_semi")
-        .select(key.as("key"))
-      // self-matches (each prefix row hits its own doc's token row
-      // exactly once) are excluded by the join's doc_id inequality:
-      // subtract the prefix row count from the inner product
-      val est = math.max(0L,
-        Sketches.amsInnerProduct(prefKeys, tokKeys) - prefixes.count())
-      if (est > budget)
-        throw new IllegalStateException(
-          s"containmentPairs candidate budget exceeded: ~$est " +
-          s"estimated candidate pairs > budget $budget (conf " +
-          s"$PairBudgetKey). The containment join's containing side " +
-          "is unbounded by design and its cost is output-bound. " +
-          s"Either raise the threshold (currently $threshold — " +
-          "shorter rarity prefixes, fewer candidates), route through " +
-          "the sketch-based containmentEstimate (q104's sub-output-" +
-          "cost path) to find the explosive sources first, or raise " +
-          s"$PairBudgetKey deliberately if an m²-sized build is " +
-          "intended.")
-    }
+    pairBudgetGuard(docs0.sparkSession, "containmentPairs", threshold,
+      preBound = {
+        val prefLen = when(col("n") >= 1,
+          col("n") - ceil(col("n") * threshold) + 1).otherwise(lit(0))
+        val r = docs.groupBy(col("source"))
+          .agg(sum(prefLen).as("p"), count(lit(1)).as("m"))
+          .agg(sum(col("p") * col("m"))).head()
+        if (r.isNullAt(0)) 0.0 else r.getAs[Number](0).doubleValue()
+      },
+      estimate = {
+        val key = concat_ws(":", col("source"), col("token"))
+        val prefKeys = prefixes.select(key.as("key"))
+        val tokKeys = toks
+          .join(prefixes.select(col("source"), col("token")).distinct(),
+                Seq("source", "token"), "left_semi")
+          .select(key.as("key"))
+        // self-matches (each prefix row hits its own doc's token row
+        // exactly once) are excluded by the join's doc_id inequality:
+        // subtract the prefix row count from the inner product
+        math.max(0L,
+          Sketches.amsInnerProduct(prefKeys, tokKeys) - prefixes.count())
+      },
+      remedy = "route through the sketch-based containmentEstimate " +
+        "(q104's sub-output-cost path; the containing side is unbounded " +
+        "by design) to find the explosive sources first")
     val cand = prefixes.as("l").join(
         toks.select(col("doc_id"), col("source"), col("token")).as("r"),
         col("l.source") === col("r.source") &&
@@ -1057,11 +995,7 @@ object Dedup {
       .select(least(col("l.doc_id"), col("r.doc_id")).as("a_id"),
               greatest(col("l.doc_id"), col("r.doc_id")).as("b_id"))
       .distinct()
-    cand
-      .join(docs.select(col("doc_id").as("a_id"),
-                        col("ws").as("wa"), col("n").as("na")), "a_id")
-      .join(docs.select(col("doc_id").as("b_id"),
-                        col("ws").as("wb"), col("n").as("nb")), "b_id")
+    withWordSets(cand, docs)
       .withColumn("inter", graft.functions.SortedIntersectCount
         .sortedIntersectCount(col("wa"), col("wb")))
       .withColumn("cont", col("inter").cast("double") /
@@ -1419,8 +1353,7 @@ object Dedup {
         groups.select(col("min_id").as("doc_id")), Seq("doc_id"),
         "left_semi"))
       .select(col("doc_id").as("min_id"), col("shingles"),
-        graft.functions.MinHashSig.minhashSig(
-          col("shingles"), perms.map(_._1), perms.map(_._2)).as("sig"))
+        signature(col("shingles")).as("sig"))
     groups.join(repIdx, Seq("min_id"))
       .select(col("fp"), col("n_docs"), col("min_id"), col("shingles"),
               col("sig"))
@@ -1446,12 +1379,38 @@ object Dedup {
   private[graft] def probeNearDupIndex(index: DataFrame, batch: DataFrame,
                                        threshold: Double): DataFrame = {
     val idx = index.transform(Memo.persist)
+    val (bAll, bRepSh, cand) = probeCandidates(idx, batch)
+    val matches = cand
+      .join(bRepSh.select(col("bfp"), col("sb")), "bfp")
+      .join(idx.select(col("fp"), col("shingles").as("sc"),
+                       col("n_docs"), col("min_id")), "fp")
+      .transform(jaccardAtLeast("sb", "sc", threshold))
+      .groupBy(col("bfp"))
+      .agg(sum(col("n_docs")).as("n_dups"),
+           min(col("min_id")).as("match_id"))
+    bAll
+      .join(matches, Seq("bfp"), "left_outer")
+      .select(col("doc_id"),
+              col("n_dups").isNull.cast("int").cast("long").as("novel"),
+              coalesce(col("n_dups"), lit(0L)).as("n_dups"),
+              col("match_id"))
+  }
+
+  /** The candidate stage of [[probeNearDupIndex]] against a standing
+    * index frame: (batch fingerprints of every batch doc, one shingled
+    * and signed representative per distinct batch fingerprint
+    * (bfp, sb, bsig), the (bfp, fp) fingerprint pairs sharing a band
+    * key). The delta-scaling contract says the candidate count tracks
+    * the batch's distinct content, not the index's accumulated size or
+    * raw copy counts. */
+  private[graft] def probeCandidates(idx: DataFrame, batch: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) = {
     // ONE normalize+md5 pass over the batch, shared by the rep
     // grouping and the final expansion join (it used to be recomputed
     // in the tail projection — a second full scan of the delta per
     // probe). Null text ⇒ null fingerprint, which falls out of the
-    // keyed grouping here and never matches in the left_outer below —
-    // exactly the old null-filter semantics.
+    // keyed grouping here and never matches in the probe's left_outer
+    // join — exactly the old null-filter semantics.
     val bAll = batch
       .select(col("doc_id"),
               md5(TextAnalysis.normalized(col("text"))).as("bfp"))
@@ -1464,35 +1423,16 @@ object Dedup {
         "left_semi"))
       .join(bKeyed, "doc_id")
       .select(col("bfp"), col("shingles").as("sb"),
-        graft.functions.MinHashSig.minhashSig(
-          col("shingles"), perms.map(_._1), perms.map(_._2)).as("bsig"))
+        signature(col("shingles")).as("bsig"))
       .transform(Memo.persist)
     // band keys carry ONLY the fingerprint — the shingle arrays ride
     // the verify joins, keyed by fp, exactly as the direct pipeline
     // keeps them out of its band explode
     val cand = bRepSh
-      .select(col("bfp"), explode(bandStructs(col("bsig"))).as("bk"))
-      .join(idx.select(col("fp"),
-              explode(bandStructs(col("sig"))).as("bk")), "bk")
+      .select(col("bfp"), bandKey(col("bsig")))
+      .join(idx.select(col("fp"), bandKey(col("sig"))), "bk")
       .select(col("bfp"), col("fp")).distinct()
-    val matches = cand
-      .join(bRepSh.select(col("bfp"), col("sb")), "bfp")
-      .join(idx.select(col("fp"), col("shingles").as("sc"),
-                       col("n_docs"), col("min_id")), "fp")
-      .withColumn("inter", graft.functions.SortedIntersectCount
-        .sortedIntersectCount(col("sb"), col("sc")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sb")) + size(col("sc")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
-      .groupBy(col("bfp"))
-      .agg(sum(col("n_docs")).as("n_dups"),
-           min(col("min_id")).as("match_id"))
-    bAll
-      .join(matches, Seq("bfp"), "left_outer")
-      .select(col("doc_id"),
-              col("n_dups").isNull.cast("int").cast("long").as("novel"),
-              coalesce(col("n_dups"), lit(0L)).as("n_dups"),
-              col("match_id"))
+    (bAll, bRepSh, cand)
   }
 
   /** Incremental NEAR-dup admission — the daily-ingest companion of
@@ -1513,7 +1453,9 @@ object Dedup {
     * boilerplate arrives again today and a direct join would produce
     * k·m candidates per boilerplate band). Both paths are
     * row-identical; q232 replays this oracle through the forced
-    * collapsed plan. */
+    * collapsed plan. The one collapse decision that does not go through
+    * [[collapseExpand]]: its collapsed plan is the standing-index probe,
+    * not a representative-pair expansion. */
   def incrementalNearDedup(spark: SparkSession, dir: String,
                            threshold: Double = 0.5,
                            collapse: Option[Boolean] = None): DataFrame = {
@@ -1521,17 +1463,10 @@ object Dedup {
     val isNew = length(col("source")) > 4
     val corpus = docs.filter(!isNew).select(col("doc_id"), col("text"))
     val batch = docs.filter(isNew).select(col("doc_id"), col("text"))
-    if (shouldCollapse(spark, collapse, dupFractionDir(spark, dir, Nil)))
+    if (shouldCollapse(collapse, dupFractionDir(spark, dir, Nil)))
       probeNearDupIndex(nearDupIndexOf(corpus), batch, threshold)
     else incrementalNearDedupDirect(corpus, batch, threshold)
   }
-
-  /** [[incrementalNearDedup]] with the exact-duplicate collapse FORCED
-    * on (the q193 gate pattern): the index-probe plan must replay the
-    * direct oracle row-for-row. */
-  def incrementalNearDedupCollapsed(spark: SparkSession, dir: String,
-                                    threshold: Double = 0.5): DataFrame =
-    incrementalNearDedup(spark, dir, threshold, collapse = Some(true))
 
   /** The direct (uncollapsed) batch×corpus probe — correct and cheapest
     * on dup-light corpora, where the fp-group shuffles would buy
@@ -1542,22 +1477,12 @@ object Dedup {
       : DataFrame = {
     val shC = shingledOf(corpus).transform(Memo.persist)
     val shB = shingledOf(batch).transform(Memo.persist)
-    def bandsOf(sh: DataFrame) = signatures(sh)
-      .select(col("doc_id"), explode(bandStructs(col("sig"))).as("bk"))
-    val cand = bandsOf(shB).as("l")
-      .join(bandsOf(shC).as("r"), col("l.bk") === col("r.bk"))
-      .select(col("l.doc_id").as("b_id"), col("r.doc_id").as("c_id"))
-      .distinct()
-    val matches = cand
+    val matches = directProbeCandidates(shB, shC)
       .join(shB.select(col("doc_id").as("b_id"),
                        col("shingles").as("sb")), "b_id")
       .join(shC.select(col("doc_id").as("c_id"),
                        col("shingles").as("sc")), "c_id")
-      .withColumn("inter", graft.functions.SortedIntersectCount
-        .sortedIntersectCount(col("sb"), col("sc")))
-      .withColumn("jaccard", col("inter").cast("double") /
-        (size(col("sb")) + size(col("sc")) - col("inter")))
-      .filter(col("jaccard") >= threshold)
+      .transform(jaccardAtLeast("sb", "sc", threshold))
       .groupBy(col("b_id"))
       .agg(count(lit(1)).as("n_dups"), min(col("c_id")).as("match_id"))
     batch.select(col("doc_id"))
@@ -1568,38 +1493,19 @@ object Dedup {
               col("match_id"))
   }
 
-  /** Diagnostic for the scale certification (SCALE.md incremental
-    * dup-heavy table): the batch×corpus band-candidate counts of the
-    * direct plan vs the collapsed index probe. The collapse's claim is
-    * that its candidate volume tracks DISTINCT fingerprints per side
-    * while the direct join's tracks raw copy products (k·m per
-    * boilerplate band). */
-  private[graft] def incrCandidateCounts(corpus: DataFrame,
-                                         batch: DataFrame): (Long, Long) = {
-    def bandsOf(sh: DataFrame) = signatures(sh)
-      .select(col("doc_id"), explode(bandStructs(col("sig"))).as("bk"))
-    val raw = bandsOf(shingledOf(batch)).as("l")
-      .join(bandsOf(shingledOf(corpus)).as("r"),
-            col("l.bk") === col("r.bk"))
+  /** The candidate stage of [[incrementalNearDedupDirect]]: (b_id, c_id)
+    * batch×corpus doc pairs sharing a band key, over the two shingle
+    * tables. On a dup-heavy delta its volume tracks raw copy products
+    * (k·m per boilerplate band), where [[probeCandidates]] tracks
+    * distinct fingerprints per side. */
+  private[graft] def directProbeCandidates(shB: DataFrame, shC: DataFrame)
+      : DataFrame = {
+    def bands(sh: DataFrame) =
+      signatures(sh).select(col("doc_id"), bandKey(col("sig")))
+    bands(shB).as("l")
+      .join(bands(shC).as("r"), col("l.bk") === col("r.bk"))
       .select(col("l.doc_id").as("b_id"), col("r.doc_id").as("c_id"))
-      .distinct().count()
-    val idx = nearDupIndexOf(corpus)
-    val bk = batch.filter(col("text").isNotNull)
-      .select(col("doc_id"),
-              md5(TextAnalysis.normalized(col("text"))).as("bfp"))
-    val bReps = bk.groupBy(col("bfp")).agg(min(col("doc_id")).as("bmin"))
-    val bRepBands = shingledOf(batch.join(
-        bReps.select(col("bmin").as("doc_id")), Seq("doc_id"),
-        "left_semi"))
-      .join(bk, "doc_id")
-      .select(col("bfp"), explode(bandStructs(
-        graft.functions.MinHashSig.minhashSig(
-          col("shingles"), perms.map(_._1), perms.map(_._2)))).as("bk"))
-    val collapsed = bRepBands
-      .join(idx.select(col("fp"),
-              explode(bandStructs(col("sig"))).as("bk")), "bk")
-      .select(col("bfp"), col("fp")).distinct().count()
-    (raw, collapsed)
+      .distinct()
   }
 
   /** Two-batch standing-index MAINTENANCE certification (gate q233):
@@ -1859,31 +1765,6 @@ object Dedup {
     }
     fs.delete(old, true)
     n
-  }
-
-  /** Diagnostic for the N-batch maintenance table (`ScaleSmoke
-    * indexmaint`): the band-join candidate count of probing `batch`
-    * against a standing index frame — the collapsed-side counter of
-    * [[incrCandidateCounts]], reusable against a LOADED index. The
-    * delta-scaling contract says this tracks the batch's distinct
-    * content, not the index's accumulated size. */
-  private[graft] def indexProbeCandidates(index: DataFrame,
-                                          batch: DataFrame): Long = {
-    val bk = batch.filter(col("text").isNotNull)
-      .select(col("doc_id"),
-              md5(TextAnalysis.normalized(col("text"))).as("bfp"))
-    val bReps = bk.groupBy(col("bfp")).agg(min(col("doc_id")).as("bmin"))
-    val bRepBands = shingledOf(batch.join(
-        bReps.select(col("bmin").as("doc_id")), Seq("doc_id"),
-        "left_semi"))
-      .join(bk, "doc_id")
-      .select(col("bfp"), explode(bandStructs(
-        graft.functions.MinHashSig.minhashSig(
-          col("shingles"), perms.map(_._1), perms.map(_._2)))).as("bk"))
-    bRepBands
-      .join(index.select(col("fp"),
-              explode(bandStructs(col("sig"))).as("bk")), "bk")
-      .select(col("bfp"), col("fp")).distinct().count()
   }
 
   /** Gate q234: the durable lifecycle end to end, with every arrow

@@ -1244,7 +1244,7 @@ object Streams {
     * time). The stateless minhash front end (normalize → 3-gram md5
     * shingles → 32-perm signature → 8×4 banding) is literally the batch
     * q26 operator's code (`Dedup.shingledOf`/`signatures`/
-    * `bandStructs`); the index is keyed state per (band, band-key):
+    * `bandKey`); the index is keyed state per (band, band-key):
     * ONE long (the smallest doc_id seen) — bounded regardless of corpus
     * size, the same growth law as the batch LSH bucket table. A doc
     * emits one [[DupHit]] per band whose bucket already holds an
@@ -1261,8 +1261,7 @@ object Streams {
     val spark = docs.sparkSession
     import spark.implicits._
     graft.ext.Dedup.signatures(graft.ext.Dedup.shingledOf(docs))
-      .select(col("doc_id"),
-              explode(graft.ext.Dedup.bandStructs(col("sig"))).as("bk"))
+      .select(col("doc_id"), graft.ext.Dedup.bandKey(col("sig")))
       .select(col("bk.band").as("band"),
               col("bk.s0").as("s0"), col("bk.s1").as("s1"),
               col("bk.s2").as("s2"), col("bk.s3").as("s3"),

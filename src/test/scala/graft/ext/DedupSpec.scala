@@ -92,11 +92,11 @@ class DedupSpec extends SparkSpec {
 
   test("AMS candidate estimate tracks the true band self-join volume") {
     val sh = Dedup.shingledOf(graft.Tables.load(spark, sfDir, "documents"))
-    val est = Dedup.estimatedCandidates(sh)
+    val est = Dedup.estimatedCandidatesOfSig(Dedup.signatures(sh))
     // apples-to-apples truth: the PRE-distinct ordered band join volume
     // (F2 - N)/2 estimates — multi-band duplicates included
     val bands = Dedup.signatures(sh).select(col("doc_id"),
-      explode(Dedup.bandStructs(col("sig"))).as("bk"))
+      Dedup.bandKey(col("sig")))
     val actual = bands.as("l").join(bands.as("r"),
         col("l.bk") === col("r.bk") &&
         col("l.doc_id") < col("r.doc_id")).count()
@@ -142,7 +142,7 @@ class DedupSpec extends SparkSpec {
       .withColumn("n_chars", length(col("text")))
     val sh = Dedup.shingledOf(docs)
     assert(sh.count() == 0, "3-gram shingling of <3-word docs is empty")
-    assert(Dedup.estimatedCandidates(sh) == 0L)
+    assert(Dedup.estimatedCandidatesOfSig(Dedup.signatures(sh)) == 0L)
   }
 
   test("exact-dup collapse output is row-identical to the direct path") {
@@ -162,16 +162,11 @@ class DedupSpec extends SparkSpec {
           (42L, "another unrelated document mentioning parquet column " +
                 "pruning predicate pushdown and shuffle partitioning"))
     ).toDF("doc_id", "text")
-    val prev = spark.conf.getOption(Dedup.CollapseDupFractionKey)
-    def run(conf: String): Seq[String] = {
-      spark.conf.set(Dedup.CollapseDupFractionKey, conf)
-      try Dedup.minhashLshOf(spark, docs, 0.5)
+    def run(collapse: Boolean): Seq[String] =
+      Dedup.minhashLshOf(docs, 0.5, collapse = Some(collapse))
         .collect().map(_.toString).sorted.toSeq
-      finally prev.fold(spark.conf.unset(Dedup.CollapseDupFractionKey))(
-        v => spark.conf.set(Dedup.CollapseDupFractionKey, v))
-    }
-    val collapsed = run("0.0") // force collapse
-    val direct = run("1.1")    // force direct
+    val collapsed = run(true)
+    val direct = run(false)
     assert(collapsed.nonEmpty, "planted duplicates must yield pairs")
     assert(collapsed == direct,
       s"collapse must be exact:\ncollapsed=$collapsed\ndirect=$direct")
@@ -194,7 +189,10 @@ class DedupSpec extends SparkSpec {
       Seq((101L, "some genuinely unique document text about databases " +
                  "query optimization and distributed execution engines"))
     ).toDF("doc_id", "text")
-    val directCand = Dedup.candidatePairs(Dedup.shingledOf(docs)).count()
+    def candidates(d: org.apache.spark.sql.DataFrame) =
+      Dedup.candidatePairsOfSig(Dedup.signatures(Dedup.shingledOf(d)))
+        .count()
+    val directCand = candidates(docs)
     assert(directCand >= 80L * 79 / 2,
       s"direct banding must pay the quadratic bucket: $directCand")
     // collapsed: candidates are generated over representatives only
@@ -203,18 +201,13 @@ class DedupSpec extends SparkSpec {
     val reps = docs.join(
       keyed.groupBy(col("fp")).agg(min(col("doc_id")).as("doc_id")),
       Seq("doc_id"), "left_semi")
-    val repCand = Dedup.candidatePairs(Dedup.shingledOf(reps)).count()
+    val repCand = candidates(reps)
     assert(repCand <= 1L,
       s"rep banding must see at most the cross-group pair: $repCand")
     // and the full collapsed operator still emits every member pair
-    val prev = spark.conf.getOption(Dedup.CollapseDupFractionKey)
-    spark.conf.set(Dedup.CollapseDupFractionKey, "0.0")
-    try {
-      val out = Dedup.minhashLshOf(spark, docs, 0.5)
-      assert(out.count() == 80L * 79 / 2)
-      assert(out.filter(col("jaccard") =!= 1.0).count() == 0)
-    } finally prev.fold(spark.conf.unset(Dedup.CollapseDupFractionKey))(
-      v => spark.conf.set(Dedup.CollapseDupFractionKey, v))
+    val out = Dedup.minhashLshOf(docs, 0.5, collapse = Some(true))
+    assert(out.count() == 80L * 79 / 2)
+    assert(out.filter(col("jaccard") =!= 1.0).count() == 0)
   }
 
   test("forced collapse is row-identical across all four pair families") {
@@ -238,31 +231,19 @@ class DedupSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("collapse4").toString
     rows.toDF("doc_id", "source", "text")
       .write.parquet(s"$dir/documents.parquet")
-    val families: Seq[(String, () => org.apache.spark.sql.DataFrame,
-                               () => org.apache.spark.sql.DataFrame)] = Seq(
-      ("minhash", () => Dedup.minhashLsh(spark, dir),
-                  () => Dedup.minhashLshCollapsed(spark, dir)),
-      ("simhash", () => Dedup.simhashPairs(spark, dir),
-                  () => Dedup.simhashPairsCollapsed(spark, dir)),
-      ("jaccard", () => Dedup.jaccardPairs(spark, dir, 0.8),
-                  () => Dedup.jaccardPairsCollapsed(spark, dir, 0.8)),
-      ("containment", () => Dedup.containmentPairs(spark, dir),
-                      () => Dedup.containmentPairsCollapsed(spark, dir)),
-      ("containment_est", () => Dedup.containmentEstimate(spark, dir),
-        () => {
-          spark.conf.set(Dedup.CollapseDupFractionKey, "0.0")
-          try Dedup.containmentEstimate(spark, dir)
-          finally spark.conf.unset(Dedup.CollapseDupFractionKey)
-        }))
-    val prev = spark.conf.getOption(Dedup.CollapseDupFractionKey)
-    for ((name, direct, collapsed) <- families) {
-      // dup fraction is always < 1.1 -> the direct pipeline
-      spark.conf.set(Dedup.CollapseDupFractionKey, "1.1")
-      val d =
-        try direct().collect().map(_.toString).sorted.toSeq
-        finally prev.fold(spark.conf.unset(Dedup.CollapseDupFractionKey))(
-          v => spark.conf.set(Dedup.CollapseDupFractionKey, v))
-      val cDf = collapsed()
+    val families: Seq[(String,
+                       Option[Boolean] => org.apache.spark.sql.DataFrame)] =
+      Seq(
+        ("minhash", c => Dedup.minhashLsh(spark, dir, collapse = c)),
+        ("simhash", c => Dedup.simhashPairs(spark, dir, collapse = c)),
+        ("jaccard", c => Dedup.jaccardPairs(spark, dir, 0.8, collapse = c)),
+        ("containment",
+          c => Dedup.containmentPairs(spark, dir, collapse = c)),
+        ("containment_est",
+          c => Dedup.containmentEstimate(spark, dir, collapse = c)))
+    for ((name, family) <- families) {
+      val d = family(Some(false)).collect().map(_.toString).sorted.toSeq
+      val cDf = family(Some(true))
       // the collapsed plan is structurally distinct (intra ∪ cross
       // union); asserting it guards against the forced gate silently
       // running the direct pipeline (e.g. a probe quirk) — identical
@@ -276,37 +257,10 @@ class DedupSpec extends SparkSpec {
     // the cross-source identical pair (1,9) exists for the corpus-wide
     // families and is absent for the same-source ones
     def has19(s: Seq[String]) = s.exists(_.startsWith("[1,9,"))
-    spark.conf.set(Dedup.CollapseDupFractionKey, "1.1")
-    try {
-      assert(has19(Dedup.minhashLsh(spark, dir)
-        .collect().map(_.toString).sorted.toSeq))
-      assert(!has19(Dedup.jaccardPairs(spark, dir, 0.8)
-        .collect().map(_.toString).sorted.toSeq))
-    } finally prev.fold(spark.conf.unset(Dedup.CollapseDupFractionKey))(
-      v => spark.conf.set(Dedup.CollapseDupFractionKey, v))
-  }
-
-  test("a forced-collapse twin never writes the collapse key") {
-    // the twin's decision is an argument: another thread of the session
-    // polling the threshold key while q193's operator builds and runs
-    // must never see it set, and the twin still equals the direct plan
-    val key = Dedup.CollapseDupFractionKey
-    assert(spark.conf.getOption(key).isEmpty)
-    val seen = new java.util.concurrent.atomic.AtomicReference[String]()
-    val done = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val poller = new Thread(() =>
-      while (!done.get)
-        spark.conf.getOption(key).foreach(seen.compareAndSet(null, _)))
-    poller.start()
-    val collapsed =
-      try Dedup.minhashLshCollapsed(spark, sfDir)
-        .collect().map(_.toString).sorted.toSeq
-      finally { done.set(true); poller.join() }
-    assert(seen.get == null, s"another thread saw $key = ${seen.get}")
-    val direct = Dedup.minhashLsh(spark, sfDir, collapse = Some(false))
-      .collect().map(_.toString).sorted.toSeq
-    assert(direct.nonEmpty)
-    assert(collapsed == direct)
+    assert(has19(Dedup.minhashLsh(spark, dir, collapse = Some(false))
+      .collect().map(_.toString).sorted.toSeq))
+    assert(!has19(Dedup.jaccardPairs(spark, dir, 0.8, collapse = Some(false))
+      .collect().map(_.toString).sorted.toSeq))
   }
 
   test("simhash pairs are within the Hamming bound, found via chunks") {
@@ -319,7 +273,8 @@ class DedupSpec extends SparkSpec {
   }
 
   test("simhash combinatorial-block pairs equal the brute-force Hamming join") {
-    val sh = Dedup.simhashes(spark, sfDir).cache()
+    val sh = Dedup.simhashesOf(graft.Tables.load(spark, sfDir, "documents"))
+      .cache()
     val brute = sh.as("l").join(sh.as("r"),
         col("l.doc_id") < col("r.doc_id"))
       .select(col("l.doc_id").as("a_id"), col("r.doc_id").as("b_id"),
@@ -582,7 +537,8 @@ class DedupSpec extends SparkSpec {
 
   test("minhash-LSH vs brute-force exact pairs: precision exactly 1, recall floor") {
     val t = 0.5
-    val sh = Dedup.shingled(spark, sfDir).cache()
+    val sh = Dedup.shingledOf(graft.Tables.load(spark, sfDir, "documents"))
+      .cache()
     // ground truth: all-pairs exact shingle Jaccard >= t (test-only
     // O(n^2) join — never a production plan shape)
     val exact = sh.as("l").join(sh.as("r"),
@@ -611,9 +567,10 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhash signature is stable across runs (fixed permutations)") {
-    val sig1 = Dedup.signatures(Dedup.shingled(spark, sfDir))
+    def docs = graft.Tables.load(spark, sfDir, "documents")
+    val sig1 = Dedup.signatures(Dedup.shingledOf(docs))
       .orderBy("doc_id").limit(3).collect().map(_.toString).toSeq
-    val sig2 = Dedup.signatures(Dedup.shingled(spark, sfDir))
+    val sig2 = Dedup.signatures(Dedup.shingledOf(docs))
       .orderBy("doc_id").limit(3).collect().map(_.toString).toSeq
     assert(sig1 == sig2)
   }

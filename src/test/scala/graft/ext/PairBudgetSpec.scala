@@ -96,13 +96,16 @@ class PairBudgetSpec extends SparkSpec {
   }
 
   test("malformed budget value fails naming the conf key and the text") {
+    // one guard parses the value for both exact families
     spark.conf.set(Dedup.PairBudgetKey, "not-a-number")
     try {
-      val ex = intercept[IllegalArgumentException] {
-        Dedup.jaccardPairsOf(explosive(10), 0.5)
+      for (family <- Seq[() => Any](
+             () => Dedup.jaccardPairsOf(explosive(10), 0.5),
+             () => Dedup.containmentPairsOf(explosiveContainment(10), 0.9))) {
+        val ex = intercept[IllegalArgumentException](family())
+        assert(ex.getMessage.contains(Dedup.PairBudgetKey))
+        assert(ex.getMessage.contains("not-a-number"))
       }
-      assert(ex.getMessage.contains(Dedup.PairBudgetKey))
-      assert(ex.getMessage.contains("not-a-number"))
     } finally spark.conf.unset(Dedup.PairBudgetKey)
   }
 

@@ -330,8 +330,7 @@ class StreamsSpec extends SparkSpec {
   test("streaming minhash dedup equals the batch bucket-min join (single batch)") {
     val docs = graft.Tables.load(spark, sfDir, "documents")
     val bands = graft.ext.Dedup.signatures(graft.ext.Dedup.shingledOf(docs))
-      .select(col("doc_id"),
-              explode(graft.ext.Dedup.bandStructs(col("sig"))).as("bk"))
+      .select(col("doc_id"), graft.ext.Dedup.bandKey(col("sig")))
     val mins = bands.groupBy(col("bk")).agg(min(col("doc_id")).as("a_id"))
     val expected = bands.join(mins, "bk")
       .filter(col("doc_id") > col("a_id"))

@@ -6,8 +6,16 @@ import org.apache.spark.sql.SparkSession
   * to files (for the optimization-round before/after plan evidence).
   *
   * Usage: Test/runMain graft.tools.PlanDump <outDir> <suffix> qNN [qNN...]
-  *   → <outDir>/<gate>_<suffix>.txt per gate.
+  *   → <outDir>/<gate>_<suffix>.txt per gate. A gate is named in full
+  *   (`q26_dedup_minhash`) or by its number (`q26`).
   * Env: SPARK_GRAFT_SF_DIR (default sf0.1).
+  *
+  * Expression ids (`#123`) and plan ids (`plan_id=45`) are session-wide
+  * counters, so the same plan built after different earlier work prints
+  * different numbers. Both are renumbered in order of first appearance
+  * within each dump, and the source line of an RDD's call site
+  * (`Dedup.scala:1204`) is dropped: dumps of two commits with the same
+  * suffix then `diff -r` to nothing when their plans match.
   *
   * Same session shape as Bench (local[32], 32 shuffle partitions) so the
   * captured plans are the benched plans. Streaming gates run their query
@@ -31,10 +39,14 @@ object PlanDump {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val queries = graft.SparkEntry.queries
-    gates.foreach { name =>
+    gates.flatMap { g =>
+      val hits = queries.keys.filter(k => k == g || k.startsWith(g + "_"))
+      require(hits.nonEmpty, s"no gate named $g")
+      hits.toSeq.sorted
+    }.foreach { name =>
       val df = queries(name)(spark, sfDir)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = renumbered(df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
       java.nio.file.Files.write(
         outDir.resolve(s"${name}_$suffix.txt"),
         plan.getBytes("UTF-8"))
@@ -42,4 +54,16 @@ object PlanDump {
     }
     spark.stop()
   }
+
+  /** `plan` with every `#n` and `plan_id=n` replaced by its rank of first
+    * appearance (each kind counted on its own), and `.scala:n` call-site
+    * lines dropped. */
+  private[tools] def renumbered(plan: String): String =
+    Seq("#" -> "#(\\d+)", "plan_id=" -> "plan_id=(\\d+)")
+      .foldLeft(plan.replaceAll("\\.scala:\\d+", ".scala")) {
+        case (text, (prefix, pattern)) =>
+          val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
+          pattern.r.replaceAllIn(text, m =>
+            prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+      }
 }

@@ -716,27 +716,27 @@ object ScaleSmoke {
       }
       println(s"[scale] dup10 docs = " +
         spark.read.parquet(s"$out/documents.parquet").count())
-      val fams: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        ("minhash", () => graft.ext.Dedup.minhashLsh(spark, out)),
-        ("simhash", () => graft.ext.Dedup.simhashPairs(spark, out)),
-        ("jaccard", () => graft.ext.Dedup.jaccardPairs(spark, out, 0.8)),
-        ("containment",
-          () => graft.ext.Dedup.containmentPairs(spark, out)))
-      val key = graft.ext.Dedup.CollapseDupFractionKey
+      val fams: Seq[(String, Boolean => org.apache.spark.sql.DataFrame)] =
+        Seq(
+          ("minhash", c => graft.ext.Dedup.minhashLsh(spark, out,
+            collapse = Some(c))),
+          ("simhash", c => graft.ext.Dedup.simhashPairs(spark, out,
+            collapse = Some(c))),
+          ("jaccard", c => graft.ext.Dedup.jaccardPairs(spark, out, 0.8,
+            collapse = Some(c))),
+          ("containment", c => graft.ext.Dedup.containmentPairs(spark, out,
+            collapse = Some(c))))
       println(f"[scale] ${"family"}%-14s ${"t_direct"}%9s ${"t_collapsed"}%12s ${"speedup"}%8s ${"rows"}%10s")
       for ((name, fn) <- fams) {
-        def timed(frac: String): (Double, Long) = {
-          spark.conf.set(key, frac)
-          try {
-            coldStart()
-            val t0 = System.nanoTime()
-            val rows = fn().count()
-            ((System.nanoTime() - t0) / 1e9, rows)
-          } finally spark.conf.unset(key)
+        def timed(collapse: Boolean): (Double, Long) = {
+          coldStart()
+          val t0 = System.nanoTime()
+          val rows = fn(collapse).count()
+          ((System.nanoTime() - t0) / 1e9, rows)
         }
-        timed("0.0") // warm JIT/codegen on the cheap side
-        val (tc, rc) = timed("0.0")
-        val (td, rd) = timed("1.1")
+        timed(true) // warm JIT/codegen on the cheap side
+        val (tc, rc) = timed(true)
+        val (td, rd) = timed(false)
         assert(rd == rc, s"$name: direct $rd != collapsed $rc rows")
         println(f"[scale] $name%-14s $td%8.2fs $tc%11.2fs ${td / math.max(tc, 1e-9)}%7.1fx $rd%10d")
       }
@@ -764,27 +764,29 @@ object ScaleSmoke {
       val (nC, dC) = (corpus.count(), corpus.select(fp).distinct().count())
       val (nB, dB) = (batch.count(), batch.select(fp).distinct().count())
       coldStart()
-      val (candRaw, candRep) =
-        graft.ext.Dedup.incrCandidateCounts(corpus, batch)
+      // the two plans' own candidate stages: batch×corpus doc pairs vs
+      // batch-rep × index-row fingerprint pairs
+      val candRaw = graft.ext.Dedup.directProbeCandidates(
+        graft.ext.Dedup.shingledOf(batch),
+        graft.ext.Dedup.shingledOf(corpus)).count()
+      val candRep = graft.ext.Dedup.probeCandidates(
+        graft.ext.Dedup.nearDupIndexOf(corpus), batch)._3.count()
       println(s"[scale] incrdup corpus=$nC (distinct $dC) " +
         s"batch=$nB (distinct $dB)")
       println(f"[scale] incrdup candidates: direct=$candRaw collapsed=$candRep ratio=${candRaw.toDouble / math.max(candRep, 1L)}%.1f (copy product ${nC.toDouble / dC * nB / dB}%.0f)")
-      val key = graft.ext.Dedup.CollapseDupFractionKey
-      def timed(frac: String): (Double, Long, Long) = {
-        spark.conf.set(key, frac)
-        try {
-          coldStart()
-          val t0 = System.nanoTime()
-          val r = graft.ext.Dedup.incrementalNearDedup(spark, dir)
-            .agg(count(lit(1)), expr(
-              "bit_xor(xxhash64(doc_id, novel, n_dups, match_id))"))
-            .head()
-          ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
-        } finally spark.conf.unset(key)
+      def timed(collapse: Boolean): (Double, Long, Long) = {
+        coldStart()
+        val t0 = System.nanoTime()
+        val r = graft.ext.Dedup
+          .incrementalNearDedup(spark, dir, collapse = Some(collapse))
+          .agg(count(lit(1)), expr(
+            "bit_xor(xxhash64(doc_id, novel, n_dups, match_id))"))
+          .head()
+        ((System.nanoTime() - t0) / 1e9, r.getLong(0), r.getLong(1))
       }
-      timed("0.0") // warm JIT/codegen on the cheap side
-      val (tc, rowsC, chkC) = timed("0.0")
-      val (td, rowsD, chkD) = timed("1.1")
+      timed(true) // warm JIT/codegen on the cheap side
+      val (tc, rowsC, chkC) = timed(true)
+      val (td, rowsD, chkD) = timed(false)
       assert(rowsD == rowsC && chkD == chkC,
         s"direct ($rowsD, $chkD) != collapsed ($rowsC, $chkC)")
       println(f"[scale] incrdup t_direct=$td%.1fs t_collapsed=$tc%.1fs speedup=${td / math.max(tc, 1e-9)}%.1fx rows=$rowsD checksums_match=true")
@@ -887,22 +889,23 @@ object ScaleSmoke {
           .select(col("doc_id"), col("text"))
           .persist()
         val distinct = reps.count()
-        val candRep = graft.ext.Dedup.lshCandidateCountOf(reps)
-        val candRaw = graft.ext.Dedup.lshCandidateCountOf(docs)
+        // the LSH band join's own candidate stage, over each side
+        def lshCandidates(d: DataFrame): Long =
+          graft.ext.Dedup.candidatePairsOfSig(graft.ext.Dedup.signatures(
+            graft.ext.Dedup.shingledOf(d))).count()
+        val candRep = lshCandidates(reps)
+        val candRaw = lshCandidates(docs)
         reps.unpersist(blocking = false)
-        val key = graft.ext.Dedup.CollapseDupFractionKey
-        def timedMinhash(frac: String): Double = {
-          spark.conf.set(key, frac)
-          try {
-            coldStart()
-            val t0 = System.nanoTime()
-            graft.ext.Dedup.minhashLsh(spark, dir).count()
-            (System.nanoTime() - t0) / 1e9
-          } finally spark.conf.unset(key)
+        def timedMinhash(collapse: Boolean): Double = {
+          coldStart()
+          val t0 = System.nanoTime()
+          graft.ext.Dedup.minhashLsh(spark, dir, collapse = Some(collapse))
+            .count()
+          (System.nanoTime() - t0) / 1e9
         }
-        timedMinhash("0.0") // warm
-        val tColl = timedMinhash("0.0")
-        val tDir = timedMinhash("1.1")
+        timedMinhash(true) // warm
+        val tColl = timedMinhash(true)
+        val tDir = timedMinhash(false)
         println(f"[scale] $tag%-10s $raw%9d $distinct%9d $candRep%9d $candRaw%12d $tColl%7.1fs $tDir%7.1fs")
       }
       spark.stop()
@@ -1381,7 +1384,7 @@ object ScaleSmoke {
         val batch = copies.unionByName(fresh)
         coldStart()
         val cand = graft.ext.Dedup
-          .indexProbeCandidates(spark.read.parquet(idxPath), batch)
+          .probeCandidates(spark.read.parquet(idxPath), batch)._3.count()
         coldStart()
         val tb = System.nanoTime()
         val probe = graft.ext.Dedup
