@@ -1,8 +1,9 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQueryProgress, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming operators over the `events` stream — the
@@ -20,7 +21,25 @@ import org.apache.spark.sql.types._
   * Each streaming pipeline also has a bounded `Trigger.AvailableNow` run
   * used by the driver gate: the static events table processed as a stream
   * must produce exactly the batch answer (checked against the same DuckDB
-  * oracle SQL as the batch twin).
+  * oracle SQL as the batch twin). Every bounded run goes through
+  * [[runBounded]], whose only inputs are its arguments: the output mode,
+  * the state partition count, the trailing no-data batch and the state
+  * store backend.
+  *
+  * Shared pieces, each defined once:
+  *   - [[hourlyRollup]], [[sessionWindows]] and [[funnelJoin]] build the
+  *     hourly, session-window and funnel pipelines for the solo gates and
+  *     the shared events-family run alike;
+  *   - the Bloom keep-first kernel ([[keepFirst]]): a family projects
+  *     `(shard, key, ordering columns, payload)` into its own row type,
+  *     the kernel folds each shard's rows in the family's order through
+  *     one fixed-size Bloom filter per shard and emits the rows whose key
+  *     it had not seen, and the family selects its output columns. The
+  *     event (q206), content (q207) and paragraph (q215) dedups are three
+  *     projections over that one kernel;
+  *   - the multi-batch harness ([[multiBatch]]): stage a table twice as
+  *     part files, stream it one file per micro-batch through a pipeline,
+  *     and fail unless the run really took one batch per file.
   */
 object Streams {
 
@@ -85,12 +104,18 @@ object Streams {
     * once the watermark passes its end, and its state is dropped —
     * bounded state, exactly-once per window. */
   def hourlyAgg(events: DataFrame, watermark: String = "2 hours"): DataFrame =
+    hourlyRollup(events.withWatermark("ts", watermark))
+
+  /** The hourly rollup every hourly pipeline here shares: per (hour,
+    * event_type) the event count `n` and `round(sum(value), 2)`, with the
+    * hour `h` as NTZ at the output edge, so it compares naive-to-naive
+    * with the batch twin and the DuckDB oracle under the UTC session. */
+  def hourlyRollup(events: DataFrame): DataFrame =
     events
-      .withWatermark("ts", watermark)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").as("h"), col("event_type"),
-              col("n"), col("sum_value"))
+      .select(col("window.start").cast("timestamp_ntz").as("h"),
+              col("event_type"), col("n"), col("sum_value"))
 
   /** Streaming exact dedup by event_id within the watermark horizon —
     * the streaming form of exact dedup: per-key state holds only ids
@@ -160,22 +185,34 @@ object Streams {
     Iterator.single(SessionCounts(userId, st.nEvents, st.nSessions))
   }
 
+  /** The events stream unioned with itself: an at-least-once source
+    * redelivering every event, the input of the dedup gates. */
+  private[graft] def redelivered(spark: SparkSession, dir: String): DataFrame = {
+    val ev = readEventsStream(spark, dir)
+    ev.union(ev)
+  }
+
   // ---- bounded (AvailableNow) runs for the driver gate --------------
 
-  /** Dev probe: cumulative bytes under each bounded run's state dir,
-    * recorded just before checkpoint cleanup when
-    * `-Dgraft.stream.measureState` is set — the ScaleSmoke streaming
-    * table reads this to report RocksDB state footprint per gate. */
-  private val stateBytesAcc = new java.util.concurrent.atomic.AtomicLong(0L)
-  private[graft] def resetStateBytesProbe(): Unit = stateBytesAcc.set(0L)
-  private[graft] def stateBytesProbe: Long = stateBytesAcc.get()
+  /** Scratch directory of throwaway bounded-run checkpoints and
+    * redelivery stages: the RAM-backed tmpfs when there is one
+    * (offset/commit-log and state-store fsyncs dominate small
+    * AvailableNow runs), else the JVM temp dir. Production queries pass
+    * a durable checkpointLocation instead. */
+  private lazy val scratchDir: String = {
+    val shm = new java.io.File("/dev/shm")
+    if (shm.isDirectory && shm.canWrite) "/dev/shm"
+    else System.getProperty("java.io.tmpdir")
+  }
 
-  /** Number of micro-batches the most recent [[runBounded]] executed
-    * (from the terminated query's last progress). The multi-batch
-    * certification gates require this to be ≥ their staged file count
-    * — a silent collapse into one batch would certify nothing. */
-  private val lastBatchesAcc = new java.util.concurrent.atomic.AtomicLong(-1L)
-  private[graft] def lastRunBatches: Long = lastBatchesAcc.get()
+  /** Progress of the last micro-batch the most recent [[runBounded]]
+    * executed: its batch id certifies the multi-batch gates
+    * ([[requireMultiBatch]]), and its state operators report the state
+    * rows and memory the run ended with. */
+  private val lastProgress =
+    new java.util.concurrent.atomic.AtomicReference[StreamingQueryProgress]()
+  private[graft] def lastRunProgress: Option[StreamingQueryProgress] =
+    Option(lastProgress.get)
 
   /** Drop the memory-sink temp views left by bounded runs, releasing
     * their buffered rows. Each bounded gate pins its FULL output in
@@ -196,125 +233,68 @@ object Streams {
       .foreach(eventsFamilyCache.remove)
   }
 
+  /** Run `df` to a memory sink with `Trigger.AvailableNow` and return the
+    * sink's table. Bounded-run cost is almost all per-micro-batch
+    * machinery, so the run spends few batches and few state partitions:
+    *   - `noDataBatch`: no-data micro-batches exist to advance the
+    *     watermark for append-mode emission. Complete/Update gates emit
+    *     everything in the final data batch, so they skip it; the
+    *     append-mode gates need it, because their windows only emit once
+    *     the watermark passes them.
+    *   - `statePartitions`: each shuffle partition is a state-store
+    *     instance with its own load/commit lifecycle per batch. One store
+    *     serializes all state work on one core (cold runs showed 1
+    *     partition tripling the dedup gate), so the default is 4; the
+    *     multi-batch gates, which pay the lifecycle once per batch over
+    *     tiny Bloom state, pass 1.
+    *   - `rocksDb`: RocksDB is the production backend for large keyed
+    *     state (off-heap, incremental changelog checkpoints), but for
+    *     kilobyte-sized bounded state its per-(batch × partition)
+    *     lifecycle is pure fixed cost (six fixed-cost gates measured
+    *     19.8 s RocksDB vs 16.9 s in-heap, cold), and the certified
+    *     semantics are provider-independent. So runs default to the
+    *     in-heap provider and q208 keeps RocksDB certified.
+    * All four settings are session confs, scoped around the run (the
+    * query pins its state partition count at first start from its own
+    * checkpoint, so batch queries in the session are unaffected). */
   private[graft] def runBounded(df: DataFrame, mode: OutputMode,
                          statePartitions: Int = 4,
                          noDataBatch: Boolean = false,
                          rocksDb: Boolean = false): DataFrame = {
-    // tuning knob for gate/probe runs: -Dgraft.stream.statePartitions=N
-    // overrides every bounded run's state partition count; malformed or
-    // non-positive values fall back to the default instead of throwing
-    // from deep inside the stream run
-    val parts = sys.props.get("graft.stream.statePartitions")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(statePartitions)
     val spark = df.sparkSession
     val name = "graft_stream_" +
       java.util.UUID.randomUUID().toString.replace("-", "")
-    // throwaway checkpoint for a bounded verification run: prefer the
-    // RAM-backed tmpfs (offset/commit-log + state-store fsyncs dominate
-    // small AvailableNow runs); production queries pass a durable
-    // checkpointLocation instead.
-    val ckptBase = {
-      val shm = new java.io.File("/dev/shm")
-      if (shm.isDirectory && shm.canWrite) "/dev/shm" else
-        System.getProperty("java.io.tmpdir")
-    }
-    // Bounded-run cost is almost all per-micro-batch machinery, so spend
-    // fewer batches and fewer state partitions:
-    //   - no-data micro-batches exist to advance the watermark for
-    //     append-mode emission; gate runs in Complete/Update modes emit
-    //     everything in the final data batch, so the trailing empty
-    //     batch is pure overhead — skip it (noDataBatch = false). The
-    //     chained-stateful append gate NEEDS it: its windows only emit
-    //     once the watermark passes them, which takes the extra batch.
-    //   - each shuffle partition is a state-store instance with its own
-    //     load/commit lifecycle per batch; the bounded verification data
-    //     does not need 32 of them, but it DOES need more than one: a
-    //     single store serializes all state work on one core (a warm
-    //     probe once suggested 1 beats 4, but cold runs — the bench
-    //     methodology — showed 1 partition tripling the dedup gate, so
-    //     the default is 4: enough stores to spread commit work, few
-    //     enough that per-store lifecycle overhead stays small).
-    // Both are session confs, scoped around the run (the query pins its
-    // state partition count at first start from its own checkpoint, so
-    // batch queries in the session are unaffected).
-    //
-    // State store backend. RocksDB is the PRODUCTION choice for
-    // 100 TB keyed state (dedup keys, open sessions, HLL registers):
-    // state lives off-heap/on-disk in an embedded LSM instead of the
-    // default provider's in-heap HashMap, so executor heap stops being
-    // the state ceiling and checkpoint deltas ship incrementally
-    // (changelog files), not as full HDFS snapshots. For BOUNDED
-    // CERTIFICATION runs, though, the per-(batch × partition) RocksDB
-    // instance lifecycle is pure fixed cost against kilobyte-sized
-    // state — the r16 `ScaleSmoke streamcost` cold A/B measured the
-    // six fixed-cost gates at 19.8 s RocksDB vs 16.9 s in-heap — and
-    // the certified SEMANTICS are provider-independent. So bounded
-    // runs default to the in-heap provider, while the RocksDB path
-    // keeps a standing certification: q208 (the cross-batch Bloom
-    // state gate, the most production-shaped keyed-state lifecycle)
-    // pins rocksDb = true, and -Dgraft.stream.stateStore=rocksdb|hdfs
-    // overrides everything for full-suite A/Bs.
-    val provider = (sys.props.get("graft.stream.stateStore") match {
-      case Some("hdfs")    => Some(false)
-      case Some("rocksdb") => Some(true)
-      case _               => None
-    }).getOrElse(rocksDb) match {
-      case true => "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider"
-      case false => "org.apache.spark.sql.execution.streaming." +
-        "state.HDFSBackedStateStoreProvider"
-    }
-    // Changelog checkpointing: per-batch state durability ships the
-    // batch's DELTA instead of a full RocksDB snapshot — the production
-    // setting for incremental state at scale, and it also trims the
-    // bounded runs' per-batch commit cost.
+    val ckpt = new java.io.File(scratchDir, s"graft_ckpt_$name")
+    val provider = "org.apache.spark.sql.execution.streaming.state." +
+      (if (rocksDb) "RocksDBStateStoreProvider"
+       else "HDFSBackedStateStoreProvider")
     graft.ops.SessionConf.scoped(spark,
         "spark.sql.streaming.noDataMicroBatches.enabled" ->
           noDataBatch.toString,
-        "spark.sql.shuffle.partitions" -> parts.toString,
+        "spark.sql.shuffle.partitions" -> statePartitions.toString,
         "spark.sql.streaming.stateStore.providerClass" -> provider,
         ("spark.sql.streaming.stateStore.rocksdb." +
           "changelogCheckpointing.enabled") -> "true") {
       val started = df.writeStream.format("memory").queryName(name)
-        .option("checkpointLocation", s"$ckptBase/graft_ckpt_$name")
+        .option("checkpointLocation", ckpt.getPath)
         .outputMode(mode).trigger(Trigger.AvailableNow()).start()
       started.awaitTermination()
-      lastBatchesAcc.set(
-        Option(started.lastProgress).fold(-1L)(_.batchId + 1L))
+      lastProgress.set(started.lastProgress)
     }
-    // state-footprint probe (dev measurement), then best-effort cleanup
-    // of the throwaway checkpoint
-    try {
-      if (sys.props.contains("graft.stream.measureState")) {
-        def du(f: java.io.File): Long =
-          if (f.isDirectory)
-            Option(f.listFiles).fold(0L)(_.map(du).sum)
-          else f.length
-        val sd = new java.io.File(s"$ckptBase/graft_ckpt_$name/state")
-        if (sd.exists) stateBytesAcc.addAndGet(du(sd))
-      }
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm)
-        f.delete(); ()
-      }
-      rm(new java.io.File(s"$ckptBase/graft_ckpt_$name"))
-    } catch { case _: Throwable => () }
+    // best-effort cleanup of the throwaway checkpoint
+    def rm(f: java.io.File): Unit = {
+      if (f.isDirectory) f.listFiles().foreach(rm)
+      f.delete(); ()
+    }
+    try rm(ckpt) catch { case _: Throwable => () }
     spark.table(name)
   }
 
   /** Static events dir processed as a stream; must equal the batch
     * hourly aggregation (q32's oracle). Complete mode: the final trigger
     * emits every window, closed or not, so the bounded run is exact. */
-  def hourlyAggAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val agg = readEventsStream(spark, dir)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      // NTZ at the output edge: compares naive-to-naive with the batch
-      // twin and the DuckDB oracle under the UTC session
-      .select(col("window.start").cast("timestamp_ntz").as("h"),
-              col("event_type"), col("n"), col("sum_value"))
-    runBounded(agg, OutputMode.Complete())
-  }
+  def hourlyAggAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    runBounded(hourlyRollup(readEventsStream(spark, dir)), OutputMode.Complete())
 
   /** Streaming Gopher quality filter — the q201 rule bundle applied to
     * the document-ingest firehose: every rule is pure row-local
@@ -361,8 +341,18 @@ object Streams {
     * and the join condition bounds the event-time distance, so the state
     * store retains only one watermark-horizon of each side — the
     * canonical bounded-state stream-stream join. Output: one row per
-    * (click, purchase) pair. */
-  def funnelJoin(events: DataFrame,
+    * (click, purchase) pair.
+    *
+    * `joinType = "left_outer"` is the drop-off analysis the inner join
+    * (q46) cannot express: every click, matched to the same user's
+    * purchases within the following hour OR emitted null-padded once the
+    * watermark proves no future purchase can match (a purchase must
+    * satisfy `purchase_ts <= click_ts + 1h`, so a click is decided when
+    * `click_ts + 1h < watermark`). Matched pairs emit as both sides
+    * arrive; unmatched clicks emit exactly once, at watermark passage —
+    * Spark's outer stream-stream join semantics, state bounded to one
+    * watermark horizon per side. */
+  def funnelJoin(events: DataFrame, joinType: String = "inner",
                  watermark: String = "2 hours"): DataFrame = {
     val clicks = events.filter(col("event_type") === "click")
       .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
@@ -375,7 +365,8 @@ object Streams {
     clicks.join(purchases,
       col("c_user") === col("p_user") &&
       col("purchase_ts") >= col("click_ts") &&
-      col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"))
+      col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
+      joinType)
       .select(col("c_user").as("user_id"), col("click_id"),
               col("purchase_id"))
   }
@@ -390,41 +381,14 @@ object Streams {
     runBounded(funnelJoin(readEventsStream(spark, dir)),
                OutputMode.Append())
 
-  /** Stream-stream LEFT OUTER funnel — the drop-off analysis the inner
-    * join (q46) cannot express: every click, matched to the same
-    * user's purchases within the following hour OR emitted null-padded
-    * once the watermark proves no future purchase can match (a
-    * purchase must satisfy `purchase_ts <= click_ts + 1h`, so a click
-    * is decided when `click_ts + 1h < watermark`). Matched pairs emit
-    * as both sides arrive; unmatched clicks emit exactly once, at
-    * watermark passage — Spark's outer stream-stream join semantics,
-    * state bounded to one watermark horizon per side. */
-  def funnelLeftOuter(events: DataFrame,
-                      watermark: String = "2 hours"): DataFrame = {
-    val clicks = events.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"), col("ts").as("click_ts"),
-              col("event_id").as("click_id"))
-      .withWatermark("click_ts", watermark)
-    val purchases = events.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"), col("ts").as("purchase_ts"),
-              col("event_id").as("purchase_id"))
-      .withWatermark("purchase_ts", watermark)
-    clicks.join(purchases,
-      col("c_user") === col("p_user") &&
-      col("purchase_ts") >= col("click_ts") &&
-      col("purchase_ts") <= col("click_ts") + expr("INTERVAL 1 HOUR"),
-      "left_outer")
-      .select(col("c_user").as("user_id"), col("click_id"),
-              col("purchase_id"))
-  }
-
-  /** Bounded gate run: append mode with the trailing no-data batch so
-    * the final watermark (max(ts) − delay) decides every decidable
-    * click; the oracle emits matched pairs plus null-padded clicks
-    * whose match window closed before that watermark. */
+  /** Bounded gate run of the left-outer funnel: append mode with the
+    * trailing no-data batch so the final watermark (max(ts) − delay)
+    * decides every decidable click; the oracle emits matched pairs plus
+    * null-padded clicks whose match window closed before that
+    * watermark. */
   def funnelLeftOuterAvailableNow(spark: SparkSession,
                                   dir: String): DataFrame =
-    runBounded(funnelLeftOuter(readEventsStream(spark, dir)),
+    runBounded(funnelJoin(readEventsStream(spark, dir), "left_outer"),
                OutputMode.Append(), noDataBatch = true)
 
   // ---- shared events-family certification query (q96+q106+q116) -----
@@ -462,48 +426,29 @@ object Streams {
   private val eventsFamilyCache = scala.collection.concurrent
     .TrieMap[(SparkSession, String), DataFrame]()
 
-  private def nullC(t: String, as: String) = lit(null).cast(t).as(as)
+  /** The shared run's columns after `tag`, in order, with their types:
+    * each branch fills its own and leaves the rest NULL. */
+  private val familyCols = Seq(
+    "h" -> "timestamp_ntz", "event_type" -> "string", "n" -> "long",
+    "user_id" -> "long", "s_start" -> "timestamp_ntz",
+    "s_end" -> "timestamp_ntz", "n_events" -> "long", "click_id" -> "long",
+    "purchase_id" -> "long", "sum_value" -> "double")
+
+  private def tagged(tag: String, branch: DataFrame): DataFrame =
+    branch.select(lit(tag).as("tag") +: familyCols.map { case (c, t) =>
+      if (branch.columns.contains(c)) col(c) else lit(null).cast(t).as(c)
+    }: _*)
 
   private def eventsFamilyShared(spark: SparkSession,
                                  dir: String): DataFrame =
     eventsFamilyCache.getOrElseUpdate((spark, dir), {
       val wmk = "2 hours"
-      val ev = readEventsStream(spark, dir)
-      val hourly = dedupStream(ev.union(ev), wmk)
-        .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-        .agg(count(lit(1)).as("n"),
-             round(sum(col("value")), 2).as("sum_value"))
-        .select(lit("hourly").as("tag"),
-                col("window.start").cast("timestamp_ntz").as("h"),
-                col("event_type"), col("n"),
-                nullC("long", "user_id"), nullC("timestamp_ntz", "s_start"),
-                nullC("timestamp_ntz", "s_end"), nullC("long", "n_events"),
-                nullC("long", "click_id"), nullC("long", "purchase_id"),
-                col("sum_value"))
-      val sessions = readEventsStream(spark, dir)
-        .withWatermark("ts", wmk)
-        .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
-        .agg(count(lit(1)).as("n_events"),
-             round(sum(col("value")), 2).as("sum_value"))
-        .select(lit("session").as("tag"),
-                nullC("timestamp_ntz", "h"), nullC("string", "event_type"),
-                nullC("long", "n"), col("user_id"),
-                col("session_window.start").cast("timestamp_ntz")
-                  .as("s_start"),
-                col("session_window.end").cast("timestamp_ntz")
-                  .as("s_end"),
-                col("n_events"),
-                nullC("long", "click_id"), nullC("long", "purchase_id"),
-                col("sum_value"))
-      val funnel = funnelLeftOuter(readEventsStream(spark, dir), wmk)
-        .select(lit("funnel").as("tag"),
-                nullC("timestamp_ntz", "h"), nullC("string", "event_type"),
-                nullC("long", "n"), col("user_id"),
-                nullC("timestamp_ntz", "s_start"),
-                nullC("timestamp_ntz", "s_end"), nullC("long", "n_events"),
-                col("click_id"), col("purchase_id"),
-                nullC("double", "sum_value"))
-      runBounded(hourly.unionByName(sessions).unionByName(funnel),
+      val hourly = hourlyRollup(dedupStream(redelivered(spark, dir), wmk))
+      val sessions = sessionWindows(readEventsStream(spark, dir), wmk)
+      val funnel = funnelJoin(readEventsStream(spark, dir), "left_outer", wmk)
+      runBounded(tagged("hourly", hourly)
+                   .unionByName(tagged("session", sessions))
+                   .unionByName(tagged("funnel", funnel)),
                  OutputMode.Append(), noDataBatch = true)
     })
 
@@ -612,15 +557,9 @@ object Streams {
     * same argument as the q32/q35/q36 rollups (see the verify skill's
     * rounding note). */
   def dedupHourlyAvailableNow(spark: SparkSession, dir: String,
-                              watermark: String = "2 hours"): DataFrame = {
-    val ev = readEventsStream(spark, dir)
-    val agg = dedupStream(ev.union(ev), watermark)
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("n"), round(sum(col("value")), 2).as("sum_value"))
-      .select(col("window.start").cast("timestamp_ntz").as("h"),
-              col("event_type"), col("n"), col("sum_value"))
-    runBounded(agg, OutputMode.Append(), noDataBatch = true)
-  }
+                              watermark: String = "2 hours"): DataFrame =
+    runBounded(hourlyRollup(dedupStream(redelivered(spark, dir), watermark)),
+               OutputMode.Append(), noDataBatch = true)
 
   /** MULTI-BATCH-SAFE streaming sessionization via Spark's native
     * `session_window` — the idiomatic answer to the ordering contract
@@ -642,9 +581,19 @@ object Streams {
                                 watermark: String = "2 hours",
                                 maxFilesPerTrigger: Option[Int] = None,
                                 globOverride: Option[String] = None)
-      : DataFrame = {
-    val agg = readEventsStream(spark, dir, maxFilesPerTrigger, globOverride)
-      .withWatermark("ts", watermark)
+      : DataFrame =
+    runBounded(
+      sessionWindows(
+        readEventsStream(spark, dir, maxFilesPerTrigger, globOverride),
+        watermark),
+      OutputMode.Append(), noDataBatch = true)
+
+  /** The session-window aggregation of [[sessionWindowAvailableNow]] and
+    * the shared events-family run: per user, sessions split by a
+    * > 30-minute gap, with NTZ bounds, event count and rounded value sum. */
+  private[graft] def sessionWindows(events: DataFrame,
+                                    watermark: String): DataFrame =
+    events.withWatermark("ts", watermark)
       .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
       .agg(count(lit(1)).as("n_events"),
            round(sum(col("value")), 2).as("sum_value"))
@@ -652,8 +601,6 @@ object Streams {
               col("session_window.start").cast("timestamp_ntz").as("s_start"),
               col("session_window.end").cast("timestamp_ntz").as("s_end"),
               col("n_events"), col("sum_value"))
-    runBounded(agg, OutputMode.Append(), noDataBatch = true)
-  }
 
   /** Oracle for [[sessionWindowAvailableNow]]: the batch session_window
     * answer (gap > 30 min starts a session; end = last + gap)
@@ -684,23 +631,34 @@ object Streams {
     * the events table). State = one entry per event_id within the
     * watermark horizon — bounded, and keyed so it scales out with
     * shuffle partitions. */
-  def dedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val ev = readEventsStream(spark, dir)
-    val redelivered = ev.union(ev)
+  def dedupAvailableNow(spark: SparkSession, dir: String): DataFrame =
     runBounded(
-      dedupStream(redelivered)
+      dedupStream(redelivered(spark, dir))
         .select(col("event_id"), col("event_type"), col("value")),
       OutputMode.Append())
-  }
 
   // ---- bounded-state (Bloom) streaming dedup ------------------------
 
+  /** A row of a Bloom keep-first family: the shard it folds in and the
+    * 64-bit key the filter probes, plus the family's ordering and
+    * payload columns. */
+  trait BloomRow { def shard: Int; def key: Long }
   case class BloomEvent(shard: Int, event_id: Long, event_type: String,
-                        value: Double)
+                        value: Double) extends BloomRow {
+    def key: Long = event_id
+  }
+  case class BloomDoc(shard: Int, key: Long, doc_id: Long, fp: String)
+    extends BloomRow
+  case class BloomPara(shard: Int, key: Long, doc_id: Long, pos: Int,
+                       pfp: String) extends BloomRow
   case class BloomShard(bits: Array[Byte])
-  case class DedupOut(event_id: Long, event_type: String, value: Double)
 
   private val BloomK = 4
+
+  /** The shard of a Bloom key: `key mod shards`, so all copies of a key
+    * fold in one shard. */
+  private def shardOf(key: Column, shards: Int): Column =
+    pmod(key, lit(shards)).cast("int").as("shard")
 
   /** splitmix64 finalizer — a deterministic 64-bit avalanche (public
     * constants from Steele et al., "Fast Splittable Pseudorandom Number
@@ -711,6 +669,64 @@ object Streams {
     z = (z ^ (z >>> 30)) * 0xbf58476d1ce4e5b9L
     z = (z ^ (z >>> 27)) * 0x94d049bb133111ebL
     z ^ (z >>> 31)
+  }
+
+  /** The k bit positions `key` probes: splitmix64 double hashing, masked
+    * directly to the power-of-two bit space. h2 forced odd makes the
+    * probe stride invertible mod 2^log2Bits, so the k positions of one
+    * key are pairwise distinct (the classic Kirsch–Mitzenmacher
+    * double-hashing guarantee). splitmix64 avalanches every output bit,
+    * so the low bits used here are full-quality. */
+  private def probes(mask: Int, key: Long): Array[Int] = {
+    val h1 = mix64(key)
+    val h2 = mix64(h1) | 1L
+    Array.tabulate(BloomK)(i => ((h1 + i * h2) & mask).toInt)
+  }
+
+  private def isSet(bits: Array[Byte], p: Int): Boolean =
+    (bits(p >>> 3) & (1 << (p & 7))) != 0
+
+  /** Probe-then-set: true iff `key` was NOT yet in the filter (its k
+    * bits are then set — membership is recorded as a side effect). */
+  private[graft] def bloomCheckAndSet(bits: Array[Byte], mask: Int,
+                                      key: Long): Boolean = {
+    val ps = probes(mask, key)
+    if (ps.forall(isSet(bits, _))) false
+    else {
+      ps.foreach(p => bits(p >>> 3) = (bits(p >>> 3) | (1 << (p & 7))).toByte)
+      true
+    }
+  }
+
+  /** Probe-only membership test (no set) — the companion of
+    * [[bloomCheckAndSet]] for the rotating filter's PREVIOUS
+    * generation, which is read-only by construction. */
+  private[graft] def bloomContains(bits: Array[Byte], mask: Int,
+                                   key: Long): Boolean =
+    probes(mask, key).forall(isSet(bits, _))
+
+  /** The Bloom keep-first kernel: per shard, one fixed allocation of
+    * 2^log2Bits bits held as keyed state; each micro-batch's rows fold in
+    * `order` and a row survives iff its key was not yet in the filter.
+    * Emits the surviving input rows. Within a batch `order` decides which
+    * of two same-key rows survives (the families sort by their id, so a
+    * single batch keeps the smallest id); across batches the first to
+    * arrive survives. */
+  private def keepFirst[R <: BloomRow : Encoder](
+      rows: Dataset[R], log2Bits: Int, order: Ordering[R]): Dataset[R] = {
+    val spark = rows.sparkSession
+    import spark.implicits._
+    rows.groupByKey(_.shard).flatMapGroupsWithState(
+        OutputMode.Update(), GroupStateTimeout.NoTimeout()) {
+      (_: Int, in: Iterator[R], state: GroupState[BloomShard]) =>
+        val mask = (1 << log2Bits) - 1
+        val bits = state.getOption.map(_.bits)
+          .getOrElse(new Array[Byte](1 << (log2Bits - 3)))
+        val kept = in.toVector.sorted(order)
+          .filter(r => bloomCheckAndSet(bits, mask, r.key))
+        state.update(BloomShard(bits))
+        kept.iterator
+    }
   }
 
   /** BOUNDED-STATE streaming dedup — the production companion to
@@ -732,102 +748,32 @@ object Streams {
     * ≈ 1% FP). False NEGATIVES are impossible — every true duplicate
     * is always dropped.
     *
-    * Sharding is `event_id % shards`, so all copies of a key land in
-    * one shard; within a batch the fold is id-sorted (the
-    * [[updateBucket]] determinism contract). At 100 TB parallelism =
-    * shards (a deployment knob); each shard's state value is one
-    * RocksDB blob rewritten per batch. */
+    * The key is the event_id, folded in id order within a batch. At
+    * 100 TB parallelism = shards (a deployment knob); each shard's state
+    * value is one RocksDB blob rewritten per batch. Output: event_id,
+    * event_type, value. */
   def bloomDedupStream(events: DataFrame, shards: Int = 32,
-                       log2BitsPerShard: Int = 21): Dataset[DedupOut] = {
+                       log2BitsPerShard: Int = 21): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      // NULL event_id cannot enter the non-nullable Long encoder field;
-      // the batch twin (q68's dropDuplicates) would instead keep one
-      // NULL-keyed row — disagreement only on NULL ids, which the
-      // events contract excludes
-      .filter(col("event_id").isNotNull)
-      .select(pmod(col("event_id"), lit(shards)).cast("int").as("shard"),
+    // NULL event_id cannot enter the non-nullable Long encoder field;
+    // the batch twin (q68's dropDuplicates) would instead keep one
+    // NULL-keyed row — disagreement only on NULL ids, which the events
+    // contract excludes
+    val rows = events.filter(col("event_id").isNotNull)
+      .select(shardOf(col("event_id"), shards),
               col("event_id"), col("event_type"), col("value"))
       .as[BloomEvent]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(
-        OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(updateBloom(log2BitsPerShard))
-  }
-
-  /** Probe-then-set: true iff `key` was NOT yet in the filter (its k
-    * bits are then set — membership is recorded as a side effect).
-    * k positions via splitmix64 double hashing, masked directly to the
-    * power-of-two bit space: h2 forced odd makes the probe stride
-    * invertible mod 2^log2Bits, so the k probe positions of one key
-    * are pairwise distinct (the classic Kirsch–Mitzenmacher
-    * double-hashing guarantee). splitmix64 avalanches every output
-    * bit, so the low bits used here are full-quality. */
-  private[graft] def bloomCheckAndSet(bits: Array[Byte], mask: Int,
-                                      key: Long): Boolean = {
-    val h1 = mix64(key)
-    val h2 = mix64(h1) | 1L
-    var allSet = true
-    var i = 0
-    while (i < BloomK) {
-      val p = ((h1 + i * h2) & mask).toInt
-      if ((bits(p >>> 3) & (1 << (p & 7))) == 0) allSet = false
-      i += 1
-    }
-    if (allSet) false
-    else {
-      i = 0
-      while (i < BloomK) {
-        val p = ((h1 + i * h2) & mask).toInt
-        bits(p >>> 3) = (bits(p >>> 3) | (1 << (p & 7))).toByte
-        i += 1
-      }
-      true
-    }
-  }
-
-  /** Probe-only membership test (no set) — the companion of
-    * [[bloomCheckAndSet]] for the rotating filter's PREVIOUS
-    * generation, which is read-only by construction. */
-  private[graft] def bloomContains(bits: Array[Byte], mask: Int,
-                                   key: Long): Boolean = {
-    val h1 = mix64(key)
-    val h2 = mix64(h1) | 1L
-    var i = 0
-    while (i < BloomK) {
-      val p = ((h1 + i * h2) & mask).toInt
-      if ((bits(p >>> 3) & (1 << (p & 7))) == 0) return false
-      i += 1
-    }
-    true
-  }
-
-  private def updateBloom(log2Bits: Int)(
-      shard: Int, events: Iterator[BloomEvent],
-      state: GroupState[BloomShard]): Iterator[DedupOut] = {
-    val mask = (1 << log2Bits) - 1
-    val bits = state.getOption.map(_.bits)
-      .getOrElse(new Array[Byte](1 << (log2Bits - 3)))
-    val out = Seq.newBuilder[DedupOut]
-    events.toArray.sortBy(_.event_id).foreach { e =>
-      if (bloomCheckAndSet(bits, mask, e.event_id))
-        out += DedupOut(e.event_id, e.event_type, e.value)
-    }
-    state.update(BloomShard(bits))
-    out.result().iterator
+    keepFirst(rows, log2BitsPerShard, Ordering.by((e: BloomEvent) => e.event_id))
+      .select(col("event_id"), col("event_type"), col("value"))
   }
 
   /** Bounded gate run of the Bloom dedup: the same redelivered-stream
     * setup as q68 — the output must collapse back to exactly the batch
     * events table (the q68 oracle), but the state footprint is the
     * fixed Bloom allocation instead of one entry per event. */
-  def bloomDedupAvailableNow(spark: SparkSession, dir: String): DataFrame = {
-    val ev = readEventsStream(spark, dir)
-    runBounded(bloomDedupStream(ev.union(ev)).toDF(),
-               OutputMode.Update())
-      .select(col("event_id"), col("event_type"), col("value"))
-  }
+  def bloomDedupAvailableNow(spark: SparkSession, dir: String): DataFrame =
+    runBounded(bloomDedupStream(redelivered(spark, dir)), OutputMode.Update())
 
   // ---- time-horizon-bounded (rotating) Bloom dedup -------------------
 
@@ -861,13 +807,13 @@ object Streams {
     * rotation/re-admission semantics are pinned by spec. */
   def bloomDedupWindowed(events: DataFrame, horizonHours: Int = 6,
                          shards: Int = 32,
-                         log2BitsPerShard: Int = 21): Dataset[DedupOut] = {
+                         log2BitsPerShard: Int = 21): DataFrame = {
     val spark = events.sparkSession
     import spark.implicits._
     val horizonUs = horizonHours.toLong * 3600L * 1000000L
     events
       .filter(col("event_id").isNotNull && col("ts").isNotNull)
-      .select(pmod(col("event_id"), lit(shards)).cast("int").as("shard"),
+      .select(shardOf(col("event_id"), shards),
               unix_micros(col("ts").cast("timestamp")).as("ts_us"),
               col("event_id"), col("event_type"), col("value"))
       .as[TimedBloomEvent]
@@ -876,15 +822,16 @@ object Streams {
         OutputMode.Update(),
         GroupStateTimeout.NoTimeout())(
         updateRotating(log2BitsPerShard, horizonUs))
+      .select(col("event_id"), col("event_type"), col("value"))
   }
 
   private def updateRotating(log2Bits: Int, horizonUs: Long)(
       shard: Int, events: Iterator[TimedBloomEvent],
-      state: GroupState[RotState]): Iterator[DedupOut] = {
+      state: GroupState[RotState]): Iterator[TimedBloomEvent] = {
     val mask = (1 << log2Bits) - 1
     def fresh() = new Array[Byte](1 << (log2Bits - 3))
     var st = state.getOption.getOrElse(RotState(Long.MinValue, fresh(), fresh()))
-    val out = Seq.newBuilder[DedupOut]
+    val out = Seq.newBuilder[TimedBloomEvent]
     events.toArray.sortBy(e => (e.ts_us, e.event_id)).foreach { e =>
       val bucket = Math.floorDiv(e.ts_us, horizonUs) * horizonUs
       if (st.genStart == Long.MinValue)
@@ -898,8 +845,7 @@ object Streams {
       // probe-and-set the current generation regardless: a re-seen key
       // refreshes, extending its dedup horizon from THIS sighting
       val newInCur = bloomCheckAndSet(st.cur, mask, e.event_id)
-      if (newInCur && !inPrev)
-        out += DedupOut(e.event_id, e.event_type, e.value)
+      if (newInCur && !inPrev) out += e
     }
     state.update(st)
     out.result().iterator
@@ -912,73 +858,47 @@ object Streams {
     * events span multiple 6-hour buckets, so the gate DOES exercise
     * rotation; re-admission beyond the lookback is spec-territory. */
   def bloomDedupWindowedAvailableNow(spark: SparkSession,
-                                     dir: String): DataFrame = {
-    val ev = readEventsStream(spark, dir)
-    runBounded(bloomDedupWindowed(ev.union(ev)).toDF(),
-               OutputMode.Update())
-      .select(col("event_id"), col("event_type"), col("value"))
-  }
-
-  case class BloomDoc(shard: Int, key: Long, doc_id: Long, fp: String)
-  case class DocDedupOut(doc_id: Long, fp: String)
+                                     dir: String): DataFrame =
+    runBounded(bloomDedupWindowed(redelivered(spark, dir)), OutputMode.Update())
 
   /** Streaming CONTENT dedup with bounded state — the ingest-pipeline
     * twin of batch fingerprint dedup (q25): "have we already ingested
-    * this exact content?" answered at arrival time from the same
-    * fixed-allocation sharded Bloom as [[bloomDedupStream]], keyed on
-    * xxhash64 of the full 128-bit md5(normalized text) — every md5 bit
-    * participates in the Bloom key, so key collisions between distinct
-    * fingerprints sit at the 64-bit birthday bound (~n²/2^65), below
-    * the Bloom FP rate itself — instead of the event id. NULL text
-    * rows are dropped at entry (the keyed-state encoder's Long key
-    * cannot represent them; the batch twin q25 instead groups all
-    * NULL fingerprints as one — a disagreement only on NULL content,
-    * which the ingest contract excludes). One survivor per content
-    * fingerprint; state is the Bloom
-    * allocation at ANY corpus size, where the exact formulation
-    * (q82's incremental index, q68-style per-key state) grows with
-    * distinct content.
+    * this exact content?" answered at arrival time by the Bloom
+    * keep-first kernel, keyed on xxhash64 of the full 128-bit
+    * md5(normalized text) — every md5 bit participates in the Bloom key,
+    * so key collisions between distinct fingerprints sit at the 64-bit
+    * birthday bound (~n²/2^65), below the Bloom FP rate itself — instead
+    * of the event id. NULL text rows are dropped at entry (the
+    * keyed-state encoder's Long key cannot represent them; the batch
+    * twin q25 instead groups all NULL fingerprints as one — a
+    * disagreement only on NULL content, which the ingest contract
+    * excludes). One survivor per content fingerprint; state is the Bloom
+    * allocation at ANY corpus size, where the exact formulation (q82's
+    * incremental index, q68-style per-key state) grows with distinct
+    * content. Output: doc_id, fp.
     *
     * ORDERING CONTRACT (the [[minhashDedupStream]] one, recorded in
-    * DEVIATIONS.md): rows sort by doc_id within each micro-batch, so
-    * with the gate's single AvailableNow batch the survivor is the
+    * DEVIATIONS.md): rows fold in doc_id order within each micro-batch,
+    * so with the gate's single AvailableNow batch the survivor is the
     * GLOBAL min doc_id per fingerprint — exactly the batch q25
     * keep-min rule, which makes the gate oracle-exact (Bloom FPs are
     * ≈0 at gate scale, same math as q206). Cross-batch arrival keeps
     * "one survivor per content" but the survivor is the first to
     * ARRIVE — what a production ingest filter actually wants. */
   def bloomDocDedupStream(docs: DataFrame, shards: Int = 32,
-                          log2BitsPerShard: Int = 21)
-      : Dataset[DocDedupOut] = {
+                          log2BitsPerShard: Int = 21): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs
+    val rows = docs
       .filter(col("text").isNotNull)
       .withColumn("fp",
         md5(graft.ext.TextAnalysis.normalized(col("text"))))
       .withColumn("key", xxhash64(col("fp")))
-      .select(pmod(col("key"), lit(shards)).cast("int").as("shard"),
+      .select(shardOf(col("key"), shards),
               col("key"), col("doc_id"), col("fp"))
       .as[BloomDoc]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(
-        OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(updateDocBloom(log2BitsPerShard))
-  }
-
-  private def updateDocBloom(log2Bits: Int)(
-      shard: Int, docs: Iterator[BloomDoc],
-      state: GroupState[BloomShard]): Iterator[DocDedupOut] = {
-    val mask = (1 << log2Bits) - 1
-    val bits = state.getOption.map(_.bits)
-      .getOrElse(new Array[Byte](1 << (log2Bits - 3)))
-    val out = Seq.newBuilder[DocDedupOut]
-    docs.toArray.sortBy(_.doc_id).foreach { d =>
-      if (bloomCheckAndSet(bits, mask, d.key))
-        out += DocDedupOut(d.doc_id, d.fp)
-    }
-    state.update(BloomShard(bits))
-    out.result().iterator
+    keepFirst(rows, log2BitsPerShard, Ordering.by((d: BloomDoc) => d.doc_id))
+      .select(col("doc_id"), col("fp"))
   }
 
   /** Bounded gate run: the static documents dir streamed through the
@@ -986,9 +906,44 @@ object Streams {
     * fingerprint survivor set (the q25 grouping, one row per group). */
   def bloomDocDedupAvailableNow(spark: SparkSession,
                                 dir: String): DataFrame =
-    runBounded(bloomDocDedupStream(readDocumentsStream(spark, dir)).toDF(),
+    runBounded(bloomDocDedupStream(readDocumentsStream(spark, dir)),
                OutputMode.Update())
-      .select(col("doc_id"), col("fp"))
+
+  /** Streaming PARAGRAPH dedup with bounded state — the q211 dedup
+    * unit (CCNet's, Wenzek et al. 2020 §3) pushed to ingest time with
+    * the Bloom keep-first kernel: documents are segmented into the same
+    * fixed-length pseudo-paragraphs as the batch operator (shared
+    * [[graft.ext.Dedup.paragraphs]] — the unit cannot drift), each
+    * paragraph's md5 is keyed through xxhash64 into the sharded
+    * fixed-allocation Bloom, and only first-seen paragraphs survive.
+    * State is the Bloom allocation at ANY corpus size — the boilerplate
+    * table a 100 TB crawl carries (the q211 skew case) costs no state
+    * growth at all, because a repeated paragraph never sets new bits.
+    *
+    * Output is the surviving paragraph FINGERPRINT `pfp` (one per
+    * distinct paragraph). Which document contributed the survivor is
+    * arrival-order-dependent across batches (first to arrive — ingest
+    * semantics); the fingerprint SET is delivery-order-invariant,
+    * which is what the multi-batch gate certifies. Rows fold in
+    * (doc_id, pos) order within each micro-batch, so a single
+    * AvailableNow batch reproduces q211's global first-occurrence
+    * survivor (same ordering contract as [[bloomDocDedupStream]]). */
+  def bloomParaDedupStream(docs: DataFrame, paraLen: Int = 8,
+                           shards: Int = 32,
+                           log2BitsPerShard: Int = 21): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    val rows =
+      graft.ext.Dedup.paragraphs(docs.filter(col("text").isNotNull), paraLen)
+        .withColumn("pfp", md5(col("para")))
+        .withColumn("key", xxhash64(col("pfp")))
+        .select(shardOf(col("key"), shards), col("key"), col("doc_id"),
+                col("pos").cast("int").as("pos"), col("pfp"))
+        .as[BloomPara]
+    keepFirst(rows, log2BitsPerShard,
+              Ordering.by((p: BloomPara) => (p.doc_id, p.pos)))
+      .select(col("pfp"))
+  }
 
   // ---- Bloom sizing + multi-batch certification ----------------------
 
@@ -1024,38 +979,59 @@ object Streams {
     * and an under-keyed dir is first-stager-wins — a later gate then
     * reads its declared-but-absent columns as NULL and silently loses
     * rows (caught as a 616-of-1210 q225 row loss at sf0.1 when a
-    * (doc_id, text) stager happened to run first). */
+    * (doc_id, text) stager happened to run first). Returns the staging
+    * dir and the staged frame's schema. */
   private def stageRedelivered(spark: SparkSession, dir: String,
                                table: String, cols: Seq[String],
-                               nFiles: Int): String = {
+                               nFiles: Int): (String, StructType) = {
     val key = java.security.MessageDigest.getInstance("MD5")
       .digest(s"$dir/$table/${cols.mkString(",")}/$nFiles"
         .getBytes("UTF-8"))
       .map("%02x".format(_)).mkString.take(16)
-    val shm = new java.io.File("/dev/shm")
-    val base = if (shm.isDirectory && shm.canWrite) "/dev/shm"
-               else System.getProperty("java.io.tmpdir")
-    val out = s"$base/graft_stage_${table}_$key"
+    val out = s"$scratchDir/graft_stage_${table}_$key"
     val marker = new java.io.File(s"$out/_staged")
+    val df = spark.read.parquet(s"$dir/$table.parquet")
+      .select(cols.map(col): _*).repartition(nFiles)
     if (!marker.isFile) {
-      val df = spark.read.parquet(s"$dir/$table.parquet")
-        .select(cols.map(col): _*).repartition(nFiles)
       df.write.mode("overwrite").parquet(out)
       df.write.mode("append").parquet(out)
       java.nio.file.Files.write(marker.toPath, Array.empty[Byte])
     }
-    out
+    (out, df.schema)
   }
 
-  /** Fail loudly if the redelivered run silently collapsed into fewer
-    * micro-batches than files — the certification is ABOUT cross-batch
-    * state continuity, so a one-batch run proving nothing must not
-    * pass as green. */
+  /** Fail loudly if the last bounded run silently collapsed into fewer
+    * micro-batches than staged files — the certification is ABOUT
+    * cross-batch state continuity, so a one-batch run proving nothing
+    * must not pass as green. */
   private def requireMultiBatch(nFiles: Int): Unit = {
-    val batches = lastRunBatches
+    val batches = lastRunProgress.fold(-1L)(_.batchId + 1L)
     require(batches >= 2L * nFiles,
       s"multi-batch certification degenerated to $batches micro-batches " +
         s"(need ≥ ${2 * nFiles}) — maxFilesPerTrigger not honored?")
+  }
+
+  /** The multi-batch harness: `cols` of `table` staged for redelivery
+    * ([[stageRedelivered]]), streamed one file per micro-batch through
+    * `pipeline`, run bounded in Update mode and certified to have taken
+    * ≥ 2×nFiles batches. One state partition: the run pays the
+    * per-(batch × store) lifecycle 2×nFiles times over against a handful
+    * of small Bloom blobs, so one store wins here (cold A/B probes:
+    * 4.21→3.92 s), where the single-batch gates' bigger state wants the
+    * default of 4. */
+  private def multiBatch(spark: SparkSession, dir: String, table: String,
+                         cols: Seq[String], nFiles: Int,
+                         rocksDb: Boolean = false)(
+      pipeline: DataFrame => DataFrame): DataFrame = {
+    val (src, schema) = stageRedelivered(spark, dir, table, cols, nFiles)
+    val stream = spark.readStream.schema(schema)
+      .option("pathGlobFilter", "*.parquet")
+      .option("maxFilesPerTrigger", "1")
+      .parquet(src)
+    val out = runBounded(pipeline(stream), OutputMode.Update(),
+                         statePartitions = 1, rocksDb = rocksDb)
+    requireMultiBatch(nFiles)
+    out
   }
 
   /** MULTI-BATCH certification of [[bloomDedupStream]] (q206's
@@ -1068,31 +1044,12 @@ object Streams {
     * SELECT of events): the survivor SET is delivery-order-invariant
     * because every copy of an event carries the same attributes. This
     * replaces the single-batch ordering contract with a cross-batch
-    * certification for the event-keyed gate. */
+    * certification for the event-keyed gate. The one gate that keeps the
+    * RocksDB state store certified. */
   def bloomDedupMultiBatch(spark: SparkSession, dir: String,
-                           nFiles: Int = 2): DataFrame = {
-    val src = stageRedelivered(spark, dir, "events",
-      Seq("event_id", "event_type", "value"), nFiles)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("event_id", LongType),
-        StructField("event_type", StringType),
-        StructField("value", DoubleType))))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    // statePartitions=1: the multi-batch run pays per-(batch × store)
-    // lifecycle cost 2×nFiles times over and its Bloom state is a
-    // handful of small blobs, so one store wins here (cold A/B
-    // probes: 4.21→3.92 s)
-    // where the single-batch gates' bigger-state default of 4 wins there
-    val out = runBounded(bloomDedupStream(stream).toDF(),
-                         OutputMode.Update(), statePartitions = 1,
-                         rocksDb = true)
-      .select(col("event_id"), col("event_type"), col("value"))
-    requireMultiBatch(nFiles)
-    out
-  }
+                           nFiles: Int = 2): DataFrame =
+    multiBatch(spark, dir, "events", Seq("event_id", "event_type", "value"),
+               nFiles, rocksDb = true)(bloomDedupStream(_))
 
   /** MULTI-BATCH certification of [[bloomDocDedupStream]] (q207's
     * production delivery shape): documents redelivered across 2×nFiles
@@ -1104,78 +1061,9 @@ object Streams {
     * dropped), none missing. Oracle: SELECT DISTINCT md5(normalized)
     * over the batch table. */
   def bloomDocDedupMultiBatch(spark: SparkSession, dir: String,
-                              nFiles: Int = 2): DataFrame = {
-    val src = stageRedelivered(spark, dir, "documents",
-      Seq("doc_id", "text"), nFiles)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    val out = runBounded(bloomDocDedupStream(stream).toDF(),
-                         OutputMode.Update(), statePartitions = 1)
-      .select(col("fp"))
-    requireMultiBatch(nFiles)
-    out
-  }
-
-  case class BloomPara(shard: Int, key: Long, doc_id: Long, pos: Int,
-                       pfp: String)
-  case class ParaDedupOut(pfp: String)
-
-  /** Streaming PARAGRAPH dedup with bounded state — the q211 dedup
-    * unit (CCNet's, Wenzek et al. 2020 §3) pushed to ingest time with
-    * the q206/q207 Bloom kernel: documents are segmented into the same
-    * fixed-length pseudo-paragraphs as the batch operator (shared
-    * [[graft.ext.Dedup.paragraphs]] — the unit cannot drift), each
-    * paragraph's md5 is keyed through xxhash64 into the sharded
-    * fixed-allocation Bloom, and only first-seen paragraphs survive.
-    * State is the Bloom allocation at ANY corpus size — the boilerplate
-    * table a 100 TB crawl carries (the q211 skew case) costs no state
-    * growth at all, because a repeated paragraph never sets new bits.
-    *
-    * Output is the surviving paragraph FINGERPRINT (one per distinct
-    * paragraph). Which document contributed the survivor is
-    * arrival-order-dependent across batches (first to arrive — ingest
-    * semantics); the fingerprint SET is delivery-order-invariant,
-    * which is what the multi-batch gate certifies. Rows sort by
-    * (doc_id, pos) within each micro-batch, so a single AvailableNow
-    * batch reproduces q211's global first-occurrence survivor
-    * (same ordering contract as [[bloomDocDedupStream]]). */
-  def bloomParaDedupStream(docs: DataFrame, paraLen: Int = 8,
-                           shards: Int = 32, log2BitsPerShard: Int = 21)
-      : Dataset[ParaDedupOut] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    graft.ext.Dedup.paragraphs(docs.filter(col("text").isNotNull), paraLen)
-      .withColumn("pfp", md5(col("para")))
-      .withColumn("key", xxhash64(col("pfp")))
-      .select(pmod(col("key"), lit(shards)).cast("int").as("shard"),
-              col("key"), col("doc_id"), col("pos").cast("int").as("pos"),
-              col("pfp"))
-      .as[BloomPara]
-      .groupByKey(_.shard)
-      .flatMapGroupsWithState(
-        OutputMode.Update(),
-        GroupStateTimeout.NoTimeout())(updateParaBloom(log2BitsPerShard))
-  }
-
-  private def updateParaBloom(log2Bits: Int)(
-      shard: Int, paras: Iterator[BloomPara],
-      state: GroupState[BloomShard]): Iterator[ParaDedupOut] = {
-    val mask = (1 << log2Bits) - 1
-    val bits = state.getOption.map(_.bits)
-      .getOrElse(new Array[Byte](1 << (log2Bits - 3)))
-    val out = Seq.newBuilder[ParaDedupOut]
-    paras.toArray.sortBy(p => (p.doc_id, p.pos)).foreach { p =>
-      if (bloomCheckAndSet(bits, mask, p.key))
-        out += ParaDedupOut(p.pfp)
-    }
-    state.update(BloomShard(bits))
-    out.result().iterator
-  }
+                              nFiles: Int = 2): DataFrame =
+    multiBatch(spark, dir, "documents", Seq("doc_id", "text"), nFiles)(
+      bloomDocDedupStream(_).select(col("fp")))
 
   /** MULTI-BATCH certification of [[bloomParaDedupStream]] (q215):
     * documents redelivered across 2×nFiles micro-batches via
@@ -1187,22 +1075,9 @@ object Streams {
     * DISTINCT md5(paragraph) over the batch segmentation. Shares the
     * q209 staging (same table, same columns). */
   def paragraphDedupMultiBatch(spark: SparkSession, dir: String,
-                               nFiles: Int = 2): DataFrame = {
-    val src = stageRedelivered(spark, dir, "documents",
-      Seq("doc_id", "text"), nFiles)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType))))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    val out = runBounded(bloomParaDedupStream(stream).toDF(),
-                         OutputMode.Update(), statePartitions = 1)
-      .select(col("pfp"))
-    requireMultiBatch(nFiles)
-    out
-  }
+                               nFiles: Int = 2): DataFrame =
+    multiBatch(spark, dir, "documents", Seq("doc_id", "text"), nFiles)(
+      bloomParaDedupStream(_))
 
   /** Static events dir sessionized as a stream; cumulative counts are
     * monotone, so max-per-user over all updates equals the batch
@@ -1419,15 +1294,17 @@ object Streams {
     * survivor per fingerprint is the batch keep-min rule and the oracle
     * replays the full composition (rules → sample → min-per-fp). */
   def ingestPipelineAvailableNow(spark: SparkSession,
-                                 dir: String): DataFrame = {
-    val survivors = graft.ext.TextAnalysis
-      .withGopherFlags(readDocumentsStream(spark, dir), stopMin = 1)
+                                 dir: String): DataFrame =
+    runBounded(bloomDocDedupStream(ingestSurvivors(readDocumentsStream(spark, dir))),
+               OutputMode.Update())
+
+  /** The stateless front of the ingest pipeline: the Gopher rules at
+    * stopMin=1, then the mixture sample. */
+  private def ingestSurvivors(docs: DataFrame): DataFrame =
+    graft.ext.TextAnalysis.withGopherFlags(docs, stopMin = 1)
       .filter(col("keep") === 1)
       .filter(graft.ext.Sampling.mixtureKeep)
       .select(col("doc_id"), col("text"))
-    runBounded(bloomDocDedupStream(survivors).toDF(), OutputMode.Update())
-      .select(col("doc_id"), col("fp"))
-  }
 
   /** STREAMING hourly anomaly detection — the q88 alerting rule run
     * at ingest time: the hourly rollup builds FROM the stream (one
@@ -1468,28 +1345,9 @@ object Streams {
     * fingerprints of the filtered sample (which doc carried each one
     * is first-arrival, excluded, as in q209). */
   def ingestPipelineMultiBatch(spark: SparkSession, dir: String,
-                               nFiles: Int = 2): DataFrame = {
-    val src = stageRedelivered(spark, dir, "documents",
-      Seq("doc_id", "text", "source"), nFiles)
-    val stream = spark.readStream
-      .schema(StructType(Seq(
-        StructField("doc_id", LongType),
-        StructField("text", StringType),
-        StructField("source", StringType))))
-      .option("pathGlobFilter", "*.parquet")
-      .option("maxFilesPerTrigger", "1")
-      .parquet(src)
-    val survivors = graft.ext.TextAnalysis
-      .withGopherFlags(stream, stopMin = 1)
-      .filter(col("keep") === 1)
-      .filter(graft.ext.Sampling.mixtureKeep)
-      .select(col("doc_id"), col("text"))
-    val out = runBounded(bloomDocDedupStream(survivors).toDF(),
-                         OutputMode.Update(), statePartitions = 1)
-      .select(col("fp"))
-    requireMultiBatch(nFiles)
-    out
-  }
+                               nFiles: Int = 2): DataFrame =
+    multiBatch(spark, dir, "documents", Seq("doc_id", "text", "source"),
+               nFiles)(s => bloomDocDedupStream(ingestSurvivors(s)).select(col("fp")))
 
   /** Oracle for [[ingestPipelineMultiBatch]]: the distinct content
     * fingerprints of the quality-passing mixture sample —

@@ -103,6 +103,45 @@ class MultiBatchBloomSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  // The within-batch ordering contract of the keep-first kernel: a
+  // micro-batch folds in id order whatever order its rows arrived in,
+  // which is what makes the single-batch gates (q206/q207) equal the
+  // batch keep-min rule.
+  test("within one batch the Bloom kernel folds events in event_id order") {
+    val input = MemoryStream[RawEvent]
+    val q = Streams.bloomDedupStream(input.toDF(), shards = 1,
+        log2BitsPerShard = 12)
+      .writeStream.format("memory").queryName("bloom_inbatch_order")
+      .outputMode("update").start()
+    try {
+      // one batch, descending ids, event 3 delivered twice
+      input.addData(ev(5, 5.0), ev(3, 3.0), ev(3, 3.0))
+      q.processAllAvailable()
+      val out = spark.table("bloom_inbatch_order")
+        .select("event_id").as[Long].collect().toSeq
+      assert(out == Seq(3L, 5L),
+        s"the smaller id must fold (and survive) first, once: $out")
+    } finally q.stop()
+  }
+
+  test("within one batch the content Bloom keeps the smaller doc_id") {
+    val input = MemoryStream[RawDoc]
+    val q = Streams.bloomDocDedupStream(input.toDF(), shards = 4,
+        log2BitsPerShard = 12)
+      .writeStream.format("memory").queryName("bloomdoc_inbatch_order")
+      .outputMode("update").start()
+    try {
+      val a = "alpha beta gamma"
+      // one batch, the same content under two ids, descending
+      input.addData(RawDoc(20, a, "en", "s", a.length.toLong),
+                    RawDoc(10, a, "en", "s", a.length.toLong))
+      q.processAllAvailable()
+      val out = spark.table("bloomdoc_inbatch_order")
+        .select("doc_id").as[Long].collect().toSeq
+      assert(out == Seq(10L), s"the smaller doc_id must survive: $out")
+    } finally q.stop()
+  }
+
   test("ingest pipeline multi-batch: set equals the batch composition") {
     import org.apache.spark.sql.functions._
     val stream = Streams.ingestPipelineMultiBatch(spark, sfDir)

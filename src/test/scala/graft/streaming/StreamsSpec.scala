@@ -203,26 +203,24 @@ class StreamsSpec extends SparkSpec {
   }
 
   test("RocksDB and HDFSBacked state stores produce identical results") {
-    // Bounded certification runs default to the in-heap provider (the
-    // r16 streamcost A/B: per-(batch × partition) RocksDB lifecycle is
-    // pure fixed cost against kilobyte state), with RocksDB — the
-    // production backend for 100 TB keyed state — pinned on q208 and
-    // available everywhere via -Dgraft.stream.stateStore. A stateful
-    // gate (keyed dedup state feeding windowed agg state) must be
+    // Bounded certification runs default to the in-heap provider
+    // (per-(batch × partition) RocksDB lifecycle is pure fixed cost
+    // against kilobyte state), with RocksDB — the production backend
+    // for 100 TB keyed state — pinned on q208. A stateful chain (the
+    // q96 keyed dedup state feeding windowed agg state) must be
     // backend-invariant, and the session conf must be restored after.
     val confKey = "spark.sql.streaming.stateStore.providerClass"
     val before = spark.conf.getOption(confKey)
-    sys.props("graft.stream.stateStore") = "rocksdb"
-    val viaRocks =
-      try Streams.dedupHourlyAvailableNow(spark, sfDir).collect()
-      finally sys.props.remove("graft.stream.stateStore")
-    sys.props("graft.stream.stateStore") = "hdfs"
-    try {
-      val viaHdfs = Streams.dedupHourlyAvailableNow(spark, sfDir).collect()
-      assert(viaRocks.nonEmpty)
-      assert(viaRocks.toSet == viaHdfs.toSet,
-        "state-store backend must not change streaming results")
-    } finally sys.props.remove("graft.stream.stateStore")
+    def q96(rocksDb: Boolean) = Streams.runBounded(
+        Streams.hourlyRollup(Streams.dedupStream(
+          Streams.redelivered(spark, sfDir))),
+        OutputMode.Append(), noDataBatch = true, rocksDb = rocksDb)
+      .collect()
+    val viaRocks = q96(rocksDb = true)
+    val viaHdfs = q96(rocksDb = false)
+    assert(viaRocks.nonEmpty)
+    assert(viaRocks.toSet == viaHdfs.toSet,
+      "state-store backend must not change streaming results")
     assert(spark.conf.getOption(confKey) == before,
       "provider conf must be restored after the bounded run")
   }
@@ -294,8 +292,8 @@ class StreamsSpec extends SparkSpec {
 
   test("left-outer funnel: unmatched click emits null-padded at watermark") {
     val input = MemoryStream[RawEvent]
-    val out = Streams.funnelLeftOuter(toEventsDF(input),
-                                      watermark = "30 minutes")
+    val out = Streams.funnelJoin(toEventsDF(input), "left_outer",
+                                 watermark = "30 minutes")
     val q = out.writeStream.format("memory").queryName("funnel_outer_test")
       .outputMode("append").start()
     try {

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 /** Diagnostic main: time the three answers to a hot-key join — AQE
   * skew-split, manual salting, and nothing (static plan) — on the same
   * synthetic skew shape, alternated WITHIN one JVM so host-contention
-  * windows can't masquerade as a winner (the StreamProbe discipline).
+  * windows can't masquerade as a winner.
   *
   * args: [hotRows] [uniformRows] [reps]
   * Shape: one key holds `hotRows` rows; `uniformRows` spread over 10k

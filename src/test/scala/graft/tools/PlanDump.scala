@@ -12,8 +12,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Expression ids (`#123`) and plan ids (`plan_id=45`) are session-wide
   * counters, so the same plan built after different earlier work prints
-  * different numbers. Both are renumbered in order of first appearance
-  * within each dump, and the source line of an RDD's call site
+  * different numbers; under AQE, whole-stage codegen ids and query-stage
+  * ids follow the order stages are planned and finish, so two runs of
+  * one plan can differ. All four are renumbered within each dump (see
+  * [[renumbered]]), and the source line of an RDD's call site
   * (`Dedup.scala:1204`) is dropped: dumps of two commits with the same
   * suffix then `diff -r` to nothing when their plans match.
   *
@@ -55,15 +57,50 @@ object PlanDump {
     spark.stop()
   }
 
-  /** `plan` with every `#n` and `plan_id=n` replaced by its rank of first
-    * appearance (each kind counted on its own), and `.scala:n` call-site
-    * lines dropped. */
-  private[tools] def renumbered(plan: String): String =
-    Seq("#" -> "#(\\d+)", "plan_id=" -> "plan_id=(\\d+)")
-      .foldLeft(plan.replaceAll("\\.scala:\\d+", ".scala")) {
-        case (text, (prefix, pattern)) =>
+  /** Counters a plan prints that depend on what ran before it or on the
+    * order its stages finished, each as (kept text, id): expression ids
+    * `#n`, `plan_id=n`, and AQE query-stage ids (the `Arguments: n` line
+    * of a `...QueryStage` node; a node's lines end at the blank line
+    * before the next node). */
+  private val counters = Seq(
+    "(#)(\\d+)",
+    "(plan_id=)(\\d+)",
+    "(QueryStage\\n(?:[^\\n]+\\n)*?Arguments: )(\\d+)").map(_.r)
+
+  private val codegenId = "(\\[codegen id : |\\*\\()(\\d+)".r
+  private val nodeHeader = "^\\(\\d+\\) ".r
+
+  /** `plan` with every counter replaced by its rank of first appearance
+    * (each kind counted on its own), whole-stage codegen ids renumbered
+    * by run, and `.scala:n` call-site lines dropped.
+    *
+    * Codegen ids (`[codegen id : n]`, and the `*(n)` markers of the
+    * other explain modes) are counted per AQE stage compilation, so
+    * stages planned in a different order share different ids, and a
+    * rank of first appearance still differs. Each run of consecutive
+    * nodes carrying one id takes the next number instead; a node
+    * without an id ends the run. */
+  private[tools] def renumbered(plan: String): String = {
+    val ranked =
+      counters.foldLeft(plan.replaceAll("\\.scala:\\d+", ".scala")) {
+        (text, counter) =>
           val ids = scala.collection.mutable.LinkedHashMap[String, Int]()
-          pattern.r.replaceAllIn(text, m =>
-            prefix + ids.getOrElseUpdate(m.group(1), ids.size))
+          counter.replaceAllIn(text, m =>
+            scala.util.matching.Regex.quoteReplacement(
+              m.group(1) + ids.getOrElseUpdate(m.group(2), ids.size)))
       }
+    var run = -1
+    var last: Option[String] = None
+    ranked.split("\n", -1).map { line =>
+      codegenId.findFirstMatchIn(line) match {
+        case Some(m) =>
+          if (!last.contains(m.group(2))) run += 1
+          last = Some(m.group(2))
+          m.before.toString + m.group(1) + run + m.after
+        case None =>
+          if (nodeHeader.findFirstIn(line).isDefined) last = None
+          line
+      }
+    }.mkString("\n")
+  }
 }

@@ -520,50 +520,6 @@ object ScaleSmoke {
       // leg OOMed the driver before this drop existed)
       graft.streaming.Streams.dropBoundedSinks(spark)
     }
-    // streamcost mode: cold A/B of the six fixed-cost streaming gates
-    // (the ~15 s/window family the round-15 verdict flagged as
-    // harness-not-plans) across the bounded-run machinery variants
-    // runBounded exposes as system properties — state partition count
-    // and state-store backend. min-of-2 cold runs per cell, same JVM,
-    // so the deltas are machinery, not weather.
-    // Test/runMain graft.tools.ScaleSmoke streamcost
-    if (args.headOption.contains("streamcost")) {
-      val gates = Seq("q96_stream_dedup_hourly",
-        "q106_stream_session_window", "q116_stream_funnel_outer",
-        "q208_stream_dedup_multibatch",
-        "q215_stream_para_dedup_multibatch",
-        "q225_stream_ingest_multibatch")
-      val variants = Seq(
-        ("base", Map.empty[String, String]),
-        ("sp1", Map("graft.stream.statePartitions" -> "1")),
-        ("hdfs", Map("graft.stream.stateStore" -> "hdfs")),
-        ("sp1+hdfs", Map("graft.stream.statePartitions" -> "1",
-                         "graft.stream.stateStore" -> "hdfs")))
-      println(f"[scale] streamcost (sf0.1, min of 2 cold runs)")
-      println(f"[scale] ${"gate"}%-36s" +
-        variants.map(v => f"${v._1}%10s").mkString)
-      val totals = Array.fill(variants.size)(0.0)
-      for (g <- gates) {
-        val times = variants.map { case (_, props) =>
-          try {
-            props.foreach { case (k, v) => sys.props(k) = v }
-            (1 to 2).map { _ =>
-              coldStart()
-              val t0 = System.nanoTime()
-              graft.SparkEntry.queries(g)(spark, Base).count()
-              (System.nanoTime() - t0) / 1e9
-            }.min
-          } finally props.keys.foreach(sys.props.remove)
-        }
-        times.zipWithIndex.foreach { case (t, i) => totals(i) += t }
-        println(f"[scale] $g%-36s" +
-          times.map(t => f"$t%10.2f").mkString)
-      }
-      println(f"[scale] ${"TOTAL"}%-36s" +
-        totals.map(t => f"$t%10.2f").mkString)
-      spark.stop()
-      return
-    }
     // rewrite mode: FULL-materialization timing for the rewrite gates
     // (one output row per input row). The default count() action lets
     // Catalyst prune the rebuilt text columns and even eliminate the
@@ -606,11 +562,11 @@ object ScaleSmoke {
       spark.stop()
       return
     }
-    // stream mode: the bounded streaming family at 1× and 10×, with
-    // RocksDB state-store footprint per gate —
+    // stream mode: the bounded streaming family at 1× and 10×, with the
+    // state each gate's bounded run ended with (total rows and memory of
+    // its state operators, from the run's last query progress) —
     // Test/runMain graft.tools.ScaleSmoke stream
     if (args.headOption.contains("stream")) {
-      System.setProperty("graft.stream.measureState", "1")
       val allGates = Seq(
         "q35_stream_hourly", "q36_stream_sessionize", "q42_stream_enrich",
         "q46_stream_funnel", "q68_stream_dedup", "q96_stream_dedup_hourly",
@@ -626,34 +582,36 @@ object ScaleSmoke {
       val gates =
         if (args.length <= 1) allGates
         else allGates.filter(g => args.drop(1).exists(g.startsWith))
-      println(f"[scale] ${"query"}%-26s ${"t1x"}%8s ${"t10x"}%8s ${"ratio"}%6s ${"state1x"}%9s ${"state10x"}%9s ${"sratio"}%6s")
+      // (state rows, state memory bytes) of the last bounded run
+      def state(): (Long, Long) =
+        graft.streaming.Streams.lastRunProgress.fold((0L, 0L)) { p =>
+          (p.stateOperators.map(_.numRowsTotal).sum,
+           p.stateOperators.map(_.memoryUsedBytes).sum)
+        }
+      println(f"[scale] ${"query"}%-26s ${"t1x"}%8s ${"t10x"}%8s ${"ratio"}%6s ${"rows1x"}%9s ${"rows10x"}%9s ${"mem1x"}%9s ${"mem10x"}%9s ${"mratio"}%6s")
       for (name <- gates) {
         time(name, Base) // warm the streaming machinery + JIT
         coldStart()
-        graft.streaming.Streams.resetStateBytesProbe()
         val (t1, _) = time(name, Base)
-        val s1 = graft.streaming.Streams.stateBytesProbe
+        val (r1, m1) = state()
         coldStart()
-        graft.streaming.Streams.resetStateBytesProbe()
         val (t10, _) = time(name, Out)
-        val s10 = graft.streaming.Streams.stateBytesProbe
+        val (r10, m10) = state()
         val r = t10 / math.max(t1, 1e-9)
-        val sr = s10.toDouble / math.max(s1, 1L)
-        println(f"[scale] $name%-26s $t1%7.2fs $t10%7.2fs $r%6.1f ${s1 / 1024}%8dK ${s10 / 1024}%8dK $sr%6.1f")
+        val mr = m10.toDouble / math.max(m1, 1L)
+        println(f"[scale] $name%-26s $t1%7.2fs $t10%7.2fs $r%6.1f $r1%9d $r10%9d ${m1 / 1024}%8dK ${m10 / 1024}%8dK $mr%6.1f")
       }
       if (args.contains("x100")) {
         val ev100 = "target/scale100ev"
         replicateEvents(spark, ev100, 100)
-        println(f"[scale] ${"query"}%-26s ${"t100x"}%8s ${"state100x"}%10s")
+        println(f"[scale] ${"query"}%-26s ${"t100x"}%8s ${"rows100x"}%10s ${"mem100x"}%10s")
         for (name <- gates) {
           coldStart()
-          graft.streaming.Streams.resetStateBytesProbe()
           val (t, _) = time(name, ev100)
-          val s = graft.streaming.Streams.stateBytesProbe
-          println(f"[scale] $name%-26s $t%7.2fs ${s / 1024}%9dK")
+          val (rs, ms) = state()
+          println(f"[scale] $name%-26s $t%7.2fs $rs%10d ${ms / 1024}%9dK")
         }
       }
-      System.clearProperty("graft.stream.measureState")
       spark.stop()
       return
     }
@@ -683,7 +641,7 @@ object ScaleSmoke {
         val survivors = graft.streaming.Streams.runBounded(
           graft.streaming.Streams.bloomDedupStream(
             graft.streaming.Streams.readEventsStream(spark, ev100),
-            shards = 32, log2BitsPerShard = log2).toDF(),
+            shards = 32, log2BitsPerShard = log2),
           org.apache.spark.sql.streaming.OutputMode.Update()).count()
         val t = (System.nanoTime() - t0) / 1e9
         val drops = distinct - survivors
